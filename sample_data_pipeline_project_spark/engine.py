@@ -14,8 +14,10 @@ local[N]:
     dynamic broadcast conversion),
   - UTC session timezone (stable timestamp semantics vs. any oracle),
   - Arrow for any toPandas/pandas-UDF edge,
-  - shuffle partitions sized to the local core count rather than the
-    200 default (at cluster scale this is overridden per-deploy).
+  - one width rule (`width_conf`): shuffle partitions sized to the
+    session's core count rather than the 200 default, and AQE's wide
+    start at 8 x cores (256 at 32); at cluster scale either is
+    overridden per-deploy through `extra_conf`.
 """
 
 from __future__ import annotations
@@ -28,21 +30,12 @@ _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Start every AQE shuffle WIDE and let coalescing shrink it: with a
-    # flat 32, one decade of data growth put 22M-row sort/agg tasks on a
-    # shared 8g heap and OOM'd (er_blocking_quality at sf10, round 7 —
-    # 96M truth pairs through 32 fat tasks). At 256 initial partitions
-    # the same workload completes in 196s: per-task memory is bounded by
-    # partition width, and AQE's coalescer still collapses small stages
-    # to ~32 tasks, so short queries pay nothing. This is the canonical
-    # "size shuffle partitions to fit executor memory" knob, decided at
-    # runtime per-stage instead of statically per-session.
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # canChangeCachedPlanOutputPartitioning stays at its DEFAULT (false)
     # — round 12 reverted the round-11 "true". The round-11 rationale
-    # (cache-population shuffles run 256 near-empty tasks) mistook
-    # task-launch noise (milliseconds) for the cost; what the flag
+    # (cache-population shuffles run 8 x cores near-empty tasks, 256 at
+    # local[32]) mistook task-launch noise (milliseconds) for the cost
+    # at that width; what the flag
     # actually did was let AQE coalesce the cached signature/pair/token
     # tables down to 1-3 partitions (they are KB-to-MB-sized inputs),
     # and every downstream stage that fans OUT of those caches — band
@@ -59,7 +52,6 @@ _DEFAULTS = {
     "spark.sql.parquet.filterPushdown": "true",
     # local[N] runs single-JVM; cap UI/noise.
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": str(os.cpu_count() or 8),
     # In local mode the driver JVM IS the executor. Spark's 1g default
     # heap GC-thrashes a multi-query session (cached signature tables,
     # broadcasts, Arrow batches) — but BIGGER IS NOT BETTER: measured on
@@ -70,6 +62,40 @@ _DEFAULTS = {
     # the first session of the process.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
+
+# One width rule, applied by `get_spark` when it STARTS a session (a
+# live session's widths are left alone — they may be a caller's pins).
+# With P the session's default parallelism (its core count in local
+# mode):
+#   - spark.sql.shuffle.partitions = P, the width of shuffles AQE does
+#     not re-plan (streaming state, non-adaptive paths);
+#   - AQE starts every shuffle 8 x P wide (256 at local[32]) and lets
+#     coalescing shrink it. With a flat 32, one decade of data growth put
+#     22M-row sort/agg tasks on a shared 8g heap and OOM'd
+#     (er_blocking_quality at sf10, round 7 — 96M truth pairs through 32
+#     fat tasks). At 256 initial partitions on local[32] the same
+#     workload completes in 196s: per-task memory is bounded by partition
+#     width, and AQE's coalescer still collapses small stages to ~P
+#     tasks. The wide start is NOT free where AQE cannot coalesce —
+#     caches and checkpoints keep their population width, so every join
+#     against them runs one task per partition — which is why it scales
+#     with the cores instead of being a constant tuned for local[32]:
+#     at local[4] a 256 start ran every cached-table join as 256
+#     near-empty tasks.
+# Either value pinned in `extra_conf` wins over the rule.
+_WIDE_START_FACTOR = 8
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
+def width_conf(parallelism: int) -> dict[str, str]:
+    """The engine's width confs for a session of `parallelism` cores."""
+    p = max(1, int(parallelism))
+    return {
+        _SHUFFLE_PARTITIONS: str(p),
+        _INITIAL_PARTITIONS: str(_WIDE_START_FACTOR * p),
+    }
+
 
 # Streaming state-store backend. The default (HDFS-backed) provider keeps
 # every key's state as JVM objects on-heap — at 1M+ distinct keys
@@ -101,7 +127,15 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Get-or-create the engine session (reference A28: connection reuse)."""
+    """Get-or-create the engine session (reference A28: connection reuse).
+
+    A new session gets `width_conf(defaultParallelism)` for every width
+    conf not pinned in `extra_conf`; on a live session the width confs
+    are left as they are (explicit `extra_conf` pins still apply, like
+    every other key)."""
+    # the same test getOrCreate makes to decide whether to build a session
+    live = SparkSession._instantiatedSession
+    starting = live is None or live._sc._jsc is None
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{_cpus()}]")
     conf = dict(_DEFAULTS)
@@ -114,6 +148,10 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if starting:
+        for k, v in width_conf(spark.sparkContext.defaultParallelism).items():
+            if k not in (extra_conf or {}):
+                spark.conf.set(k, v)
     if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
         # getOrCreate ignores builder conf on a live session; the provider
         # is a runtime SQL conf read at stream START, so re-apply it here

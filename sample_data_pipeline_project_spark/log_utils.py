@@ -15,8 +15,8 @@ via pendulum with an America/Los_Angeles default, `utils/log_utils.py:
 
 from __future__ import annotations
 
-import inspect
 import logging
+import sys
 import time
 from datetime import datetime, timezone
 from typing import Any
@@ -38,8 +38,18 @@ class LogBlock:
 
     # -- plumbing ---------------------------------------------------------
     def _caller_chain(self) -> str:
-        frames = inspect.stack()[3 : 3 + self.max_depth]
-        names = [f.function for f in frames if f.function != "<module>"]
+        # Frame 3 is the public method (info/log_start/...) under
+        # _log -> _fmt -> here; walk max_depth frames up from it. A bare
+        # f_back walk: inspect.stack() would read source context for
+        # every frame of the whole stack on each record.
+        frame = sys._getframe(3)
+        names = []
+        for _ in range(self.max_depth):
+            if frame is None:
+                break
+            if frame.f_code.co_name != "<module>":
+                names.append(frame.f_code.co_name)
+            frame = frame.f_back
         return " <- ".join(names) if names else "<top>"
 
     def _fmt(self, message: str, fields: dict[str, Any]) -> str:
@@ -52,7 +62,8 @@ class LogBlock:
         return f"[{ts}] [{self._caller_chain()}] {message} {kv}".rstrip()
 
     def _log(self, level: int, message: str, **fields: Any) -> None:
-        self.logger.log(level, self._fmt(message, fields))
+        if self.logger.isEnabledFor(level):
+            self.logger.log(level, self._fmt(message, fields))
 
     # -- levels (reference log_utils.py:42-52) ----------------------------
     def info(self, message: str, **fields: Any) -> None:

@@ -6,13 +6,14 @@ cluster (optimization guide §2.2/§2.5, round 11):
 
 - A frame materialized by `localCheckpoint` keeps the partitioning of
   its job's final stage. With AQE's wide-start shuffle configuration
-  (initialPartitionNum=256, engine.py) that final stage is often NOT
-  read-coalesced, so an edge list of a few MB materializes as 256
-  blocks — and every round of an iterative operator (connected
-  components, PageRank, k-core, BFS, LPA) then re-scans it with 256
-  near-empty tasks, twice per round after symmetrization. Measured on
-  `dedup_connected_components` at sf0.1: the top stages were 256/512
-  tasks with max task 0.02-0.09 s — pure scheduling overhead.
+  (initialPartitionNum = 8 x cores, 256 at 32, engine.py) that final
+  stage is often NOT read-coalesced, so an edge list of a few MB
+  materializes as 8 x cores blocks — and every round of an iterative
+  operator (connected components, PageRank, k-core, BFS, LPA) then
+  re-scans it with that many near-empty tasks, twice per round after
+  symmetrization. Measured on `dedup_connected_components` at sf0.1 on
+  32 cores: the top stages were 256/512 tasks with max task
+  0.02-0.09 s — pure scheduling overhead.
 
 - A corpus read from ONE unsplittable parquet file (single row group)
   scans as ONE partition, and every broadcast-join map side downstream
@@ -22,20 +23,22 @@ cluster (optimization guide §2.2/§2.5, round 11):
 
 Round 12 reshaped both helpers per the round-11 ADVICE:
 
-- `checkpoint_capped(df)` replaces the round-11
-  `cap_parts(df).localCheckpoint(eager=True)` pattern. The old
+- `checkpoint_capped(df)` replaces the round-11 coalesce-then-
+  `localCheckpoint(eager=True)` pattern. The old
   pre-checkpoint `coalesce` collapsed into the materializing stage
   itself, capping the reduce side of every iterative join/aggregate at
   core count with NO size guard — exactly the fat-task shape
-  engine.py's initialPartitionNum=256 comment records OOMing at sf10
-  (32 wide tasks on a shared 8g heap). The coalesce now happens AFTER
+  engine.py's wide-start comment (initialPartitionNum = 8 x cores,
+  256 at 32) records OOMing at sf10 (32 wide tasks on a shared 8g
+  heap). The coalesce now happens AFTER
   materialization — a narrow, read-time merge of the persisted blocks —
   so the producing stage keeps its AQE-sized width (per-task memory
   stays bounded by partition width) while the iterative re-reads still
   see ~core-count tasks. The merge is additionally SIZE-GUARDED by the
   measured persisted bytes: a decade-scale edge frame merges to
   ~_TARGET_BLOCK_BYTES per read task instead of unconditionally to
-  core count.
+  core count. The persisted bytes are read for the checkpoint's own
+  RDD, whose id the checkpointed frame's plan carries.
 
 - `widen(df)` now only probes `.rdd` for partition count when the
   physical plan is exchange-free. `.rdd` finalizes the plan, and with
@@ -68,41 +71,25 @@ def checkpoint_capped(df: DataFrame, storage_level=None) -> DataFrame:
     persisted size so no read task merges more than ~_TARGET_BLOCK_BYTES.
     Apply wherever an iterative operator materializes a frame that its
     rounds re-read many times."""
-    sc = df.sparkSession.sparkContext
-    try:
-        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    except Exception:
-        before = None
     if storage_level is None:
         ckpt = df.localCheckpoint(eager=True)
     else:
         ckpt = df.localCheckpoint(eager=True, storageLevel=storage_level)
     target = _default_parallelism(df)
-    if before is not None:
-        try:
-            new = [
-                i
-                for i in sc._jsc.sc().getRDDStorageInfo()
-                if i.id() not in before
-            ]
-            if new:
-                # the checkpoint we just materialized is the newest entry
-                info = max(new, key=lambda i: i.id())
+    try:
+        # the checkpointed frame's plan is a LogicalRDD over the very RDD
+        # whose blocks the checkpoint persisted
+        rdd_id = ckpt._jdf.logicalPlan().rdd().id()
+        jsc = df.sparkSession.sparkContext._jsc.sc()
+        for info in jsc.getRDDStorageInfo():
+            if info.id() == rdd_id:
                 n_bytes = int(info.memSize()) + int(info.diskSize())
                 by_size = -(-n_bytes // _TARGET_BLOCK_BYTES)  # ceil
-                target = max(target, int(by_size))
-        except Exception:
-            pass  # best-effort introspection; core-count target still holds
+                target = max(target, by_size)
+                break
+    except Exception:
+        pass  # best-effort introspection; core-count target still holds
     return ckpt.coalesce(target)
-
-
-def cap_parts(df: DataFrame) -> DataFrame:
-    """Merge partitions down to the session's default parallelism
-    (narrow coalesce — no shuffle, no job). Round 12: NOT for use in
-    front of a localCheckpoint — the coalesce collapses into the
-    materializing stage and uncaps per-task memory; use
-    `checkpoint_capped` there instead."""
-    return df.coalesce(_default_parallelism(df))
 
 
 def widen(df: DataFrame) -> DataFrame:
@@ -118,9 +105,9 @@ def widen(df: DataFrame) -> DataFrame:
         # Stringifying an un-executed AdaptiveSparkPlan prints the
         # initial plan WITHOUT materializing any stage.
         plan = df._jdf.queryExecution().executedPlan().toString()
+        if "Exchange" in plan:
+            return df
+        cur = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if "Exchange" in plan:
-        return df
-    cur = df.rdd.getNumPartitions()
     return df.repartition(target) if cur < target else df

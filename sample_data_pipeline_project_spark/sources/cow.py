@@ -21,6 +21,10 @@ Scale notes:
     checkpoint materializes the new partition contents first (the same
     read-before-replace bar a real table format's commit protocol sets).
   - Unpartitioned tables fall back to a full rewrite (documented cost).
+  - Every rewrite ends with `_refresh_after_rewrite`: a cached frame or
+    a catalog table whose LOCATION is the rewritten path would otherwise
+    keep listing the replaced files and fail its next read with
+    FAILED_READ_FILE.FILE_NOT_EXIST.
 """
 
 from __future__ import annotations
@@ -51,10 +55,34 @@ def _mutate_partitions(
     if partition_col is None:
         new_full = transform(df, predicate).localCheckpoint(eager=True)
         new_full.write.mode("overwrite").parquet(path)
-        return affected
-    days = [r[0] for r in matching.select(partition_col).distinct().collect()]
-    scope = df.filter(F.col(partition_col).isin(days))
-    rewritten = transform(scope, predicate).localCheckpoint(eager=True)
+    else:
+        days = [
+            r[0] for r in matching.select(partition_col).distinct().collect()
+        ]
+        scope = df.filter(F.col(partition_col).isin(days))
+        rewritten = transform(scope, predicate).localCheckpoint(eager=True)
+        _overwrite_partitions(spark, rewritten, path, partition_col)
+    _refresh_after_rewrite(spark, path)
+    return affected
+
+
+def _refresh_after_rewrite(spark: SparkSession, path: str) -> None:
+    """Drop every file listing of `path` taken before the rewrite.
+    `refreshByPath` covers cached frames over the path. A catalog table
+    at the path keeps its listing in the session's table-relation cache,
+    which is keyed by table name, not path, so that cache is dropped
+    whole: it holds metadata only, re-resolved on each table's next use,
+    where finding the tables at `path` would cost a metastore lookup per
+    table on every write."""
+    spark.catalog.refreshByPath(path)
+    spark._jsparkSession.sessionState().catalog().invalidateAllCachedTables()
+
+
+def _overwrite_partitions(
+    spark: SparkSession, rewritten: DataFrame, path: str, partition_col: str
+) -> None:
+    """Replace only the partitions present in `rewritten` (dynamic
+    partition overwrite), one file per partition."""
     prev = spark.conf.get(_DYN, "static")
     spark.conf.set(_DYN, "dynamic")
     try:
@@ -66,7 +94,6 @@ def _mutate_partitions(
         )
     finally:
         spark.conf.set(_DYN, prev)
-    return affected
 
 
 def cow_update(
@@ -173,17 +200,8 @@ def cow_merge(
                 .unionByName(source.select(*cols))
                 .localCheckpoint(eager=True)
             )
-            prev = spark.conf.get(_DYN, "static")
-            spark.conf.set(_DYN, "dynamic")
-            try:
-                (
-                    rewritten.repartition(1, partition_col)
-                    .write.mode("overwrite")
-                    .partitionBy(partition_col)
-                    .parquet(path)
-                )
-            finally:
-                spark.conf.set(_DYN, prev)
+            _overwrite_partitions(spark, rewritten, path, partition_col)
+        _refresh_after_rewrite(spark, path)
         return {
             "query_id": new_query_id(),
             "n_updated": n_updated,

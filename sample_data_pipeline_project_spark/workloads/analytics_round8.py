@@ -12,9 +12,9 @@ work) no matter how large the corpus grows. The exact configuration
 stays registered for sf<=1 audits.
 
 C225 structurally certifies the engine's AQE initial-partition guard
-(engine.py: coalescePartitions.initialPartitionNum=256) — the round-7
-OOM fix — so a future conf regression fails a gate instead of
-resurfacing as a decade-scale OOM.
+(engine.py: coalescePartitions.initialPartitionNum = 8 x cores, 256 at
+32) — the round-7 OOM fix — so a future conf regression fails a gate
+instead of resurfacing as a decade-scale OOM.
 """
 
 from __future__ import annotations
@@ -218,8 +218,8 @@ def agg_aqe_wide_start_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe OOM'd `er_blocking_quality` because a decade of data growth
     pushed 22M-row tasks through a statically-narrow shuffle; the fix
     is the engine default
-    `spark.sql.adaptive.coalescePartitions.initialPartitionNum` —
-    shuffles START wide (per-task memory bounded by partition width)
+    `spark.sql.adaptive.coalescePartitions.initialPartitionNum` =
+    8 x cores (256 at 32) — shuffles START wide (per-task memory bounded by partition width)
     and AQE coalesces small stages back down, so short queries pay
     nothing. That default was only verified empirically in round 7;
     this workload pins it STRUCTURALLY, the C187/C202/C221/C223

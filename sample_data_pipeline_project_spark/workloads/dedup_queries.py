@@ -668,10 +668,14 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
         F.size("toks").alias("n_b"),
     )
     n_inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    # the oracle's `inter` CTE is a token join, so a pair sharing no
+    # token has no row there and drops out of its inner join; keep only
+    # pairs with a shared token to match that by construction
     return (
         m.join(pa, "a")
         .join(pb, "b")
         .withColumn("n_inter", n_inter)
+        .filter(F.col("n_inter") > 0)
         .select(
             "a",
             "b",

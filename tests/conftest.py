@@ -19,10 +19,10 @@ def spark():
         master="local[4]",
         extra_conf={
             "spark.sql.shuffle.partitions": "4",
-            # tests run toy data on local[4]: the engine's wide
-            # 256-initial-partition AQE default (a memory guard for
-            # decade-scale shuffles) would only add task-launch
-            # overhead here
+            # tests run toy data on local[4]: the engine's wide AQE
+            # start of 8 x cores initial partitions (256 at 32; a memory
+            # guard for decade-scale shuffles) would only add
+            # task-launch overhead here
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "4",
         },
     )

@@ -157,3 +157,45 @@ def test_merge_duplicate_target_rows_counts_keys(spark, ledger, tmp_path):
     assert out["n_inserted"] == 0
     got = spark.read.parquet(path).filter(F.col("run_id") == 1).collect()
     assert len(got) == 1 and got[0]["pipeline_status"] == "merged"
+
+
+def test_update_refreshes_location_catalog_table(spark, ledger_path):
+    # a catalog table over the rewritten path caches its file listing on
+    # first read; without a refresh after the rewrite, the next query
+    # reads the replaced day file and fails with FILE_NOT_EXIST
+    from sample_data_pipeline_project_spark.client import SparkQueryClient
+    from sample_data_pipeline_project_spark.ledger.tasks import (
+        create_table_if_not_exists,
+    )
+
+    schema = spark.read.parquet(ledger_path).schema
+    cols = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+    )
+    create_table_if_not_exists(
+        spark,
+        f"CREATE TABLE cow_ledger_tbl ({cols}) USING parquet "
+        f"PARTITIONED BY ({_PART}) LOCATION '{ledger_path}'",
+    )
+    try:
+        spark.sql("MSCK REPAIR TABLE cow_ledger_tbl")
+        client = SparkQueryClient(spark)
+        q = "SELECT COUNT(*) FROM cow_ledger_tbl WHERE pipeline_status = 'failed'"
+        failed_before = client.execute_scalar_query(q)["data"]
+        out = cow_update(
+            spark,
+            ledger_path,
+            (F.col("pipeline_name") == "etl") & (F.col(_PART) == "2024-03-02"),
+            {"pipeline_status": F.lit("failed")},
+            partition_col=_PART,
+        )
+        assert out["rows_affected"] == 3
+        expected = (
+            spark.read.parquet(ledger_path)
+            .filter(F.col("pipeline_status") == "failed")
+            .count()
+        )
+        assert expected > failed_before
+        assert client.execute_scalar_query(q)["data"] == expected
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cow_ledger_tbl")

@@ -540,15 +540,19 @@ def test_negative_sampling_grid_is_domain_bounded(spark):
 
 def test_engine_default_pins_wide_aqe_start():
     """The round-7 OOM guard is an ENGINE DEFAULT (a decade of data
-    growth OOM'd 32 fat tasks; 256 initial partitions bounds per-task
-    memory while AQE coalesces small stages back). C225 certifies the
-    runtime mechanism; this pins the configured value itself so a
-    silent edit to engine._DEFAULTS fails a gate."""
-    from sample_data_pipeline_project_spark.engine import _DEFAULTS
+    growth OOM'd 32 fat tasks; starting AQE shuffles at 8 x cores
+    partitions bounds per-task memory while AQE coalesces small stages
+    back). C225 certifies the runtime mechanism; this pins the width
+    rule itself — 256 at 32 cores, the value the guard was measured at —
+    so a silent edit to engine.width_conf fails a gate, and checks no
+    static _DEFAULTS entry shadows the rule."""
+    from sample_data_pipeline_project_spark.engine import _DEFAULTS, width_conf
 
-    assert (
-        _DEFAULTS["spark.sql.adaptive.coalescePartitions.initialPartitionNum"]
-        == "256"
-    )
+    init = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    shuffle = "spark.sql.shuffle.partitions"
+    assert width_conf(32) == {shuffle: "32", init: "256"}
+    for p in (1, 4, 8):
+        assert width_conf(p) == {shuffle: str(p), init: str(8 * p)}
+    assert init not in _DEFAULTS and shuffle not in _DEFAULTS
     assert _DEFAULTS["spark.sql.adaptive.enabled"] == "true"
     assert _DEFAULTS["spark.sql.adaptive.coalescePartitions.enabled"] == "true"
