@@ -8,6 +8,8 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is forced with a `noop` format write (full execution on the
 executors, no driver-side collect skew). A warmup query first absorbs
 one-time JVM/codegen startup so per-query numbers reflect steady state.
+The protocol lives in `sample_data_pipeline_project_spark.harness`,
+shared with the timing tools under tools/.
 
 PROTOCOL (round 7+): every query additionally gets WARM-RUN timing —
 `SPARK_GRAFT_BENCH_WARMUP` untimed warm-up executions (default 1) per
@@ -29,101 +31,31 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
 
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
     workloads = load_all()
-
-    # Warmup: absorb JVM/codegen/parquet-footer/page-cache one-time costs
-    # for EVERY table, so per-query numbers reflect steady state instead of
-    # charging each table's first read to whichever workload runs first
-    # alphabetically.
-    from sample_data_pipeline_project_spark.sources.catalog import load_table
-
-    for table in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        try:
-            # through the catalog loader: events needs the nanos/micros
-            # timestamp normalization a raw read would throw on
-            load_table(spark, sf_dir, table).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-    # Execute two representative workloads at the SMALLEST scale: compiles
-    # the dedup-family codegen and spawns the reusable Python worker pool
-    # (pandas-UDF queries otherwise charge ~2-4s of one-time spin-up to
-    # whichever workload runs first alphabetically). Caches are cleared so
-    # no DATA carries over — only JIT/process state.
-    # Derive the warmup dir from the bench sf_dir root (smallest sibling
-    # sf* if present, else sf_dir itself) — a hardcoded path would
-    # silently skip warmup on hosts without /root/testdata, charging
-    # Python-worker spin-up to the first pandas workload again.
-    import glob
-
-    siblings = sorted(
-        glob.glob(os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf*")),
-        key=lambda p: float(re.search(r"sf([0-9.]+)$", p).group(1).rstrip("."))
-        if re.search(r"sf([0-9.]+)$", p)
-        else float("inf"),
-    )
-    warm_dir = siblings[0] if siblings else sf_dir
-    for warm_name in ("dedup_ngram_jaccard", "sim_neardup_pairs"):
-        try:
-            w = workloads[warm_name]
-            w.fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:
-            print(f"bench: warmup {warm_name} skipped: {exc}", file=sys.stderr)
-    spark.catalog.clearCache()
-
-    import statistics
-
-    n_warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
-    def run_once(w) -> float:
-        t0 = time.perf_counter()
-        w.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # Workloads cache intermediates (signature tables etc.); drop them
-        # between every execution so each run is timed in isolation —
-        # retained caches would both steal unified memory from later
-        # shuffles and let a warm-up run hand cached DATA to the timed
-        # run (we want warm JIT/codegen state only).
-        spark.catalog.clearCache()
-        return elapsed
+    harness.warm_up(spark, sf_dir)
+    n_warmup, n_runs = harness.run_counts()
+    sf = harness.scale_factor(sf_dir)
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     for name, w in sorted(workloads.items()):
         try:
-            for _ in range(n_warmup):
-                run_once(w)
-            samples = [run_once(w) for _ in range(n_runs)]
-            timings[name] = round(statistics.median(samples), 3)
-            spreads[name] = [
-                round(min(samples), 3),
-                timings[name],
-                round(max(samples), 3),
-            ]
+            spreads[name] = harness.spread(spark, w, sf_dir)[0]
+            timings[name] = spreads[name][1]
             print(
                 f"bench: {name} {timings[name]}s "
                 f"[{spreads[name][0]}..{spreads[name][2]}]",
@@ -133,7 +65,6 @@ def main() -> int:
             timings[name] = -1.0
             spreads[name] = [-1.0, -1.0, -1.0]
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-            spark.catalog.clearCache()
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     failed = sorted(n for n, t in timings.items() if t < 0)

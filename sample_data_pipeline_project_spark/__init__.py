@@ -11,6 +11,8 @@ Layout:
   engine.py     SparkSession lifecycle + engine configuration (A27/A28)
   envelope.py   uniform {query_id, ...} result envelope (A29/A30)
   log_utils.py  structured lifecycle logging (A31)
+  harness.py    the bench protocol (warm-up, timed noop run, spreads,
+                per-stage tables from the status store)
   schema.py     explicit schemas (pipeline_runs ledger + testdata tables)
   sources/      table catalog + ledger Parquet IO (A1, A20, A21)
   ledger/       Tier-A task functions (A5-A15) re-expressed Spark-first

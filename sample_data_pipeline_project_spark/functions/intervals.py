@@ -38,17 +38,3 @@ def gap_after_previous(start_ts: Column, prev_end_ts: Column) -> Column:
     predecessor ended (reference: snowflake_tasks.py:402-403). First row of
     a partition (no predecessor) is not a gap."""
     return prev_end_ts.isNotNull() & (start_ts != prev_end_ts)
-
-
-def strict_pair(a_start: Column, b_start: Column) -> Column:
-    """Self-pair exclusion used by the overlap self-join (reference:
-    snowflake_tasks.py:548): `t1.start != t2.start`. With our deterministic
-    `run_id` available, callers should prefer `run_id != run_id` — the
-    reference form silently drops genuinely distinct runs that share a
-    start_ts."""
-    return a_start != b_start
-
-
-def empty_intervals_excluded(start_ts: Column, end_ts: Column) -> Column:
-    """Validity guard: windows must be non-empty (`end > start`)."""
-    return end_ts > start_ts

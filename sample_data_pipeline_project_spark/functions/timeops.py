@@ -58,12 +58,6 @@ def ensure_ts_ntz(df, col: str = "ts"):
     return df.withColumn(col, F.col(col).cast("timestamp_ntz"))
 
 
-def iso_format(col: Column) -> Column:
-    """TIMESTAMP_NTZ -> ISO-8601 string, the reference's API edge format
-    (reference: snowflake_tasks.py:213-216 `.isoformat()`)."""
-    return F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-
-
 # ---------------------------------------------------------------------------
 # Truncated-kernel EWMA (shared by the batch workload and its stream twin)
 # ---------------------------------------------------------------------------

@@ -142,7 +142,7 @@ def jaccard_pairs_prefix(
     tables are `.cache()`'d (they are referenced multiple times in-plan);
     the CALLER owns the lifecycle — call `spark.catalog.clearCache()` (or
     `.unpersist()` the result) between repeated invocations in one
-    session, as bench.py does, or cached blocks accumulate.
+    session, as `harness.run_workload` does, or cached blocks accumulate.
     """
     # Tokenize ONCE: the token table feeds both the document-frequency
     # ranking and the per-doc signature build; without the cache the

@@ -85,7 +85,7 @@ def neardup_cosine_pairs_blocked(
     Caching contract: the returned pair set is `.cache()`'d (two
     workloads re-run the identical plan in one session); the CALLER owns
     the lifecycle — `spark.catalog.clearCache()` or `.unpersist()`
-    between repeated invocations, as bench.py does.
+    between repeated invocations, as `harness.run_workload` does.
 
     Stage 1 (filter): hash-assign vectors to `num_blocks` blocks; replicate
     each block into its (B*(B+1)/2) block-pair groups; inside each group an

@@ -9,9 +9,10 @@ def test_scale_probe_names_are_registered():
     """Every workload the scale probe times must exist in the registry —
     a renamed workload would otherwise break the probe at runtime."""
     import importlib.util
+    from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
-        "scale_probe", "/root/repo/tools/scale_probe.py"
+        "scale_probe", Path(__file__).resolve().parents[1] / "tools" / "scale_probe.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -1,12 +1,15 @@
-"""Time a SUBSET of registered workloads — the A/B adjudication tool.
+"""Time and profile a SUBSET of registered workloads — the A/B
+adjudication tool.
 
-bench.py times all 350 workloads (~5-6 min at sf0.1); adjudicating a
+bench.py times all 358 workloads (~5-6 min at sf0.1); adjudicating a
 handful of movers against their committed spreads doesn't need that.
-This runs the same protocol as bench.py (table warm-up, noop sink,
-cache clear between runs, 1 warm-up + median of N timed runs) on just
-the named queries and prints one JSON object with per-query
-[min, median, max] spreads — directly comparable to the `spread` map
-in BENCH_DETAIL.json.
+This runs bench.py's protocol (`sample_data_pipeline_project_spark.harness`)
+on just the named queries and prints one JSON object in the
+BENCH_DETAIL.json shape (`queries`, `spread`, `runs`, `warmup`, `sf`), so
+two of them — or one and a committed BENCH_DETAIL.json — feed
+`tools/bench_diff.py` directly. It adds `stages`: per workload, the
+stage table of its median timed run (wall, tasks, task-seconds, max task,
+shuffle read/write and input per stage), top 12 by task-seconds.
 
 Usage:
   python tools/bench_subset.py q1 q2 ...        # sf via SPARK_GRAFT_SF_DIR
@@ -20,9 +23,7 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,8 +35,8 @@ def main() -> int:
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
-    from sample_data_pipeline_project_spark.sources.catalog import load_table
     from sample_data_pipeline_project_spark.workloads import load_all
 
     extra = {}
@@ -51,39 +52,24 @@ def main() -> int:
         print(f"unknown workloads: {missing}", file=sys.stderr)
         return 2
 
-    for table in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        try:
-            load_table(spark, sf_dir, table).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
-
-    n_warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
-    def run_once(w) -> float:
-        t0 = time.perf_counter()
-        w.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return elapsed
-
+    harness.warm_up(spark, sf_dir)
+    n_warmup, n_runs = harness.run_counts()
     spreads: dict[str, list[float]] = {}
+    stages: dict[str, list[dict]] = {}
     for name in names:
-        w = workloads[name]
-        for _ in range(n_warmup):
-            run_once(w)
-        samples = [run_once(w) for _ in range(n_runs)]
-        med = round(statistics.median(samples), 3)
-        spreads[name] = [round(min(samples), 3), med, round(max(samples), 3)]
-        print(f"bench_subset: {name} {med}s "
+        spreads[name], median_tag = harness.spread(spark, workloads[name], sf_dir)
+        stages[name] = harness.stage_table(spark, median_tag)[:12]
+        print(f"bench_subset: {name} {spreads[name][1]}s "
               f"[{spreads[name][0]}..{spreads[name][2]}]", file=sys.stderr)
 
-    print(json.dumps({"sf_dir": sf_dir, "runs": n_runs, "spread": spreads}))
+    print(json.dumps({
+        "queries": {n: s[1] for n, s in spreads.items()},
+        "spread": spreads,
+        "runs": n_runs,
+        "warmup": n_warmup,
+        "sf": harness.scale_factor(sf_dir),
+        "stages": stages,
+    }))
     return 0
 
 

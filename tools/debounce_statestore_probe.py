@@ -6,8 +6,8 @@ answer for high-key-cardinality stateful streams (1M keys at sf10).
 
 Protocol: ONE workload execution per process (cold JVM — state-store
 bootstrap is part of what changes between providers), timed around the
-noop sink like bench.py. Provider chosen via the engine's
-SPARK_GRAFT_STATESTORE knob.
+noop sink by bench.py's `harness.run_workload`. Provider chosen via the
+engine's SPARK_GRAFT_STATESTORE knob.
 
 Usage: python tools/debounce_statestore_probe.py <sf_dir>
 Env:   SPARK_GRAFT_STATESTORE=rocksdb for the RocksDB leg.
@@ -19,14 +19,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     sf_dir = sys.argv[1]
 
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
 
@@ -36,10 +36,7 @@ def main() -> int:
         "spark.sql.streaming.stateStore.providerClass",
         "default(HDFSBackedStateStoreProvider)",
     )
-    wl = load_all()["stream_debounce"]
-    t0 = time.time()
-    wl.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
+    dt = harness.run_workload(spark, load_all()["stream_debounce"], sf_dir)
     print(
         json.dumps(
             {

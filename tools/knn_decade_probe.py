@@ -10,8 +10,8 @@ constraint at 2M vectors. Protocol here: ONE execution per process
 (cold JVM), spill dirs under a cleaned scratch root — the slope is
 cold/cold so fixed session overhead appears at BOTH points.
 
-Round 10: the probe also records the STRAGGLER profile from the Spark
-event log (max single-task duration and its fraction of wall) — the r9
+Round 10: the probe also records the STRAGGLER profile (max single-task
+run time and its fraction of wall, from `harness.stage_table`) — the r9
 root cause was one 215k-row cell folded by one task for ~15 of 42
 minutes, and the balance lever's done-criterion is "no task holds >20%
 of wall".
@@ -23,83 +23,34 @@ Prints one JSON line {"sf_dir", "seconds", "n_rows", "max_task_sec",
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-
-
-def _task_profile(event_dir: str) -> tuple[float, list[dict]]:
-    """(max single-task sec, per-stage straggler table) from the event
-    log: for each stage, its task count, summed task time, and the
-    largest task — the table that says WHERE a straggler lives, not just
-    that one exists."""
-    stages: dict[tuple[int, int], dict] = {}
-    worst = 0.0
-    for path in glob.glob(os.path.join(event_dir, "**", "*"), recursive=True):
-        if os.path.isdir(path):
-            continue
-        with open(path, errors="replace") as fh:
-            for line in fh:
-                if '"SparkListenerTaskEnd"' not in line:
-                    continue
-                try:
-                    ev = json.loads(line)
-                    info = ev.get("Task Info", {})
-                    dur = (
-                        info.get("Finish Time", 0) - info.get("Launch Time", 0)
-                    ) / 1000.0
-                    key = (ev.get("Stage ID"), ev.get("Stage Attempt ID"))
-                    st = stages.setdefault(
-                        key, {"stage": key[0], "n_tasks": 0,
-                              "task_sec_sum": 0.0, "max_task_sec": 0.0}
-                    )
-                    st["n_tasks"] += 1
-                    st["task_sec_sum"] += dur
-                    st["max_task_sec"] = max(st["max_task_sec"], dur)
-                    worst = max(worst, dur)
-                except (json.JSONDecodeError, TypeError):
-                    continue
-    table = sorted(
-        stages.values(), key=lambda s: -s["max_task_sec"]
-    )[:8]
-    for s in table:
-        s["task_sec_sum"] = round(s["task_sec_sum"], 1)
-        s["max_task_sec"] = round(s["max_task_sec"], 1)
-    return worst, table
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     sf_dir = sys.argv[1]
 
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
 
-    event_dir = tempfile.mkdtemp(prefix="knn_probe_events_")
-    spark = get_spark(
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": event_dir,
-            # plain single-file JSON lines: the v2 rolling writer zstd-
-            # compresses its segments, which the stdlib can't read
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        }
-    )
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     wl = load_all()["graph_knn_mutual_edges_ivf"]
+    spark.sparkContext.addJobTag(wl.name)
     t0 = time.time()
-    df = wl.fn(spark, sf_dir)
-    rows = df.count()
+    rows = wl.fn(spark, sf_dir).count()
     dt = time.time() - t0
-    spark.stop()  # flush the event log before parsing
-    max_task, stage_table = _task_profile(event_dir)
-    shutil.rmtree(event_dir, ignore_errors=True)
+    # for each stage its task count, summed task time and largest task:
+    # the table that says WHERE a straggler lives, not just that one exists
+    stages = sorted(
+        harness.stage_table(spark, wl.name), key=lambda s: -s["max_task_sec"]
+    )
+    max_task = stages[0]["max_task_sec"] if stages else 0.0
     print(
         json.dumps(
             {
@@ -108,7 +59,7 @@ def main() -> int:
                 "n_rows": rows,
                 "max_task_sec": round(max_task, 1),
                 "max_task_frac": round(max_task / dt, 3) if dt else None,
-                "stages_by_max_task": stage_table,
+                "stages_by_max_task": stages[:8],
             }
         )
     )

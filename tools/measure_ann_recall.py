@@ -15,9 +15,10 @@ Prints one JSON object per line; aggregate goes into RECALL_CERT.json.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

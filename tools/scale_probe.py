@@ -7,17 +7,21 @@ sf0.001 -> sf0.01 -> sf0.1 (100x data end to end): a scan/agg/join plan
 in good shape grows sublinearly at these sizes (fixed per-query overhead
 dominates), and anything super-linear is a red flag worth a plan audit.
 
-Usage: python tools/scale_probe.py [runs_per_point]
+Each point is the median of bench.py's protocol
+(`sample_data_pipeline_project_spark.harness.spread`).
+
+Usage: python tools/scale_probe.py
+Env: SPARK_GRAFT_BENCH_RUNS (default 3), SPARK_GRAFT_BENCH_WARMUP (1).
 Prints one markdown table + one JSON line.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -43,38 +47,19 @@ PROBE = [
 
 
 def main() -> int:
-    runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
-
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     wl = load_all()
+    harness.warm_up(spark, SFS[0])
 
-    # table + python-worker warmup at the smallest scale
-    for name in PROBE[:2]:
-        try:
-            wl[name].fn(spark, SFS[0]).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as e:  # pragma: no cover - best-effort warmup
-            print(f"warmup {name}: {e}", file=sys.stderr)
-
-    results: dict[str, list[float]] = {}
-    for name in PROBE:
-        per_sf = []
-        for sf in SFS:
-            ts = []
-            for _ in range(runs):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                wl[name].fn(spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.time() - t0)
-            per_sf.append(sorted(ts)[len(ts) // 2])
-        results[name] = per_sf
+    results = {
+        name: [harness.spread(spark, wl[name], sf)[0][1] for sf in SFS]
+        for name in PROBE
+    }
 
     print("| workload | sf0.001 (s) | sf0.01 (s) | sf0.1 (s) | t(100x)/t(1x) |")
     print("|---|---|---|---|---|")
@@ -85,8 +70,8 @@ def main() -> int:
             {
                 "metric": "scale_probe",
                 "sfs": [0.001, 0.01, 0.1],
-                "runs": runs,
-                "medians": {k: [round(x, 3) for x in v] for k, v in results.items()},
+                "runs": harness.run_counts()[1],
+                "medians": results,
             }
         )
     )

@@ -11,11 +11,15 @@ planning, state-store bootstrap) healthy slopes land well UNDER 10x.
 A slope meaningfully ABOVE 10x means super-linear work (quadratic
 candidate growth, per-round lineage blowup) and fails the probe.
 
-Usage: python tools/scale_slopes.py [runs_per_point] [workload ...]
+Each point is the median of bench.py's protocol
+(`sample_data_pipeline_project_spark.harness.spread`).
+
+Usage: python tools/scale_slopes.py [workload ...]
 (workload names optional — default is the PROBE list below. The two
 scale points default to sf0.1 -> sf1 and can be overridden with
 SPARK_GRAFT_SLOPE_A / SPARK_GRAFT_SLOPE_B, e.g. the second-decade
 sf1 -> sf10 probe of the LSH families.)
+Env: SPARK_GRAFT_BENCH_RUNS (default 3), SPARK_GRAFT_BENCH_WARMUP (1).
 Prints one markdown table + one JSON line (consumed into SCALING.md).
 """
 
@@ -24,12 +28,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF01 = os.environ.get("SPARK_GRAFT_SLOPE_A", "/root/testdata/sf0.1")
-SF1 = os.environ.get("SPARK_GRAFT_SLOPE_B", "/root/repo/.scaledata/sf1")
+SF1 = os.environ.get("SPARK_GRAFT_SLOPE_B", os.path.join(REPO, ".scaledata", "sf1"))
 
 # The 12 heaviest families by bench cost and 100 TB risk profile.
 PROBE = [
@@ -56,50 +60,25 @@ PROBE = [
 
 
 def main() -> int:
-    runs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    probe = sys.argv[2:] or PROBE
+    probe = sys.argv[1:] or PROBE
 
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     wl = load_all()
-
-    # warm the JVM/python workers once per scale dir; fall back to the
-    # first probed workload on table-subset dirs (e.g. the sf10
-    # documents-only decade has no lineitem for tpch_q1)
     for sf in (SF01, SF1):
-        for warm_name in ("tpch_q1_pricing_summary", probe[0]):
-            try:
-                wl[warm_name].fn(spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                break
-            except Exception as exc:  # noqa: BLE001
-                print(f"warmup {warm_name} @ {sf} skipped: {exc}",
-                      file=sys.stderr)
-        spark.catalog.clearCache()
+        harness.warm_up(spark, sf)
 
     results: dict[str, list[float]] = {}
     for name in probe:
-        per_sf = []
-        for sf in (SF01, SF1):
-            ts = []
-            for _ in range(runs):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                wl[name].fn(spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.time() - t0)
-            per_sf.append(sorted(ts)[len(ts) // 2])
-        results[name] = per_sf
-        print(
-            f"probe {name}: sf0.1 {per_sf[0]:.2f}s sf1 {per_sf[1]:.2f}s "
-            f"slope {per_sf[1] / per_sf[0]:.1f}x",
-            flush=True,
-        )
+        a, b = results[name] = [
+            harness.spread(spark, wl[name], sf)[0][1] for sf in (SF01, SF1)
+        ]
+        print(f"probe {name}: sf0.1 {a:.2f}s sf1 {b:.2f}s slope {b / a:.1f}x",
+              flush=True)
 
     print("\n| workload | sf0.1 (s) | sf1 (s) | slope (10x data) |")
     print("|---|---|---|---|")
@@ -110,8 +89,8 @@ def main() -> int:
             {
                 "metric": "scale_slopes",
                 "sfs": [0.1, 1.0],
-                "runs": runs,
-                "medians": {k: [round(x, 3) for x in v] for k, v in results.items()},
+                "runs": harness.run_counts()[1],
+                "medians": results,
             }
         )
     )
