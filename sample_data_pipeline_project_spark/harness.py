@@ -2,11 +2,12 @@
 
 Steps: warm every testdata table and the Python worker pool
 (`warm_up`); force a workload through a `noop` sink, timing only the
-write, and clear cached data after every execution (`run_workload`);
+write, and release what the execution materialized (`run_workload`);
 report `[min, median, max]` over `SPARK_GRAFT_BENCH_RUNS` timed runs
-after `SPARK_GRAFT_BENCH_WARMUP` untimed ones (`spread`). Caches are
-cleared between executions, so warm-up carries JIT/codegen/page-cache
-state only, never cached data.
+after `SPARK_GRAFT_BENCH_WARMUP` untimed ones (`spread`). Each
+execution's caches and checkpoints are released when it ends, so
+warm-up carries JIT/codegen/page-cache state only, never materialized
+data, and no other query's caches are touched.
 
 Each execution's jobs carry a job tag, and `stage_table` reads that
 tag's per-stage figures from Spark's in-process status store, so a
@@ -27,6 +28,7 @@ import time
 
 from py4j.protocol import Py4JJavaError
 
+from .operators.materialize import materialize_scope
 from .sources.catalog import load_table
 from .workloads import load_all
 
@@ -90,19 +92,20 @@ def run_workload(spark, w, sf_dir: str, tag: str | None = None) -> float:
     of that alone. Its jobs carry job tag `tag` (default: the workload's name)
     for `stage_table`.
 
-    Cached data is cleared afterwards, also on failure: workloads
-    `.cache()` intermediates, and a kept cache would both steal unified
-    memory from later shuffles and hand data to the next run."""
+    The run is a `materialize_scope`: what it cached or checkpointed is
+    released after the write, outside the timed region, also on failure.
+    A kept intermediate would both steal unified memory from later
+    shuffles and hand data to the next run."""
     sc = spark.sparkContext
     tag = tag or w.name
     sc.addJobTag(tag)
     try:
-        t0 = time.perf_counter()
-        w.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        with materialize_scope():
+            t0 = time.perf_counter()
+            w.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
     finally:
         sc.removeJobTag(tag)
-        spark.catalog.clearCache()
 
 
 def spread(spark, w, sf_dir: str) -> tuple[list[float], str]:

@@ -29,9 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.partitioning import (
-    checkpoint_capped,
-)
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 
 def connected_components(
@@ -67,15 +65,9 @@ def connected_components(
     # noise-quadratic 0.4-threshold pair set hit ~10^8 edges under the
     # default deserialized in-memory level; disk blocks cost one
     # sequential read per round and cannot kill the JVM.
-    from pyspark import StorageLevel
-
-    # checkpoint_capped (rounds 11/12): materialized frames otherwise keep
-    # the wide-start 256-partition shuffle layout, and every round re-scans
-    # them with 256/512 near-empty tasks; the coalesce happens AFTER
-    # materialization with a size guard (see operators/partitioning.py).
-    edge_mat = checkpoint_capped(
+    edge_mat = materialize(
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
-        StorageLevel.DISK_ONLY,
+        "capped_disk",
     )
     sym = edge_mat.unionByName(
         edge_mat.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -84,9 +76,9 @@ def connected_components(
     # the overwhelming majority of the corpus is singletons, and keeping
     # them out of the loop shrinks every round's shuffle from |V| to
     # |edge endpoints|. Singletons rejoin as their own component at the end.
-    active = checkpoint_capped(
+    active = materialize(
         sym.select(F.col("src").alias("vid")).distinct(),
-        StorageLevel.DISK_ONLY,
+        "capped_disk",
     )
     labels = active.select("vid", F.col("vid").alias("comp"))
     changed = 0
@@ -111,7 +103,7 @@ def connected_components(
             F.col("vid").alias("jvid"), F.col("comp").alias("jcomp")
         )
         obs = Observation()
-        merged = checkpoint_capped(
+        merged = materialize(
             stepped.join(jumped, stepped["comp"] == jumped["jvid"])
             .select("vid", "old_comp", F.col("jcomp").alias("comp"))
             .observe(
@@ -119,7 +111,8 @@ def connected_components(
                 F.sum(
                     F.when(F.col("comp") < F.col("old_comp"), 1).otherwise(0)
                 ).alias("changed"),
-            )
+            ),
+            "capped",
         )
         changed = int(obs.get["changed"] or 0)
         labels = merged.select("vid", "comp")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sample_data_pipeline_project_spark.functions.text import tokens, word_ngrams
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 # Vocabulary size above which jaccard_pairs_prefix switches from a
 # driver-collected token ranking to the distributed bucket-offset rank
@@ -137,19 +138,13 @@ def jaccard_pairs_prefix(
     (1-t)*|d| tokens per doc, and because tokens are ranked by ascending
     document frequency the indexed ones are precisely the rarest, so the
     candidate join collapses. Verification touches candidates only.
-
-    Caching contract: the returned DataFrame and internal signature
-    tables are `.cache()`'d (they are referenced multiple times in-plan);
-    the CALLER owns the lifecycle — call `spark.catalog.clearCache()` (or
-    `.unpersist()` the result) between repeated invocations in one
-    session, as `harness.run_workload` does, or cached blocks accumulate.
     """
     # Tokenize ONCE: the token table feeds both the document-frequency
     # ranking and the per-doc signature build; without the cache the
     # tokenize/explode subplan executes three times (df-rank job, rank-join
     # side, per-doc side). In a deployment this is the materialized
     # inverted index; in-plan we cache it for the operator's lifetime.
-    toks = token_sets(docs, id_col, text_col, ngram_n).cache()
+    toks = materialize(token_sets(docs, id_col, text_col, ngram_n), "cache")
     # Global token order: ascending document frequency, token as tiebreak.
     # Small vocabularies (the common shingle case after distinct-per-doc)
     # are collected to the driver and rebroadcast as a literal relation, so
@@ -205,7 +200,7 @@ def jaccard_pairs_prefix(
     # rank/collect pipeline for each reference. It is N rows of small
     # arrays — the classic "materialize signatures once" step (a real
     # deployment writes this table; in-plan we cache it).
-    per_doc = ranked.groupBy(id_col).agg(*agg_cols).cache()
+    per_doc = materialize(ranked.groupBy(id_col).agg(*agg_cols), "cache")
     prefix_len = (
         F.col("n_tok") - F.ceil(F.lit(threshold) * F.col("n_tok")) + F.lit(1)
     ).cast("int")
@@ -282,7 +277,7 @@ def jaccard_pairs_prefix(
     # plan-equality cache turns the second execution into a memory read.
     # A real deployment materializes the near-dup pair table once for the
     # same reason; pairs are O(dups), orders of magnitude below the corpus.
-    return verified.distinct().cache()
+    return materialize(verified.distinct(), "cache")
 
 
 def simhash_bit_sql(md5_expr: str, j: int) -> str:
@@ -392,7 +387,9 @@ def simhash_pairs(
     if max_hamming >= bands:
         raise ValueError("exactness requires max_hamming < bands")
     # Cached for the same both-sides-of-the-band-join reason as MinHash.
-    sig = simhash_fingerprints(docs, id_col, text_col, ngram_n).cache()
+    sig = materialize(
+        simhash_fingerprints(docs, id_col, text_col, ngram_n), "cache"
+    )
     return banded_hamming_pairs(
         sig,
         SIMHASH_BITS,
@@ -461,7 +458,9 @@ def minhash_lsh_candidates(
         raise ValueError("num_hashes must be divisible by bands")
     # Both join sides read the signature table; cache so the token explode
     # + k-way min aggregation runs once (see jaccard_pairs_prefix note).
-    sig = minhash_signatures(docs, num_hashes, id_col, text_col, ngram_n).cache()
+    sig = materialize(
+        minhash_signatures(docs, num_hashes, id_col, text_col, ngram_n), "cache"
+    )
     banded = _band_explode(sig, num_hashes, bands, id_col, keep_all=True)
     a = banded.select(
         F.col(id_col).alias("a"),
@@ -557,7 +556,9 @@ def minhash_lsh_candidates_incremental(
     the base-base pairs already found by earlier runs."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    delta_sigs = minhash_signatures(delta_docs, num_hashes, id_col, text_col).cache()
+    delta_sigs = materialize(
+        minhash_signatures(delta_docs, num_hashes, id_col, text_col), "cache"
+    )
     all_banded = _band_explode(
         base_sigs.unionByName(delta_sigs), num_hashes, bands, id_col
     )
@@ -667,8 +668,7 @@ def containment_pairs_prefix(
     Scale shape: rank-by-df (bucketed two-level rank — no global
     window), prefix-vs-full inverted-index equi-join on the token rank,
     |B| >= t*|A| length pruning at candidate generation, verify on
-    candidates only. Caching contract as jaccard_pairs_prefix: caller
-    owns clearCache between repeated invocations.
+    candidates only.
     """
     from fractions import Fraction
 
@@ -678,17 +678,20 @@ def containment_pairs_prefix(
 
     frac = Fraction(threshold).limit_denominator(1_000_000)
     p, q = frac.numerator, frac.denominator
-    toks = token_sets(docs, id_col, text_col, ngram_n).cache()
+    toks = materialize(token_sets(docs, id_col, text_col, ngram_n), "cache")
     df_counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ranked_vocab, _ = bucketed_global_rank(
         df_counts, "df", ["tok"], n_buckets=256, out_col="rank"
     )
     tok_rank = ranked_vocab.select("tok", F.col("rank").cast("int").alias("rank"))
     ranked = toks.join(F.broadcast(tok_rank), "tok").select(id_col, "rank")
-    per_doc = ranked.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("rank")).alias("ranks"),
-        F.count(F.lit(1)).alias("n_tok"),
-    ).cache()
+    per_doc = materialize(
+        ranked.groupBy(id_col).agg(
+            F.sort_array(F.collect_list("rank")).alias("ranks"),
+            F.count(F.lit(1)).alias("n_tok"),
+        ),
+        "cache",
+    )
     # prefix_len = n - ceil(t*n) + 1, in exact integers
     ceil_tn = F.expr(f"CAST(({p} * n_tok + {q} - 1) AS BIGINT) div {q}")
     prefix_len = (F.col("n_tok") - ceil_tn + F.lit(1)).cast("int")

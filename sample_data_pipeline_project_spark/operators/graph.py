@@ -27,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.partitioning import (
-    checkpoint_capped,
-)
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 
 def triangle_counts(
@@ -50,27 +48,24 @@ def triangle_counts(
     # pair-generation pipeline (e.g. a blocked-matmul similarity join).
     # Same pattern as connected_components: materialize the (small) edge
     # list once, then everything downstream joins in-memory data.
-    # checkpoint_capped before every materialization (rounds 11/12): see
-    # operators/partitioning.py — downstream stages re-scan these blocks
-    # once per reference, and the wide-start layout makes that 256
-    # near-empty tasks each time; the coalesce is post-materialization +
-    # size-guarded so producing stages keep their AQE width.
-    e = checkpoint_capped(
+    e = materialize(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("a"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        "capped",
     )
     # Degree per vertex (over canonical edges); materialized because it
     # feeds BOTH sides of the orientation join below (without truncation
     # the union+aggregate would execute twice per action).
-    deg = checkpoint_capped(
+    deg = materialize(
         e.select(F.col("a").alias("v"))
         .unionByName(e.select(F.col("b").alias("v")))
         .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
+        .agg(F.count(F.lit(1)).alias("deg")),
+        "capped",
     )
     # Orient each edge from its lower (deg, id) endpoint to its higher one;
     # carry the destination's rank so the wedge join can order its two legs
@@ -83,14 +78,15 @@ def triangle_counts(
     )
     # Also materialized: referenced three times (two wedge legs + the
     # closing-edge probe); edge-list-sized.
-    oriented = checkpoint_capped(
+    oriented = materialize(
         ranked.select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
             F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias(
                 "dst_deg"
             ),
-        )
+        ),
+        "capped",
     )
     # Wedges rooted at the lowest-ranked corner: pick two out-neighbors of
     # src, ordered by rank so the closing edge (v -> w) matches its own
@@ -152,13 +148,14 @@ def kcore_peel(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = checkpoint_capped(
+    e = materialize(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("a"),
             F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(),
+        "capped",
     )
 
     def _degrees(ed: DataFrame) -> DataFrame:
@@ -171,10 +168,11 @@ def kcore_peel(
 
     for _ in range(rounds):
         keep = _degrees(e).filter(F.col("degree") >= k).select("vertex")
-        e = checkpoint_capped(
+        e = materialize(
             e.join(keep.withColumnRenamed("vertex", "a"), "a")
             .join(keep.withColumnRenamed("vertex", "b"), "b")
-            .select("a", "b")
+            .select("a", "b"),
+            "capped",
         )
     return _degrees(e)
 
@@ -220,24 +218,27 @@ def bfs_hops(
         .distinct()
     )
     # Symmetrize once — relaxation below walks src -> dst only.
-    sym = checkpoint_capped(
+    sym = materialize(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))),
+        "capped",
     )
-    dist = checkpoint_capped(
+    dist = materialize(
         seeds.select(F.col(seed_col).alias("vertex"))
         .distinct()
-        .select("vertex", F.lit(0).cast("long").alias("hops"))
+        .select("vertex", F.lit(0).cast("long").alias("hops")),
+        "capped",
     )
     for _ in range(rounds):
         relaxed = (
             dist.join(sym, dist["vertex"] == sym["src"])
             .select(F.col("dst").alias("vertex"), (F.col("hops") + 1).alias("hops"))
         )
-        dist = checkpoint_capped(
+        dist = materialize(
             dist.unionByName(relaxed)
             .groupBy("vertex")
-            .agg(F.min("hops").alias("hops"))
+            .agg(F.min("hops").alias("hops")),
+            "capped",
         )
     return dist
 
@@ -269,10 +270,10 @@ def hits_bipartite(
     # materialize the deduped edge list ONCE — every half-iteration joins
     # against it, and without this the plan re-scans + re-distincts the
     # input 2·iters times (pagerank_fixed's lineage-truncation pattern)
-    e = (
+    e = materialize(
         edges.select(F.col(hub_col).alias("hub"), F.col(auth_col).alias("auth"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "checkpoint",
     )
 
     def _normalize(scores: DataFrame, key: str) -> DataFrame:
@@ -337,14 +338,16 @@ def lpa_labels(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    sym = checkpoint_capped(
+    sym = materialize(
         e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))),
+        "capped",
     )
-    labels = checkpoint_capped(
+    labels = materialize(
         sym.select(F.col("src").alias("vertex"))
         .distinct()
-        .select("vertex", F.col("vertex").alias("label"))
+        .select("vertex", F.col("vertex").alias("label")),
+        "capped",
     )
     # Mode election is a max_by HASH AGGREGATE, not a rank window (round
     # 11, guide §2.4): per round this removes the per-vertex sort — the
@@ -357,13 +360,14 @@ def lpa_labels(
             labels.withColumnRenamed("vertex", "dst"), "dst"
         ).select(F.col("src").alias("vertex"), "label")
         cnt = nb.groupBy("vertex", "label").agg(F.count(F.lit(1)).alias("n"))
-        labels = checkpoint_capped(
+        labels = materialize(
             cnt.groupBy("vertex")
             .agg(
                 F.max_by(
                     "label", F.struct("n", (-F.col("label")).alias("__neg"))
                 ).alias("label")
             )
-            .select("vertex", "label")
+            .select("vertex", "label"),
+            "capped",
         )
     return labels

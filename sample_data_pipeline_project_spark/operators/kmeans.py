@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.operators.partitioning import widen
 
 
@@ -118,7 +119,7 @@ def kmeans_fit(
             )
         )
         # truncate lineage: without this the plan doubles every iteration
-        centroids = new_centroids.localCheckpoint(eager=True)
+        centroids = materialize(new_centroids, "checkpoint")
     return centroids
 
 

@@ -21,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.partitioning import (
-    checkpoint_capped,
-)
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 
 def pagerank_fixed(
@@ -44,26 +42,20 @@ def pagerank_fixed(
     if n == 0:
         raise ValueError("pagerank_fixed: empty vertex set (n=0)")
     base = float((1.0 - damping) / n)
-    from pyspark import StorageLevel
 
     # DISK_ONLY for the edge-sized materializations (round 11): the
     # near-dup edge list is data-proportional and a noise-dense graph
     # OOMed the heap in the components twin at the sf100 probe; labels
     # r (vertex-sized) stay at the default level.
-    # checkpoint_capped on every materialization (rounds 11/12): see
-    # operators/partitioning.py — without it the per-round joins re-scan
-    # 256-partition checkpoint blocks with near-empty tasks; the coalesce
-    # is post-materialization + size-guarded so the producing stages keep
-    # their AQE width.
-    e = checkpoint_capped(
+    e = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-        StorageLevel.DISK_ONLY,
+        "capped_disk",
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # contribution weight per edge is static across rounds: r changes,
     # outdeg does not — precompute src -> outdeg once on the edge list
-    ew = checkpoint_capped(e.join(deg, "src"), StorageLevel.DISK_ONLY)
-    v = checkpoint_capped(vertices.select(F.col(id_col).alias("vid")))
+    ew = materialize(e.join(deg, "src"), "capped_disk")
+    v = materialize(vertices.select(F.col(id_col).alias("vid")), "capped")
     r = v.withColumn("r", F.lit(float(1.0 / n)))
     for _ in range(iters):
         mass = (
@@ -72,14 +64,15 @@ def pagerank_fixed(
             .groupBy("dst")
             .agg(F.sum("c").alias("m"))
         )
-        r = checkpoint_capped(
+        r = materialize(
             v.join(mass, v["vid"] == mass["dst"], "left")
             .select(
                 "vid",
                 (F.lit(base) + F.lit(damping) * F.coalesce("m", F.lit(0.0))).alias(
                     "r"
                 ),
-            )
+            ),
+            "capped",
         )
     return (
         r.join(deg.withColumnRenamed("src", "vid"), "vid", "left")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sample_data_pipeline_project_spark.operators.kmeans import _sq_l2
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 
 def _unit_normalized(
@@ -123,23 +124,21 @@ def pq_fit(
         widen,
     )
 
-    subs = widen(_subvectors(train, m, dim, vec_col)).localCheckpoint(
-        eager=True
-    )
+    subs = materialize(widen(_subvectors(train, m, dim, vec_col)), "checkpoint")
     # GROUPED Lloyd: all m subspace codebooks advance in the SAME job per
     # iteration (keyed by sub_id throughout) — m x fewer Spark jobs than
     # looping kmeans_fit per subspace, identical per-subspace math.
     # Deterministic init: each subspace's k lowest-id subvectors.
     w_init = Window.partitionBy("sub_id").orderBy(F.col(id_col).asc())
-    centroids = (
+    centroids = materialize(
         subs.withColumn("__rn", F.row_number().over(w_init))
         .filter(F.col("__rn") <= k_codes)
         .select(
             "sub_id",
             F.col("__rn").alias("code"),
             F.col("subvec").cast("array<double>").alias("c_vec"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "checkpoint",
     )
     n_init = centroids.count()  # in-memory (eager checkpoint): cheap
     if n_init < m * k_codes:
@@ -201,15 +200,15 @@ def pq_fit(
         # centroid instead of silently vanishing; otherwise the codebook
         # would shrink below m*k_codes and every downstream encode would
         # quietly degrade.
-        centroids = (
+        centroids = materialize(
             centroids.join(recomputed, ["sub_id", "code"], "left")
             .select(
                 "sub_id",
                 "code",
                 F.coalesce("new_vec", "c_vec").alias("c_vec"),
-            )
+            ),
             # truncate lineage: the plan otherwise doubles per iteration
-            .localCheckpoint(eager=True)
+            "checkpoint",
         )
     return centroids
 

@@ -26,6 +26,7 @@ from sample_data_pipeline_project_spark.functions.vectors import (
     cosine_arrow,
     dot,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 
 def topk_cosine(
@@ -81,11 +82,6 @@ def neardup_cosine_pairs_blocked(
     """Exact cosine near-dup pairs via BLOCKED MATMUL filter-verify: same
     output as `neardup_cosine_pairs`, without the row-at-a-time quadratic
     join.
-
-    Caching contract: the returned pair set is `.cache()`'d (two
-    workloads re-run the identical plan in one session); the CALLER owns
-    the lifecycle — `spark.catalog.clearCache()` or `.unpersist()`
-    between repeated invocations, as `harness.run_workload` does.
 
     Stage 1 (filter): hash-assign vectors to `num_blocks` blocks; replicate
     each block into its (B*(B+1)/2) block-pair groups; inside each group an
@@ -174,7 +170,7 @@ def neardup_cosine_pairs_blocked(
     # recall certification run this identical plan in one session, and
     # Spark's plan-equality cache makes the second execution a memory read
     # — the in-plan stand-in for materializing the pair table once.
-    return verified.cache()
+    return materialize(verified, "cache")
 
 
 def _rp_planes(dim: int, num_planes: int) -> list[list[float]]:
@@ -270,9 +266,12 @@ def rp_lsh_neardup_pairs(
         raise ValueError("bands must divide num_planes")
     dim = len(corpus.select(vec_col).first()[0])
     # cached: both band-join sides read the signature table
-    sig = corpus.select(
-        F.col(id_col), _rp_sign_bits(vec_col, dim, num_planes).alias("bits")
-    ).cache()
+    sig = materialize(
+        corpus.select(
+            F.col(id_col), _rp_sign_bits(vec_col, dim, num_planes).alias("bits")
+        ),
+        "cache",
+    )
     banded = _rp_banded(sig, id_col, num_planes, bands)
     cands = (
         banded.select(F.col(id_col).alias("a"), "band_idx", "band_sig")
@@ -839,12 +838,9 @@ def _ivf_stage(
     # staged role branches) pays a columnar decode of the fat vector
     # column, where a localCheckpoint stores raw row blocks and re-reads
     # are plain block scans (4.90 s — disjoint spreads vs both persist
-    # arms, and recall/plain IVF won 1.2-1.5x the same way). Checkpoint
-    # blocks are still ContextCleaner-tracked (the RDD unpersists when
-    # the plan is GC'd); the known trade is lineage truncation (executor
-    # loss outside local mode fails the query instead of recomputing),
-    # which round 10 carried for the same reason.
-    assigned = assigned.localCheckpoint(eager=True)
+    # arms, and recall/plain IVF won 1.2-1.5x the same way). The
+    # lineage-truncation trade is decided in operators/materialize.py.
+    assigned = materialize(assigned, "checkpoint")
 
     # ---- BALANCED SCORING (round-10): split skewed cells' SOURCE rows.
     # The round-9 sf100 probe proved the candidate stream linear after
@@ -1248,7 +1244,7 @@ def neardup_cosine_pairs_ivf(
         .select("a", "b", cosine("va", "vb").alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
     )
-    return verified.cache()
+    return materialize(verified, "cache")
 
 
 # --- binary (sign) quantization + Hamming shortlist (B3 scale path) -------
@@ -1404,15 +1400,15 @@ def mmr_select(
     — O(2^k) broadcast jobs instead of O(k) (measured 37 s -> ~4 s at
     k=5 on a 24-row pool; the cost is per-JOB driver round-trips, not
     data). cache() is lazy, so construction still launches no jobs."""
-    first = (
+    first = materialize(
         pool.orderBy(F.col(rel_col).desc(), F.col(id_col).asc())
         .limit(1)
         .select(
             F.col(id_col).alias("s1_id"),
             F.col(vec_col).alias("s1_v"),
             F.col(rel_col).alias("s1_rel"),
-        )
-        .cache()
+        ),
+        "cache",
     )
     chosen = [first]
     for i in range(2, k + 1):
@@ -1424,7 +1420,7 @@ def mmr_select(
         sims = [cosine(vec_col, f"s{j}_v") for j in range(1, i)]
         maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
         mmr = F.lit(lam) * F.col(rel_col) - F.lit(div_weight) * maxsim
-        nxt = (
+        nxt = materialize(
             cand.select(
                 F.col(id_col),
                 F.col(vec_col),
@@ -1437,8 +1433,8 @@ def mmr_select(
                 F.col(id_col).alias(f"s{i}_id"),
                 F.col(vec_col).alias(f"s{i}_v"),
                 F.col(rel_col).alias(f"s{i}_rel"),
-            )
-            .cache()
+            ),
+            "cache",
         )
         chosen.append(nxt)
     out = None

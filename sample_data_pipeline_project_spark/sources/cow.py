@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from sample_data_pipeline_project_spark.envelope import new_query_id, run_task
 from sample_data_pipeline_project_spark.log_utils import LogBlock
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 
 _DYN = "spark.sql.sources.partitionOverwriteMode"
 
@@ -53,14 +54,14 @@ def _mutate_partitions(
     if affected == 0:
         return 0
     if partition_col is None:
-        new_full = transform(df, predicate).localCheckpoint(eager=True)
+        new_full = materialize(transform(df, predicate), "checkpoint")
         new_full.write.mode("overwrite").parquet(path)
     else:
         days = [
             r[0] for r in matching.select(partition_col).distinct().collect()
         ]
         scope = df.filter(F.col(partition_col).isin(days))
-        rewritten = transform(scope, predicate).localCheckpoint(eager=True)
+        rewritten = materialize(transform(scope, predicate), "checkpoint")
         _overwrite_partitions(spark, rewritten, path, partition_col)
     _refresh_after_rewrite(spark, path)
     return affected
@@ -174,10 +175,10 @@ def cow_merge(
         n_source = source.count()
         n_inserted = n_source - n_updated
         if partition_col is None:
-            merged = (
+            merged = materialize(
                 target.join(source.select(*key_cols), key_cols, "left_anti")
-                .unionByName(source.select(*cols))
-                .localCheckpoint(eager=True)
+                .unionByName(source.select(*cols)),
+                "checkpoint",
             )
             merged.write.mode("overwrite").parquet(path)
         else:
@@ -195,10 +196,10 @@ def cow_merge(
                 .collect()
             ]
             scope = target.filter(F.col(partition_col).isin(days))
-            rewritten = (
+            rewritten = materialize(
                 scope.join(source.select(*key_cols), key_cols, "left_anti")
-                .unionByName(source.select(*cols))
-                .localCheckpoint(eager=True)
+                .unionByName(source.select(*cols)),
+                "checkpoint",
             )
             _overwrite_partitions(spark, rewritten, path, partition_col)
         _refresh_after_rewrite(spark, path)

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -246,7 +247,7 @@ def dedup_cluster_collapse_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    approx = _lsh_verified_jaccard_pairs(d).cache()
+    approx = materialize(_lsh_verified_jaccard_pairs(d), "cache")
     exact = jaccard_pairs_prefix(d, _CC_THRESHOLD, ngram_n=_CC_NGRAM).select(
         "a", "b", "jaccard"
     )
@@ -402,7 +403,7 @@ def sim_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == _MMR_QUERY_ID).select(
         F.col("embedding").alias("q_emb")
     )
-    pool = (
+    pool = materialize(
         emb.filter(F.col("vec_id") != _MMR_QUERY_ID)
         .crossJoin(F.broadcast(q))
         .select(
@@ -412,8 +413,8 @@ def sim_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rel").isNotNull())
         .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
-        .limit(_MMR_POOL)
-        .cache()
+        .limit(_MMR_POOL),
+        "cache",
     )
     return mmr_select(
         pool,

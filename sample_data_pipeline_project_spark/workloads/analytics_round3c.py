@@ -25,6 +25,7 @@ from sample_data_pipeline_project_spark.operators.graph import (
     bfs_hops,
     triangle_counts,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.operators.similarity import (
     neardup_cosine_pairs_blocked,
 )
@@ -439,15 +440,15 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex-sized tables, and the ratio is exact ints under one final
     division."""
     emb = load_table(spark, sf_dir, "embeddings")
-    e = (
+    e = materialize(
         neardup_cosine_pairs_blocked(emb, _LCC_THRESHOLD)
         .select(
             F.least(F.col("a"), F.col("b")).alias("a"),
             F.greatest(F.col("a"), F.col("b")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "checkpoint",
     )
     deg = (
         e.select(F.col("a").alias("vertex"))

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sample_data_pipeline_project_spark.functions.text import tokens
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import (
     load_table,
     register_views,
@@ -437,10 +438,9 @@ def ml_logistic_regression_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((day.cast("double") - 9237.0) / 1200.0).alias("x2"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1.0).otherwise(0.0).alias("y"),
     )
-    # Caching contract (same as jaccard_pairs_prefix): feat backs the 3
-    # eager iteration jobs AND the returned DataFrame; the caller/bench
-    # owns clearCache between workloads.
-    feat = feat.persist()
+    # cached: feat backs the 3 eager iteration jobs AND the returned
+    # DataFrame
+    feat = materialize(feat, "cache")
     n = feat.count()
     w = [0.0, 0.0, 0.0]
     for _ in range(_LR_ITERS):
@@ -1128,11 +1128,11 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sample_data_pipeline_project_spark.operators.gram import gram_moments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = (
+    cells = materialize(
         gram_moments(emb)
         .groupBy("i", "j")
-        .agg(F.sum("sxy").alias("g"), F.sum("cnt").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("sxy").alias("g"), F.sum("cnt").alias("cnt")),
+        "checkpoint",
     )
     n = cells.filter((F.col("i") == 0) & (F.col("j") == 0)).select(
         F.col("cnt").cast("long").alias("n")
@@ -1162,7 +1162,7 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(term).cast("long").alias("w"))
         )
         mx = w.agg(F.max(F.abs(F.col("w"))).alias("mx"))
-        v = (
+        v = materialize(
             w.crossJoin(F.broadcast(mx))
             .select(
                 F.col("k2").alias("k"),
@@ -1173,8 +1173,8 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("long")
                 .alias("v"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "checkpoint",
         )
     return v.select(
         F.col("k").cast("long").alias("dim"), F.col("v").cast("long").alias("v_scaled")
@@ -1252,7 +1252,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(w).alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
     cells = seq.groupBy("prv", "nxt").agg(F.count(F.lit(1)).alias("c"))
-    cells = cells.localCheckpoint(eager=True)
+    cells = materialize(cells, "checkpoint")
     rows_ = cells.groupBy("prv").agg(F.sum("c").alias("r"))
     p = rows_.select(F.col("prv").alias("typ"), F.lit(_MKV_SCALE).cast("long").alias("p"))
     term = F.round(
@@ -1268,7 +1268,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(term).cast("long").alias("w"))
         )
         sw = wdf.agg(F.sum("w").alias("sw"))
-        p = (
+        p = materialize(
             wdf.crossJoin(F.broadcast(sw))
             .select(
                 F.col("typ2").alias("typ"),
@@ -1279,8 +1279,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("long")
                 .alias("p"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "checkpoint",
         )
     return p.select(F.col("typ").alias("event_type"), F.col("p").cast("long").alias("p_scaled"))
 

@@ -29,6 +29,7 @@ from sample_data_pipeline_project_spark.functions.text import (
     md5_prefix_uint32_sql,
     tokens,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -315,10 +316,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    p = (
+    p = materialize(
         neardup_cosine_pairs_blocked(emb, _ASSORT_THRESHOLD)
-        .select("a", "b")
-        .localCheckpoint(eager=True)
+        .select("a", "b"),
+        "checkpoint",
     )
     sym = p.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         p.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -491,7 +492,7 @@ def stats_precision_recall_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         ml_naive_bayes_langid,
     )
 
-    cm = ml_naive_bayes_langid(spark, sf_dir).localCheckpoint(eager=True)
+    cm = materialize(ml_naive_bayes_langid(spark, sf_dir), "checkpoint")
     classes = (
         cm.select(F.col("lang_true").alias("cls"))
         .unionByName(cm.select(F.col("lang_pred").alias("cls")))

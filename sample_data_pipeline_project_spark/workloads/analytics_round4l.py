@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sample_data_pipeline_project_spark.functions.vectors import duck_cosine
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.operators.similarity import (
     neardup_cosine_pairs_blocked,
 )
@@ -81,21 +82,22 @@ def graph_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("w"),
     )
-    sym = pairs.select(
-        F.col("a").alias("s"), F.col("b").alias("t"), "w"
-    ).unionByName(
-        pairs.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")
-    ).localCheckpoint(eager=True)
+    sym = materialize(
+        pairs.select(F.col("a").alias("s"), F.col("b").alias("t"), "w").unionByName(
+            pairs.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")
+        ),
+        "checkpoint",
+    )
     src = sym.agg(F.min("s")).first()[0]
     dist = spark.createDataFrame([(int(src), 0)], "v long, d long")
     for _ in range(_BF_ROUNDS):
-        relaxed = (
+        relaxed = materialize(
             dist.join(sym, dist["v"] == sym["s"])
             .select(F.col("t").alias("v"), (F.col("d") + F.col("w")).alias("d"))
             .unionByName(dist.select("v", "d"))
             .groupBy("v")
-            .agg(F.min("d").cast("long").alias("d"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("d").cast("long").alias("d")),
+            "checkpoint",
         )
         dist = relaxed
     return dist.select(F.col("v").alias("vertex"), F.col("d").alias("dist_scaled"))

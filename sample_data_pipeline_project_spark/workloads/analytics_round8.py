@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from sample_data_pipeline_project_spark.functions.text import (
     md5_prefix_uint32_sql,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -328,9 +329,10 @@ def graph_knn_mutual_edges_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    edges = knn_mutual_edges_ivf(
-        emb, _KNN_D, _KNN_THRESHOLD, nprobe=_KNN_NPROBE
-    ).localCheckpoint(eager=True)
+    edges = materialize(
+        knn_mutual_edges_ivf(emb, _KNN_D, _KNN_THRESHOLD, nprobe=_KNN_NPROBE),
+        "checkpoint",
+    )
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))

@@ -15,6 +15,7 @@ from sample_data_pipeline_project_spark.operators.dedup import (
     simhash_bit_sql,
     simhash_pairs,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.sources.scratch import scratch_dir
 from sample_data_pipeline_project_spark.workloads import workload
@@ -625,13 +626,13 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     # at scale the estimator audit runs on a reproducible pair sample —
     # the portable md5-u32 predicate is stated identically in the oracle.
     u32 = md5_prefix_uint32_sql("CAST(a AS STRING) || '|' || CAST(b AS STRING)")
-    cand = (
+    cand = materialize(
         minhash_lsh_candidates(d, _NUM_HASHES, _BANDS)
         .select("a", "b")
-        .filter(F.expr(f"({u32}) % 256 = 0"))
-        .localCheckpoint(eager=True)
+        .filter(F.expr(f"({u32}) % 256 = 0")),
+        "checkpoint",
     )
-    sig = minhash_signatures(d, _NUM_HASHES).localCheckpoint(eager=True)
+    sig = materialize(minhash_signatures(d, _NUM_HASHES), "checkpoint")
     n_match = sum(
         F.when(F.col(f"sa.mh_{i}") == F.col(f"sb.mh_{i}"), 1).otherwise(0)
         for i in range(_NUM_HASHES)
@@ -651,11 +652,11 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     # array op. token_sets emits per-doc DISTINCT tokens, so
     # size(array_intersect(..)) equals the old join-count n_inter
     # row-for-row, and n = size(toks) equals the old per-doc count.
-    per_doc = (
+    per_doc = materialize(
         token_sets(d)
         .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("tok")).alias("toks"))
-        .localCheckpoint(eager=True)
+        .agg(F.sort_array(F.collect_list("tok")).alias("toks")),
+        "checkpoint",
     )
     pa = per_doc.select(
         F.col("doc_id").alias("a"),

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -234,13 +235,15 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     |hours| rows. Partials stay DECIMAL until each tier's final DOUBLE
     cast."""
     e = load_table(spark, sf_dir, "events")
-    hourly = (
+    # one tiny table (|hours| rows) feeds all three output tiers
+    hourly = materialize(
         e.groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket_start"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
-        )
-    ).cache()  # one tiny table (|hours| rows) feeds all three output tiers
+        ),
+        "cache",
+    )
 
     def tier(df: DataFrame, res: str) -> DataFrame:
         return df.select(

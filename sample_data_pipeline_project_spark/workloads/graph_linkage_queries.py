@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from sample_data_pipeline_project_spark.functions.vectors import duck_cosine
 from sample_data_pipeline_project_spark.operators.graph import kcore_peel, triangle_counts
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.operators.similarity import (
     neardup_cosine_pairs_blocked,
 )
@@ -378,10 +379,10 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    p = (
+    p = materialize(
         knn_mutual_edges(emb, _AA_DEGREE, _AA_THRESHOLD)
-        .select("a", "b")
-        .localCheckpoint(eager=True)
+        .select("a", "b"),
+        "checkpoint",
     )
     sym = p.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         p.select(F.col("b").alias("src"), F.col("a").alias("dst"))

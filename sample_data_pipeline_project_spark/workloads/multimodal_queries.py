@@ -19,6 +19,7 @@ from sample_data_pipeline_project_spark.multimodal.ops import (
     image_features,
     sample_frames,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -212,7 +213,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = _docs_as_media(spark, sf_dir, "image")
-    sig = content_dhash(media).cache()
+    sig = materialize(content_dhash(media), "cache")
     return banded_hamming_pairs(
         sig,
         DHASH_BITS,

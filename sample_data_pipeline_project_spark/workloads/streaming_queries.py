@@ -10,6 +10,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.streaming.eventtime import (
     hourly_counts_stream,
     run_stream_to_table,
@@ -443,7 +444,7 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.filter(F.col("doc_id") % _INC_DELTA_MOD != 0)
     delta = d.filter(F.col("doc_id") % _INC_DELTA_MOD == 0)
     # REBALANCE before every store/result write (round 12, guide §6):
-    # the batch-signature frames pass through the operator's .cache(),
+    # the batch-signature frames pass through the operator's cache,
     # whose population shuffle keeps the wide-start 256-partition layout
     # — without the rebalance each micro-batch appended ~100 near-empty
     # parquet files (measured: 408 files / 4.9 MB in the signature store
@@ -601,9 +602,12 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = doc_stream.select(F.explode(tokens("text")).alias("tok"))
     # streaming aggregate 1: exact token counts (complete mode)
-    tc = run_stream_to_table(
-        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count"))
-    ).cache()
+    tc = materialize(
+        run_stream_to_table(
+            toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count"))
+        ),
+        "cache",
+    )
     # streaming aggregate 2: the CM counter matrix — map-side bucket
     # expansion, then a (seed, bucket)-keyed running count; state is the
     # fixed 3x1024 matrix regardless of stream length
@@ -1030,7 +1034,7 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(user_id % 62 AS INT)))"
         ).alias("bits")
     )
-    mat = run_stream_to_table(blocks).cache()
+    mat = materialize(run_stream_to_table(blocks), "cache")
     agg = mat.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
         F.sum(F.bit_count("bits")).cast("long").alias("distinct_bitmap"),
@@ -1082,9 +1086,9 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("priority"),
         F.expr("datediff(to_date(o_orderdate), DATE'1970-01-01') div 7").alias("d"),
     ).agg(F.sum(cents).cast("long").alias("v"))
-    # cache contract: the materialized stream result backs both the fold
-    # below and the driver's collect; caller/bench owns clearCache.
-    daily = run_stream_to_table(weekly).cache()
+    # cached: the materialized stream result backs both the fold below
+    # and the driver's collect
+    daily = materialize(run_stream_to_table(weekly), "cache")
     ser = daily.groupBy("priority").agg(
         F.count(F.lit(1)).cast("long").alias("n_weeks"),
         F.expr(

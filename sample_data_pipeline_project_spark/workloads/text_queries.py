@@ -21,6 +21,7 @@ from sample_data_pipeline_project_spark.functions.text import (
     word_bigrams,
     word_ngrams,
 )
+from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 
@@ -765,7 +766,9 @@ def sketch_countmin_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream row count per bucket) for vocabulary-many hashes instead of
     # corpus-many — measured 7.6s -> ~1s at sf0.1. The same distinct table
     # feeds the exact top-k, so the stream is aggregated exactly once.
-    tc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count")).cache()
+    tc = materialize(
+        toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_count")), "cache"
+    )
     hashed = tc.select("exact_count", F.explode(bucket_structs).alias("h")).select(
         "exact_count", "h.seed", "h.bucket"
     )

@@ -14,13 +14,14 @@ import datetime as dt
 import decimal
 import importlib.util
 import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 
 _spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
+    "check_oracle", Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
 )
 check_oracle = importlib.util.module_from_spec(_spec)
 sys.modules["check_oracle"] = check_oracle

@@ -1,5 +1,5 @@
-"""The shared bench protocol: status-store stage tables, cache release
-after each run, and the bench_subset -> bench_diff A/B loop."""
+"""The shared bench protocol: status-store stage tables, release of what
+each run materialized, and the bench_subset -> bench_diff A/B loop."""
 
 from __future__ import annotations
 
@@ -69,6 +69,25 @@ def test_run_workload_releases_operator_caches(spark):
     before = _stored_rdds(spark)
     assert harness.run_workload(spark, w, _SF) > 0
     assert _stored_rdds(spark) <= before
+
+
+def test_run_workload_releases_iterative_checkpoints(spark):
+    # kcore_peel checkpoints its edge list every round; a session-wide
+    # cache clear does not drop checkpoint blocks
+    before = _stored_rdds(spark)
+    assert harness.run_workload(spark, load_all()["graph_kcore"], _SF) > 0
+    assert _stored_rdds(spark) <= before
+
+
+def test_run_workload_keeps_caches_it_did_not_create(spark):
+    before = _stored_rdds(spark)
+    kept = spark.range(0, 1000).selectExpr("id % 7 AS k").cache()
+    assert kept.count() == 1000
+    ours = _stored_rdds(spark) - before
+    assert ours
+    assert harness.run_workload(spark, load_all()["dedup_minhash_lsh"], _SF) > 0
+    assert ours <= _stored_rdds(spark)
+    kept.unpersist()
 
 
 def test_bench_subset_output_feeds_bench_diff(monkeypatch, capsys, tmp_path):

@@ -6,13 +6,17 @@ collect()-based oracle gate) — and both sides of the oracle gate must
 emit driver-hashable (scalar-only) schemas.
 
 The analysis/execution loop runs ONCE per registered workload (a
-module-scoped fixture); the individual tests assert over its captured
-results, so the ~300-workload registry is built a single time."""
+module-scoped fixture), each inside a `materialize_scope`; the individual
+tests assert over its captured results, so the ~300-workload registry is
+built a single time."""
 
 from __future__ import annotations
 
 import pytest
 
+from sample_data_pipeline_project_spark.operators.materialize import (
+    materialize_scope,
+)
 from sample_data_pipeline_project_spark.workloads import load_all
 
 _SF = "/root/testdata/sf0.001"
@@ -21,27 +25,51 @@ _SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def registry_sweep(spark):
     """One pass over the registry: build each workload's DataFrame once,
-    capture (schema, count-or-error) for the tests below to assert on."""
+    capture (schema, count-or-error, RDDs persisted by the run and still
+    persisted after its scope) for the tests below to assert on."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet()}
+
+    # Earlier tests build workloads outside any scope, which leaves cache
+    # entries whose blocks are stored only when a plan first executes. A
+    # scope never releases a plan someone else cached, so start from an
+    # empty cache: every cache the sweep sees is then its own workload's.
+    spark.catalog.clearCache()
     results = {}
     for name, w in sorted(load_all().items()):
+        before = persisted()
         try:
-            df = w.fn(spark, _SF)
-            schema = df.schema
-            n = df.count()
+            with materialize_scope():
+                df = w.fn(spark, _SF)
+                schema = df.schema
+                n = df.count()
             err = None
         except Exception as exc:  # noqa: BLE001 - collect all failures
             schema, n, err = None, -1, f"{type(exc).__name__}: {exc}"
-        results[name] = (schema, n, err)
+        results[name] = (schema, n, err, persisted() - before)
     return results
 
 
 def test_every_workload_runs_under_terminal_count(registry_sweep):
     failures = [
         f"{name}: {err if err else 'negative count'}"
-        for name, (_, n, err) in registry_sweep.items()
+        for name, (_, n, err, _) in registry_sweep.items()
         if err or n < 0
     ]
     assert not failures, failures[:3]
+
+
+def test_no_workload_leaves_a_persisted_rdd_after_its_scope(registry_sweep):
+    """Every cache and checkpoint a workload makes goes through
+    `materialize`, so closing the run's scope releases all of them."""
+    leaks = {
+        name: sorted(left)
+        for name, (_, _, _, left) in registry_sweep.items()
+        if left
+    }
+    assert not leaks, leaks
 
 
 def test_no_workload_emits_complex_typed_output(registry_sweep):
@@ -57,7 +85,7 @@ def test_no_workload_emits_complex_typed_output(registry_sweep):
     from pyspark.sql import types as T
 
     offenders = []
-    for name, (schema, _, err) in registry_sweep.items():
+    for name, (schema, _, err, _) in registry_sweep.items():
         if schema is None:
             continue  # execution failure already reported above
         for field in schema.fields:

@@ -4,6 +4,7 @@ the naive quadratic bit-for-bit), IVF probe semantics."""
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,8 @@ from sample_data_pipeline_project_spark.operators.similarity import (
     neardup_cosine_pairs_blocked,
     topk_cosine,
 )
+
+_REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -427,9 +430,9 @@ def test_ann_floor_lookup_per_scale_and_default():
 
     assert _ann_floor("sim_kmeans_ivf_topk", "/root/testdata/sf0.001") == 0.6
     assert _ann_floor("sim_kmeans_ivf_topk", "/root/testdata/sf0.1/") == 0.2
-    assert _ann_floor("sim_lsh_topk", "/root/repo/.scaledata/sf10") == 0.1
+    assert _ann_floor("sim_lsh_topk", str(_REPO / ".scaledata" / "sf10")) == 0.1
     assert _ann_floor("sim_pq_adc_topk", "/root/testdata/sf0.01") == 0.8
-    cert = json.load(open("/root/repo/RECALL_CERT.json"))
+    cert = json.load(open(_REPO / "RECALL_CERT.json"))
     assert cert["topk_family"]["floors"] == _ANN_FLOORS
     # every floor sits strictly UNDER its measured value (the one-hit
     # margin contract) at every gate scale

@@ -35,12 +35,13 @@ import datetime as dt
 import decimal
 import hashlib
 import math
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 # Widening coercions (NaN==NULL, midnight-timestamp==DATE) are justified
@@ -166,6 +167,9 @@ def main() -> int:
     import duckdb
 
     from sample_data_pipeline_project_spark.engine import get_spark
+    from sample_data_pipeline_project_spark.operators.materialize import (
+        materialize_scope,
+    )
     from sample_data_pipeline_project_spark.schema import TESTDATA_TABLES
     from sample_data_pipeline_project_spark.workloads import load_all
 
@@ -204,8 +208,9 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = w.fn(spark, sf_dir)
-            spdf = sdf.toPandas()
+            # what the workload materializes is released once collected
+            with materialize_scope():
+                spdf = w.fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {exc}")
             failures.append(name)

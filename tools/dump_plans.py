@@ -19,21 +19,24 @@ def main() -> int:
     os.makedirs(outdir, exist_ok=True)
 
     from sample_data_pipeline_project_spark.engine import get_spark
+    from sample_data_pipeline_project_spark.operators.materialize import (
+        materialize_scope,
+    )
     from sample_data_pipeline_project_spark.workloads import load_all
 
     spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     workloads = load_all()
     for name in names:
-        df = workloads[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with materialize_scope():
+            df = workloads[name].fn(spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
-        spark.catalog.clearCache()
     return 0
 
 

@@ -16,9 +16,10 @@ Usage: python tools/gen_png_fixtures.py > /tmp/png_fixtures.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -47,13 +47,14 @@ import shutil
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SRC = Path("/root/testdata/sf0.1")
 
 
 def main() -> int:
-    out = Path(sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scaledata/sf1")
+    out = Path(sys.argv[1] if len(sys.argv) > 1 else REPO / ".scaledata" / "sf1")
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     only = set(sys.argv[3:])  # empty = all tables
     out.mkdir(parents=True, exist_ok=True)
