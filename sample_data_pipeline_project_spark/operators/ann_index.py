@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sample_data_pipeline_project_spark.operators.kmeans import (
-    _sq_l2,
     assign_clusters,
     kmeans_fit,
+    nearest_clusters,
 )
 
 
@@ -69,11 +69,7 @@ def ivf_index_topk(
     centroids = spark.read.parquet(f"{path}/centroids")
     probe = [
         r["cluster"]
-        for r in centroids.crossJoin(F.broadcast(query))
-        .select("cluster", _sq_l2("c_vec", "q_emb").alias("d"))
-        .orderBy(F.col("d").asc(), F.col("cluster").asc())
-        .limit(nprobe)
-        .collect()
+        for r in nearest_clusters(centroids, query, nprobe).select("cluster").collect()
     ]
     # literal IN-list on the partition column -> planning-time pruning
     bucket = spark.read.parquet(f"{path}/vectors").filter(

@@ -123,6 +123,18 @@ def kmeans_fit(
     return centroids
 
 
+def nearest_clusters(centroids: DataFrame, query: DataFrame, nprobe: int) -> DataFrame:
+    """The IVF probe: the `nprobe` centroids (cluster, c_vec) nearest the
+    1-row (q_emb) `query` by squared L2, ties broken by cluster id."""
+    return (
+        centroids.crossJoin(F.broadcast(query))
+        .select("cluster", "c_vec", _sq_l2("c_vec", "q_emb").alias("d"))
+        .orderBy(F.col("d").asc(), F.col("cluster").asc())
+        .limit(nprobe)
+        .select("cluster", "c_vec")
+    )
+
+
 def kmeans_ivf_topk(
     corpus: DataFrame,
     query: DataFrame,
@@ -142,13 +154,7 @@ def kmeans_ivf_topk(
     assigned = assign_clusters(corpus, centroids, id_col, vec_col).select(
         id_col, "cluster"
     )
-    probe = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cluster", _sq_l2("c_vec", "q_emb").alias("d"))
-        .orderBy(F.col("d").asc(), F.col("cluster").asc())
-        .limit(nprobe)
-        .select("cluster")
-    )
+    probe = nearest_clusters(centroids, query, nprobe).select("cluster")
     bucket = corpus.join(
         assigned.join(F.broadcast(probe), "cluster").select(id_col), id_col
     )

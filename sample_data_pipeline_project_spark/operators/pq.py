@@ -336,6 +336,7 @@ def ivfpq_topk(
     from sample_data_pipeline_project_spark.operators.kmeans import (
         assign_clusters,
         kmeans_fit,
+        nearest_clusters,
     )
     from sample_data_pipeline_project_spark.operators.similarity import (
         topk_cosine,
@@ -376,13 +377,7 @@ def ivfpq_topk(
         assigned, id_col
     )
     # Probe the nprobe coarse lists nearest the (normalized) query.
-    probe = (
-        coarse.crossJoin(F.broadcast(uquery))
-        .select("cluster", "c_vec", _sq_l2("c_vec", "q_emb").alias("d"))
-        .orderBy(F.col("d").asc(), F.col("cluster").asc())
-        .limit(nprobe)
-        .select("cluster", "c_vec")
-    )
+    probe = nearest_clusters(coarse, uquery, nprobe)
     # Per-list query residual, then the (cluster, sub_id, code) lookup
     # table: nprobe * m * k_codes rows.
     qres = probe.crossJoin(F.broadcast(uquery)).select(

@@ -484,7 +484,7 @@ def ledger_gaps_ooo(runs: DataFrame, delay: str = "10 minutes") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming EWMA (the stream twin of workloads/analytics_round3.py
+# Streaming EWMA (the stream twin of workloads/timeseries_queries.py
 # timeseries_ewma — same truncated kernel, same arithmetic order)
 # ---------------------------------------------------------------------------
 _EWMA_OUT_SCHEMA = T.StructType(

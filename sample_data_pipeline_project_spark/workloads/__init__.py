@@ -6,26 +6,44 @@ semantics are SQL-expressible) an ANSI-SQL oracle string DuckDB runs on the
 same parquet tables. `__spark_entry__.queries()/oracle_sql()` simply expose
 this registry.
 
-Determinism contract (what makes Spark-vs-DuckDB value hashes stable):
-  - timestamps are TIMESTAMP_NTZ end-to-end (functions/timeops.py);
-  - double aggregates go through exact DECIMAL sums, cast to DOUBLE at the
-    end (summation-order-independent, bit-identical across engines);
-  - every ORDER BY ... LIMIT has a unique-key tiebreak;
-  - aggregate/computed columns are aliased identically on both sides;
-  - NEVER cast float->integer directly: Spark truncates, DuckDB rounds.
-    Route money through DECIMAL(18,2) first, and wrap fractional index
-    arithmetic in explicit FLOOR on BOTH sides (window_rolling_median
-    found both divergences);
-  - float constants embedded in ORACLE SQL must ride as
-    CAST('<repr>' AS DOUBLE), never as bare decimal literals: DuckDB
-    parses a bare 16-digit literal as DECIMAL(17,16), and its
-    decimal->double conversion can be 1 ulp off the correctly-rounded
-    string parse (timeseries_weekly_spectrum found this when the ulp
-    moved a ROUND across an exact .5).
+Workloads are grouped by family, one module per family; `load_all` imports
+every module in this package, so a new family module needs no edit here.
+A workload's name prefix says where it lives:
+
+  tpch_queries           tpch
+  aggregation_queries    agg, cube, grouping, having, percentile, pivot,
+                         rollup, unpivot, window
+  relational             join, setop, subquery, scalar, array, explode,
+                         sort, sql, range, distinct, date, orders
+  timeseries_queries     timeseries
+  stats_queries          stats, regression, pareto, alloc
+  ml_queries             ml, reco
+  event_queries          events, cohort, rfm, sketch
+  text_queries           text
+  graph_linkage_queries  graph, er
+  similarity_queries     sim, embedding
+  dedup_queries          dedup
+  streaming_queries      stream
+  ledger_queries         ledger
+  governance_queries     dq, source, layout
+  pipeline_queries       scd2, incremental
+  curation_queries       sample, train, split
+  asof_queries           asof
+  multimodal_queries     multimodal
+  table_queries          cdc, snapshot, table
+
+Workloads that joined a family module before this layout keep their place
+where their prefix points elsewhere (e.g. `timeseries_twap` and
+`features_user_daily` in event_queries, `sketch_countmin_token_counts` in
+text_queries, `dq_profile_orders` in pipeline_queries,
+`join_events_to_runs` in ledger_queries); `Workload.fn.__module__` is the
+authority.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,50 +75,8 @@ def workload(name: str, oracle: str | None = None):
 
 
 def load_all() -> dict[str, Workload]:
-    """Import all workload modules (registration is an import side-effect)."""
-    from sample_data_pipeline_project_spark.workloads import (  # noqa: F401
-        analytics_extra,
-        analytics_round3,
-        analytics_round3c,
-        analytics_round3d,
-        analytics_round4,
-        analytics_round4b,
-        analytics_round4c,
-        analytics_round4d,
-        analytics_round4e,
-        analytics_round4f,
-        analytics_round4g,
-        analytics_round4h,
-        analytics_round4i,
-        analytics_round4j,
-        analytics_round4k,
-        analytics_round4l,
-        analytics_round4m,
-        analytics_round4n,
-        analytics_round4o,
-        analytics_round6,
-        analytics_round7,
-        analytics_round8,
-        analytics_round9,
-        analytics_round10,
-        analytics_round11,
-        asof_queries,
-        curation_queries,
-        dedup_queries,
-        event_queries,
-        governance_queries,
-        graph_linkage_queries,
-        ledger_queries,
-        multimodal_queries,
-        relational,
-        relational_extra,
-        relational_extra3,
-        pipeline_queries,
-        relational_tpch2,
-        similarity_queries,
-        streaming_queries,
-        table_queries,
-        text_queries,
-    )
-
+    """Import every module in this package (registration is an import
+    side-effect), so adding or removing a family module needs no edit here."""
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
     return REGISTRY

@@ -9,13 +9,17 @@ shapes a 100 TB pretraining corpus actually needs. Every workload keeps
 the registry's determinism contract: md5-based hashing via the shared
 portable hex arithmetic, integer/decimal comparisons (never float->int
 casts), and identical column aliases on both engines.
+
+Training-mix workloads: temperature-scaled source weighting (w_s ~
+tokens_s^alpha, alpha = 1/2 so the power is IEEE-exact sqrt on both
+engines) and the corpus dataset-card report, whose corpus totals are
+bounded driver scalars re-entering the plan as literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sample_data_pipeline_project_spark.functions.text import (
     md5_prefix_uint32_sql,
@@ -23,9 +27,17 @@ from sample_data_pipeline_project_spark.functions.text import (
     tokens,
     word_ngrams,
 )
-from sample_data_pipeline_project_spark.functions.vectors import duck_cosine
+from sample_data_pipeline_project_spark.functions.text import (
+    md5_prefix_uint32_sql as _u32_sql,
+)
+from sample_data_pipeline_project_spark.functions.vectors import (
+    dot,
+    duck_cosine,
+    duck_dot,
+)
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
+
 
 _DUCK_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -458,7 +470,7 @@ def text_vocab_oov_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: Efraimidis-Spirakis weighted reservoir (exact-k, RNG-free)
+# Efraimidis-Spirakis weighted reservoir (exact-k, RNG-free)
 # --------------------------------------------------------------------------
 _WRES_K = 50
 _WRES_U32 = md5_prefix_uint32_sql("'wres|' || CAST(doc_id AS STRING)")
@@ -521,7 +533,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: stratified sampling under an EXACT total budget
+# Stratified sampling under an EXACT total budget
 # --------------------------------------------------------------------------
 _STRAT_BUDGET = 100
 _STRAT_U32 = md5_prefix_uint32_sql("'strat|' || CAST(doc_id AS STRING)")
@@ -620,3 +632,397 @@ def sample_stratified_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.join(F.broadcast(quota), "source").filter(
         F.col("rnk") <= F.col("k_s")
     ).select("doc_id", "source", "rnk", "k_s")
+
+
+# --------------------------------------------------------------------------
+# Deterministic per-group sample (hash-ordered, no RNG state)
+# --------------------------------------------------------------------------
+_SAMPLE_K = 5
+
+_GROUP_SAMPLE_ORACLE = f"""
+WITH h AS (
+  SELECT event_type, event_id, md5(CAST(event_id AS VARCHAR)) AS hkey
+  FROM events
+),
+ranked AS (
+  SELECT event_type, event_id, hkey,
+         ROW_NUMBER() OVER (PARTITION BY event_type
+                            ORDER BY hkey, event_id) AS rn
+  FROM h
+)
+SELECT event_type, event_id, hkey, CAST(rn AS BIGINT) AS rn
+FROM ranked WHERE rn <= {_SAMPLE_K}
+"""
+
+
+@workload("sample_group_hash_topk", oracle=_GROUP_SAMPLE_ORACLE)
+def sample_group_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-group uniform sample WITHOUT RNG state: keep the k rows with
+    the smallest md5(event_id) per event type — the distributed
+    reservoir-sample replacement (md5 order is uniform over ids,
+    reproducible across engines/runs/retries, and mergeable: the top-k of
+    a union is the top-k of per-partition top-ks). One window per group;
+    at scale Spark pushes the rank filter into per-partition top-k heaps
+    before the shuffle."""
+    e = load_table(spark, sf_dir, "events")
+    h = e.select(
+        "event_type",
+        "event_id",
+        F.md5(F.col("event_id").cast("string")).alias("hkey"),
+    )
+    w = Window.partitionBy("event_type").orderBy("hkey", "event_id")
+    return (
+        h.withColumn("rn", F.row_number().over(w).cast("long"))
+        .filter(F.col("rn") <= _SAMPLE_K)
+    )
+
+
+# --------------------------------------------------------------------------
+# Deterministic epoch-shuffle plan (training-corpus shard + position map)
+# --------------------------------------------------------------------------
+_EPOCH_SHARDS = 8
+_EPOCH_KEY = _u32_sql("CAST(doc_id AS STRING)")
+
+_EPOCH_ORACLE = f"""
+WITH keyed AS (
+  SELECT doc_id,
+         {_EPOCH_KEY} AS shuffle_key
+  FROM documents
+)
+SELECT CAST(shuffle_key % {_EPOCH_SHARDS} AS BIGINT) AS shard,
+       CAST(ROW_NUMBER() OVER (
+         PARTITION BY shuffle_key % {_EPOCH_SHARDS}
+         ORDER BY shuffle_key ASC, doc_id ASC) AS BIGINT) AS pos,
+       doc_id
+FROM keyed
+ORDER BY shard, pos
+"""
+
+
+@workload("train_epoch_shuffle_plan", oracle=_EPOCH_ORACLE)
+def train_epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DETERMINISTIC EPOCH SHUFFLE: assign every training document a
+    pseudorandom-but-reproducible (shard, position) — the "shuffle the
+    corpus between epochs" step of a training-data pipeline, seedable by
+    swapping the key expression. The shuffle key is the portable md5-u32
+    word (uniform over doc ids, identical in Spark SQL and DuckDB), shard
+    is key % 8, and position is a shard-PARTITIONED rank ordered by
+    (key, doc_id) — exactly the repartition-by-shard +
+    sortWithinPartitions layout a 100 TB corpus export would use: ONE
+    hash shuffle on shard, per-shard local sort, never a global window.
+    Epoch 2 is the same plan keyed on md5(doc_id || ':2')."""
+    docs = load_table(spark, sf_dir, "documents")
+    keyed = docs.select(
+        "doc_id", F.expr(_EPOCH_KEY).alias("shuffle_key")
+    )
+    shard = (F.col("shuffle_key") % _EPOCH_SHARDS).cast("long")
+    w = Window.partitionBy(shard).orderBy(
+        F.col("shuffle_key").asc(), F.col("doc_id").asc()
+    )
+    return keyed.select(
+        shard.alias("shard"),
+        F.row_number().over(w).cast("long").alias("pos"),
+        "doc_id",
+    ).orderBy("shard", "pos")
+
+
+# --------------------------------------------------------------------------
+# C190 — dataset card: per-(source, lang) corpus composition report
+# --------------------------------------------------------------------------
+
+_NT_SQL = "len(string_split_regex(lower(trim(text)), '\\s+'))"
+
+_CARD_EXPRS = {
+    "mean_chars": "CAST(total_chars AS DOUBLE) / CAST(n_docs AS DOUBLE)",
+    "share_docs": "CAST(n_docs AS DOUBLE) / CAST(tot_docs AS DOUBLE)",
+    "share_tokens": "CAST(total_tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)",
+}
+
+_CARD_ORACLE = f"""
+WITH per AS (
+  SELECT source, lang,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+         CAST(SUM({_NT_SQL}) AS BIGINT) AS total_tokens
+  FROM documents GROUP BY source, lang
+),
+tot AS (
+  SELECT CAST(SUM(n_docs) AS BIGINT) AS tot_docs,
+         CAST(SUM(total_tokens) AS BIGINT) AS tot_tokens
+  FROM per
+)
+SELECT source, lang, n_docs, total_chars, total_tokens,
+       {_CARD_EXPRS["mean_chars"]} AS mean_chars,
+       {_CARD_EXPRS["share_docs"]} AS share_docs,
+       {_CARD_EXPRS["share_tokens"]} AS share_tokens
+FROM per CROSS JOIN tot
+"""
+
+
+@workload("train_dataset_card", oracle=_CARD_ORACLE)
+def train_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dataset card's composition table: per (source, language)
+    document and exact token counts plus each cell's share of the
+    corpus — the first table every training-data release publishes
+    (C4/Pile/RefinedWeb-style reporting). One grouped aggregation over
+    the corpus; the two corpus totals are bounded driver scalars that
+    re-enter as literals (no BNLJ, no global window). Token counts are
+    the engine's standard whitespace tokenization, stated identically
+    in SQL."""
+    from sample_data_pipeline_project_spark.functions.text import token_count
+
+    d = load_table(spark, sf_dir, "documents")
+    per = d.groupBy("source", "lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
+        F.sum(token_count("text")).cast("long").alias("total_tokens"),
+    )
+    tot = per.agg(F.sum("n_docs"), F.sum("total_tokens")).first()
+    tot_docs, tot_tokens = int(tot[0]), int(tot[1])
+    enriched = per.select(
+        "source",
+        "lang",
+        "n_docs",
+        "total_chars",
+        "total_tokens",
+        F.lit(tot_docs).cast("long").alias("tot_docs"),
+        F.lit(tot_tokens).cast("long").alias("tot_tokens"),
+    )
+    return enriched.select(
+        "source",
+        "lang",
+        "n_docs",
+        "total_chars",
+        "total_tokens",
+        F.expr(_CARD_EXPRS["mean_chars"]).alias("mean_chars"),
+        F.expr(_CARD_EXPRS["share_docs"]).alias("share_docs"),
+        F.expr(_CARD_EXPRS["share_tokens"]).alias("share_tokens"),
+    )
+
+
+# DuckDB twin of functions.text.tokens()
+_DUCK_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
+
+
+_MIX_BUDGET = 10_000_000
+
+
+@workload(
+    "train_temperature_mix",
+    oracle=f"""
+WITH per_source AS (
+  SELECT source,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(len({_DUCK_TOKENS})) AS BIGINT) AS n_tokens
+  FROM documents GROUP BY source
+),
+w AS (
+  SELECT *, SQRT(CAST(n_tokens AS DOUBLE)) AS raw_w FROM per_source
+)
+SELECT source, n_docs, n_tokens,
+       ROUND(raw_w / SUM(raw_w) OVER (), 6) AS mix_weight,
+       ROUND({_MIX_BUDGET} * (raw_w / SUM(raw_w) OVER ()) / n_tokens, 6)
+         AS effective_epochs
+FROM w
+""",
+)
+def train_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C231 — temperature-scaled source mixing (alpha = 1/2, i.e. T = 2):
+    per-source sampling weight ~ sqrt(token count), normalized; effective
+    epochs = budget * weight / tokens shows which tails get up-sampled
+    past 1 epoch. sqrt is IEEE-correctly-rounded in both engines, so the
+    weights value-hash (the whole-corpus normalizer is a |sources|-value
+    double sum; rounding at 1e-6 absorbs association order). One grouped
+    aggregate; the normalizer re-enters as a crossJoin of the 1-row
+    total (the rollup_share_of_parent pattern) — fully LAZY, unlike the
+    round-9 version whose construction-time .first() made merely
+    building the query run a Spark job — so no global window exists."""
+    docs = load_table(spark, sf_dir, "documents")
+    per_source = docs.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size(tokens("text"))).alias("n_tokens"),
+    )
+    w = per_source.withColumn(
+        "raw_w", F.sqrt(F.col("n_tokens").cast("double"))
+    )
+    total = w.agg(F.sum("raw_w").alias("__denom"))
+    return w.crossJoin(F.broadcast(total)).select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        F.round(F.col("raw_w") / F.col("__denom"), 6).alias("mix_weight"),
+        F.round(
+            F.lit(_MIX_BUDGET)
+            * (F.col("raw_w") / F.col("__denom"))
+            / F.col("n_tokens"),
+            6,
+        ).alias("effective_epochs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# C234 — greedy k-center diversity coreset (farthest-point traversal)
+# ---------------------------------------------------------------------------
+
+_KC_K = 5
+_KC_SEED_ID = 0
+
+
+def _kc_d2(v: str, c: str) -> F.Column:
+    """Exact squared L2 between two vector columns via three left folds
+    (bit-identical to the oracle's identical expression tree)."""
+    return dot(v, v) - F.lit(2.0) * dot(v, c) + dot(c, c)
+
+
+def _kc_duck_d2(v: str, c: str) -> str:
+    return f"({duck_dot(v, v)} - 2.0 * {duck_dot(v, c)} + {duck_dot(c, c)})"
+
+
+def _kc_oracle() -> str:
+    """Unrolled greedy selection: center i+1 = the point maximizing the
+    min squared-L2 distance to centers 1..i (ties -> lowest vec_id).
+    k is small and fixed, so the iterations unroll into chained CTEs."""
+    lines = [
+        "WITH pts AS (SELECT vec_id, embedding FROM embeddings),",
+        f"c1 AS (SELECT vec_id, embedding FROM pts WHERE vec_id = {_KC_SEED_ID})",
+    ]
+    for i in range(2, _KC_K + 1):
+        prev = ", ".join(f"c{j}" for j in range(1, i))
+        d2s = ", ".join(
+            f"{_kc_duck_d2('p.embedding', f'c{j}.embedding')}"
+            for j in range(1, i)
+        )
+        not_in = " AND ".join(
+            f"p.vec_id != c{j}.vec_id" for j in range(1, i)
+        )
+        lines.append(
+            f", c{i} AS (SELECT p.vec_id, p.embedding FROM pts p, {prev} "
+            f"WHERE {not_in} "
+            f"ORDER BY LEAST({d2s}) DESC, p.vec_id ASC LIMIT 1)"
+        )
+    sel = " UNION ALL ".join(
+        f"SELECT CAST({i} AS BIGINT) AS sel_order, vec_id FROM c{i}"
+        for i in range(1, _KC_K + 1)
+    )
+    return "\n".join(lines) + "\n" + sel
+
+
+@workload("sample_kcenter_coreset", oracle=_kc_oracle())
+def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C234 — greedy k-center coreset (farthest-point traversal): pick a
+    deterministic seed, then repeatedly take the point FARTHEST (max-min
+    exact squared L2, ties to lowest id) from the chosen set — the
+    classic 2-approximation for k-center and the standard
+    diversity-subset primitive in data curation (cover the embedding
+    space, don't oversample dense modes).
+
+    Spark-first: each of the k-1 selection rounds is a 1-row
+    TakeOrderedAndProject over a scan with all previously chosen centers
+    attached via BROADCAST crossJoins of 1-row frames — the whole
+    selection is ONE lazy Catalyst plan (building it launches no jobs),
+    k linear passes, no quadratic stage, no driver loop over data. At
+    100 TB each pass is a full scan, so k stays small (coresets use
+    k-center on SAMPLES per shard, then recurse — the per-shard plan is
+    exactly this one)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    pts = emb.select("vec_id", "embedding")
+    centers = [
+        pts.filter(F.col("vec_id") == _KC_SEED_ID).select(
+            F.col("vec_id").alias("c1_id"), F.col("embedding").alias("c1_v")
+        )
+    ]
+    for i in range(2, _KC_K + 1):
+        cand = pts
+        for c in centers:
+            cand = cand.crossJoin(F.broadcast(c))
+        chosen_ids = [F.col(f"c{j}_id") for j in range(1, i)]
+        d2s = [_kc_d2("embedding", f"c{j}_v") for j in range(1, i)]
+        min_d2 = d2s[0] if len(d2s) == 1 else F.least(*d2s)
+        keep = cand
+        for cid in chosen_ids:
+            keep = keep.filter(F.col("vec_id") != cid)
+        nxt = (
+            keep.select("vec_id", "embedding", min_d2.alias("md"))
+            .orderBy(F.desc("md"), F.asc("vec_id"))
+            .limit(1)
+            .select(
+                F.col("vec_id").alias(f"c{i}_id"),
+                F.col("embedding").alias(f"c{i}_v"),
+            )
+        )
+        centers.append(nxt)
+    out = None
+    for i, c in enumerate(centers, start=1):
+        row = c.select(
+            F.lit(i).cast("long").alias("sel_order"),
+            F.col(f"c{i}_id").alias("vec_id"),
+        )
+        out = row if out is None else out.unionAll(row)
+    return out
+
+
+# --------------------------------------------------------------------------
+# Deterministic hash sampling — reproducible TABLESAMPLE at any scale
+# --------------------------------------------------------------------------
+@workload(
+    "sample_hash_orders",
+    oracle="""
+SELECT o_orderpriority,
+       COUNT(*) AS n_sampled,
+       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sampled_total
+FROM orders
+WHERE substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')
+GROUP BY o_orderpriority
+""",
+)
+def sample_hash_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic 2/16 hash sample: keep rows whose key's md5 starts
+    with nibble 0 or 1. Unlike TABLESAMPLE/df.sample (RNG- and
+    partition-layout-dependent, irreproducible across engines, retries, or
+    repartitioning), a key-hash predicate picks the SAME logical rows
+    everywhere — the only sampling that is auditable on a 100 TB pipeline.
+    Embarrassingly parallel: no coordination, prunes before the shuffle."""
+    o = load_table(spark, sf_dir, "orders")
+    nibble = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
+    return (
+        o.filter(nibble.isin("0", "1"))
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_sampled"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sampled_total"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Stratified deterministic sampling (dataset-mix resampling)
+# --------------------------------------------------------------------------
+@workload(
+    "sample_stratified_mix",
+    oracle="""
+SELECT source, COUNT(*) AS n_sampled
+FROM documents
+WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN
+      (CASE WHEN length(source) = 4 THEN '0' ELSE 'x' END,
+       '1', '2', '3', '4', '5')
+GROUP BY source
+""",
+)
+def sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stratified deterministic sampling for dataset-mix rebalancing:
+    per-stratum keep rates applied as key-hash nibble thresholds —
+    single-digit sources (length 4, e.g. src0) keep 6/16, double-digit
+    sources keep 5/16. Same auditable-hash idea as sample_hash_orders,
+    with the rate a function of the stratum — the op that reshapes a
+    corpus toward a target mix without RNG state."""
+    d = load_table(spark, sf_dir, "documents")
+    nibble = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+    base_keep = nibble.isin("1", "2", "3", "4", "5")
+    extra_keep = (F.length("source") == 4) & (nibble == "0")
+    return (
+        d.filter(base_keep | extra_keep)
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n_sampled"))
+    )

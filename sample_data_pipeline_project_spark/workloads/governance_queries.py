@@ -24,16 +24,25 @@ Scale notes (the 100 TB shapes):
   - CUSUM windows run over the per-day AGGREGATE series partitioned by
     o_orderpriority — the windowed input is calendar-bounded (days), not
     row-bounded, so no partition grows with raw data volume.
+
+Layout and source workloads: z-order bit interleaving is pure integer
+arithmetic (div/mod by powers of two); the det_range Python DataSource
+generates pure-integer rows and the oracle states the identical
+generator over DuckDB's range(n); the partitioned round-trip certifies
+PartitionFilters on the read side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.functions.text import md5_prefix_uint32_sql
 from sample_data_pipeline_project_spark.sources.catalog import load_table
+from sample_data_pipeline_project_spark.sources.pydatasource import register_det_range
 from sample_data_pipeline_project_spark.sources.scratch import scratch_dir
 from sample_data_pipeline_project_spark.workloads import workload
+
 
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
@@ -566,11 +575,6 @@ def nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Order-insensitive table fingerprint (fast cross-replica equality check)
 # --------------------------------------------------------------------------
-from sample_data_pipeline_project_spark.functions.text import (  # noqa: E402
-    md5_prefix_uint32_sql,
-)
-
-
 def _md5_word2_sql(expr: str) -> str:
     """Hex chars 9..16 of md5(expr) as a u32 — the second independent
     fingerprint word (same portable substr/instr technique as
@@ -626,7 +630,7 @@ def dq_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: parquet schema-evolution certification (mergeSchema union)
+# Parquet schema-evolution certification (mergeSchema union)
 # --------------------------------------------------------------------------
 _EVO_ORACLE = """
 WITH unioned AS (
@@ -690,4 +694,428 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum("cents").cast("long").alias("sum_cents"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# Z-order layout cells: multi-dimensional clustering key for file layout
+# --------------------------------------------------------------------------
+_Z_BITS = 4  # 16 buckets per dimension -> 256 cells
+_Z_PRICE_WIDTH = 40000.0
+
+
+def _zvalue_sql(xb: str, yb: str, intdiv: str) -> str:
+    """Bit-interleave two {0..15} bucket ids into an 8-bit z-value using
+    only integer div/mod (engine-portable; `intdiv` is the engine's
+    integer-division operator: Spark 'DIV', DuckDB '//')."""
+    terms = []
+    for i in range(_Z_BITS):
+        bit_x = f"((({xb}) {intdiv} {1 << i}) % 2)"
+        bit_y = f"((({yb}) {intdiv} {1 << i}) % 2)"
+        terms.append(f"({bit_x} * {1 << (2 * i)})")
+        terms.append(f"({bit_y} * {1 << (2 * i + 1)})")
+    return " + ".join(terms)
+
+
+_XB = "CAST(o_custkey % 16 AS INT)"
+_YB = (
+    f"CAST(LEAST(15, CAST(FLOOR(o_totalprice / {_Z_PRICE_WIDTH}) AS INT)) AS INT)"
+)
+
+_Z_ORACLE = f"""
+WITH cells AS (
+  SELECT {_zvalue_sql(_XB, _YB, '//')} AS z_cell,
+         CAST(o_totalprice AS DECIMAL(18,2)) AS price
+  FROM orders
+)
+SELECT z_cell, COUNT(*) AS n_orders,
+       CAST(SUM(price) AS DOUBLE) AS total_price
+FROM cells GROUP BY z_cell
+"""
+
+
+@workload("layout_zorder_cells", oracle=_Z_ORACLE)
+def layout_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-ORDER (Morton) layout cells over orders: bucketize (custkey,
+    totalprice) to 4 bits each and bit-interleave into an 8-bit z-value —
+    the multi-dimensional clustering key that, used as a sort/partition
+    key at write time, gives min-max file skipping on BOTH dimensions at
+    once (each z-cell is a rectangle in (custkey, price) space, so a range
+    predicate on either dimension touches a provably bounded subset of
+    cells — `sources/layout.py:write_zordered` is the writer and
+    tests/test_layout.py measures the pruning). This workload is the
+    driver-gated cell-assignment/aggregation half: per-cell row counts and
+    revenue, interleaving via integer div/mod only — exact cross-engine."""
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        o.select(
+            F.expr(_zvalue_sql(_XB, _YB, "DIV")).alias("z_cell"),
+            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+        )
+        .groupBy("z_cell")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("price").cast("double").alias("total_price"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Join-key skew diagnostic
+# --------------------------------------------------------------------------
+_SKEW_TOP = 5
+
+_SKEW_ORACLE = f"""
+WITH per_key AS (
+  SELECT l_suppkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_suppkey
+),
+tot AS (
+  SELECT SUM(cnt) AS total_rows, COUNT(*) AS n_keys FROM per_key
+)
+SELECT p.l_suppkey, p.cnt,
+       CAST(p.cnt AS DOUBLE) / t.total_rows AS share,
+       CAST(p.cnt AS DOUBLE) * t.n_keys / t.total_rows AS skew_vs_avg
+FROM per_key p CROSS JOIN tot t
+ORDER BY p.cnt DESC, p.l_suppkey ASC
+LIMIT {_SKEW_TOP}
+"""
+
+
+@workload("dq_skew_report", oracle=_SKEW_ORACLE)
+def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JOIN-KEY SKEW diagnostic for lineitem.l_suppkey — the operational
+    pre-check before a 100 TB shuffle join: per-key row counts, the top-{k}
+    heaviest keys, each key's share of all rows and its ratio to the mean
+    key (skew_vs_avg >> 1 means AQE skew-join splitting or salting —
+    operators/skewjoin.py — is warranted). One keyed aggregate plus a
+    broadcast single-row total; top-k via TakeOrderedAndProject. All
+    divisions are exact-integer -> double: bit-identical cross-engine."""
+    li = load_table(spark, sf_dir, "lineitem")
+    per_key = li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt"))
+    tot = per_key.agg(
+        F.sum("cnt").alias("total_rows"), F.count(F.lit(1)).alias("n_keys")
+    )
+    return (
+        per_key.crossJoin(F.broadcast(tot))
+        .select(
+            "l_suppkey",
+            "cnt",
+            (F.col("cnt").cast("double") / F.col("total_rows")).alias("share"),
+            (
+                F.col("cnt").cast("double")
+                * F.col("n_keys")
+                / F.col("total_rows")
+            ).alias("skew_vs_avg"),
+        )
+        .orderBy(F.col("cnt").desc(), F.col("l_suppkey").asc())
+        .limit(_SKEW_TOP)
+    )
+
+
+# --------------------------------------------------------------------------
+# C173 — functional-dependency discovery scores (g3 violation rate)
+# --------------------------------------------------------------------------
+
+_FD_SPECS: list[tuple[str, str, str]] = [
+    ("orders", "o_orderkey", "o_orderdate"),
+    ("orders", "o_custkey", "o_orderpriority"),
+    ("lineitem", "l_orderkey", "l_returnflag"),
+    ("lineitem", "l_partkey", "l_suppkey"),
+]
+
+
+def _fd_sql(table: str, lhs: str, rhs: str) -> str:
+    return f"""
+SELECT '{table}.{lhs}->{rhs}' AS fd,
+       CAST(SUM(cnt) AS BIGINT) AS n_rows,
+       CAST(COUNT(*) AS BIGINT) AS n_lhs,
+       CAST(SUM(cnt) - SUM(mx) AS BIGINT) AS violations,
+       CAST(SUM(cnt) - SUM(mx) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE) AS g3_rate
+FROM (
+  SELECT {lhs}, CAST(SUM(c) AS BIGINT) AS cnt, CAST(MAX(c) AS BIGINT) AS mx
+  FROM (
+    SELECT {lhs}, {rhs}, CAST(COUNT(*) AS BIGINT) AS c
+    FROM {table} GROUP BY {lhs}, {rhs}
+  ) GROUP BY {lhs}
+)"""
+
+
+_FD_ORACLE = "\nUNION ALL\n".join(_fd_sql(*spec) for spec in _FD_SPECS)
+
+
+@workload("dq_functional_dependency", oracle=_FD_ORACLE)
+def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate functional-dependency profiling: for each candidate
+    X -> Y, the g3 measure — the minimum fraction of rows to delete for
+    the FD to hold exactly (n_rows minus, per X group, the count of the
+    plurality Y value). Two grouped aggregations per candidate, both
+    keyed on the candidate columns — fully distributed, no windows, and
+    the per-candidate results union into one tiny report. The schema-
+    inference primitive data-quality suites (Deequ/Metanome-style) run
+    before trusting a key or denormalizing a column at warehouse scale."""
+    frames = []
+    for table, lhs, rhs in _FD_SPECS:
+        t = load_table(spark, sf_dir, table)
+        pairs = t.groupBy(lhs, rhs).agg(F.count(F.lit(1)).cast("long").alias("c"))
+        per_lhs = pairs.groupBy(lhs).agg(
+            F.sum("c").cast("long").alias("cnt"),
+            F.max("c").cast("long").alias("mx"),
+        )
+        frames.append(
+            per_lhs.agg(
+                F.lit(f"{table}.{lhs}->{rhs}").alias("fd"),
+                F.sum("cnt").cast("long").alias("n_rows"),
+                F.count(F.lit(1)).cast("long").alias("n_lhs"),
+                (F.sum("cnt") - F.sum("mx")).cast("long").alias("violations"),
+                (
+                    (F.sum("cnt") - F.sum("mx")).cast("long").cast("double")
+                    / F.sum("cnt").cast("long").cast("double")
+                ).alias("g3_rate"),
+            )
+        )
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+# --------------------------------------------------------------------------
+# C183 — integer-keyspace gap detection (missing-id islands)
+# --------------------------------------------------------------------------
+
+_GAP_BUCKET = 4096
+_GAP_TOP_K = 100
+
+_IDGAP_ORACLE = f"""
+WITH ks AS (
+  SELECT DISTINCT o_orderkey AS k FROM orders WHERE o_orderstatus = 'F'
+),
+seq AS (
+  SELECT k, LAG(k) OVER (ORDER BY k) AS prev FROM ks
+)
+SELECT CAST(prev + 1 AS BIGINT) AS gap_start,
+       CAST(k - 1 AS BIGINT) AS gap_end,
+       CAST(k - prev - 1 AS BIGINT) AS gap_len
+FROM seq
+WHERE prev IS NOT NULL AND k - prev > 1
+ORDER BY gap_len DESC, gap_start ASC
+LIMIT {_GAP_TOP_K}
+"""
+
+
+@workload("dq_sequential_id_gaps", oracle=_IDGAP_ORACLE)
+def dq_sequential_id_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Missing-id detection over an integer key domain: the top-{k}
+    largest holes in the o_orderkey sequence of the FULFILLED slice
+    (the testdata keyspace is dense, so the status filter is what makes
+    holes — exactly the 'which id ranges never reached state X' audit).
+    The successor scan never sorts globally: keys
+    bucket by k div {b}, LAG runs inside (bucket)-partitioned windows,
+    and the bucket-boundary gaps come from the bounded per-bucket
+    (min, max) summary — keyspace/{b} rows — stitched on the driver
+    (two-level recursion of the same machinery at larger domains). The
+    final top-k is ORDER BY + LIMIT (TakeOrderedAndProject). The oracle
+    states the same gaps from a plain single-node LAG. This is the DQ
+    primitive behind 'did ingestion drop a batch?' on monotone ids."""
+    o = load_table(spark, sf_dir, "orders")
+    ks = (
+        o.filter(F.col("o_orderstatus") == "F")
+        .select(F.col("o_orderkey").alias("k"))
+        .distinct()
+    )
+    ks = ks.withColumn("bkt", F.expr(f"k div {_GAP_BUCKET}"))
+    w = Window.partitionBy("bkt").orderBy("k")
+    inner = (
+        ks.withColumn("prev", F.lag("k").over(w))
+        .filter(F.col("prev").isNotNull() & (F.col("k") - F.col("prev") > 1))
+        .select(
+            (F.col("prev") + 1).cast("long").alias("gap_start"),
+            (F.col("k") - 1).cast("long").alias("gap_end"),
+            (F.col("k") - F.col("prev") - 1).cast("long").alias("gap_len"),
+        )
+    )
+    bsum = sorted(
+        ks.groupBy("bkt").agg(F.min("k").alias("lo"), F.max("k").alias("hi")).collect(),
+        key=lambda r: r["bkt"],
+    )
+    boundary = []
+    for prev_row, row in zip(bsum, bsum[1:]):
+        if row["lo"] - prev_row["hi"] > 1:
+            boundary.append(
+                (prev_row["hi"] + 1, row["lo"] - 1, row["lo"] - prev_row["hi"] - 1)
+            )
+    gaps = inner
+    if boundary:
+        gaps = gaps.unionByName(
+            spark.createDataFrame(
+                boundary, "gap_start long, gap_end long, gap_len long"
+            )
+        )
+    return gaps.orderBy(F.col("gap_len").desc(), F.col("gap_start").asc()).limit(
+        _GAP_TOP_K
+    )
+
+
+# --------------------------------------------------------------------------
+# C187 — hive-partitioned write + partition-pruned read-back certification
+# --------------------------------------------------------------------------
+
+_PART_ORACLE = """
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(ROUND(value, 2) AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+FROM events
+WHERE event_type IN ('click', 'view')
+GROUP BY event_type
+"""
+
+
+@workload("source_partitioned_roundtrip", oracle=_PART_ORACLE)
+def source_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hive-partitioned layout certification: write events partitioned
+    by event_type to a per-process scratch path, read the layout back
+    with a partition filter, and prove the round trip preserves the
+    data (per-type counts and exact DECIMAL value sums vs the oracle on
+    the ORIGINAL table). The workload HARD-FAILS unless the read plan
+    shows partition pruning (PartitionFilters on event_type) — a silent
+    full-layout scan is a correctness bug of the layout, not a perf
+    footnote, because partition pruning is the entire point of the
+    directory scheme at 100 TB. Timestamps round-trip through the
+    engine's NTZ normalization (sources/catalog.py)."""
+    e = load_table(spark, sf_dir, "events")
+    root = scratch_dir("part_roundtrip")
+    e.write.partitionBy("event_type").mode("overwrite").parquet(root)
+    back = spark.read.parquet(root).filter(
+        F.col("event_type").isin("click", "view")
+    )
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    if "PartitionFilters: [" not in plan or "event_type" not in plan.split(
+        "PartitionFilters", 1
+    )[1].split("]", 1)[0]:
+        raise AssertionError(
+            "partitioned read-back did not prune on event_type; plan:\n" + plan
+        )
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value"), 2).cast("decimal(18,2)"))
+        .cast("double")
+        .alias("sum_value"),
+    )
+
+
+# --------------------------------------------------------------------------
+# C195 — Python DataSource API: partitioned deterministic generator
+# --------------------------------------------------------------------------
+
+_DS_N = 100_000
+_DS_PARTS = 8
+
+_DS_ORACLE = f"""
+WITH t AS (
+  SELECT CAST(r.range AS BIGINT) AS id,
+         CAST(r.range % 10 AS BIGINT) AS bucket,
+         CAST((r.range * 2654435761) % 1000003 AS BIGINT) AS val
+  FROM range({_DS_N}) r
+)
+SELECT bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(val) AS BIGINT) AS sum_val,
+       CAST(MIN(val) AS BIGINT) AS min_val,
+       CAST(MAX(val) AS BIGINT) AS max_val,
+       CAST(SUM(CASE WHEN val % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_even
+FROM t GROUP BY bucket
+"""
+
+
+@workload("source_python_datasource", oracle=_DS_ORACLE)
+def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark 4 Python DataSource API exercised end to end: a custom
+    `DataSource` subclass (sources/pydatasource.py) declares a schema,
+    consumes reader options, plans {parts} splittable partitions, and
+    streams Arrow batches per partition — the contract for exposing any
+    external system (API, queue, bespoke format) as a distributed table
+    WITHOUT a JVM connector. The generator is pure integer arithmetic
+    (Knuth multiplicative mix), so the oracle states the identical rows
+    from range({n}) and the whole source rides the ordinary value-hash
+    gate. Partition count is the parallelism knob; each partition owns a
+    residue class, so the split is balanced and order-independent."""
+    register_det_range(spark)
+    t = (
+        spark.read.format("det_range")
+        .option("n", str(_DS_N))
+        .option("partitions", str(_DS_PARTS))
+        .load()
+    )
+    return t.groupBy("bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum("val").cast("long").alias("sum_val"),
+        F.min("val").cast("long").alias("min_val"),
+        F.max("val").cast("long").alias("max_val"),
+        F.sum(F.when(F.col("val") % 2 == 0, 1).otherwise(0))
+        .cast("long")
+        .alias("n_even"),
+    )
+
+
+# --------------------------------------------------------------------------
+# C223 — cross-field data-quality rule engine (one pass, unpivoted report)
+# --------------------------------------------------------------------------
+_DQ_RULES: list[tuple[str, str]] = [
+    # (rule_name, VIOLATION predicate — true means the row FAILS the rule)
+    ("ship_before_order", "l_shipdate < o_orderdate"),
+    ("discount_out_of_range", "l_discount < 0 OR l_discount > 1"),
+    ("nonpositive_price", "l_extendedprice <= 0"),
+    ("negative_tax", "l_tax < 0"),
+    ("zero_quantity", "l_quantity < 1"),
+]
+
+_DQRULES_ORACLE = f"""
+WITH j AS (
+  SELECT l.*, o.o_orderdate
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+),
+agg AS (
+  SELECT COUNT(*) AS n_checked,
+         {', '.join(
+             f"COUNT(*) FILTER (WHERE {pred}) AS v_{name}"
+             for name, pred in _DQ_RULES)}
+  FROM j
+)
+{' UNION ALL '.join(
+    f"SELECT '{name}' AS rule_name, CAST(n_checked AS BIGINT) AS n_checked, "
+    f"CAST(v_{name} AS BIGINT) AS n_violations, "
+    f"ROUND(CAST(v_{name} AS DOUBLE) / n_checked, 6) AS violation_rate "
+    f"FROM agg" for name, _ in _DQ_RULES)}
+"""
+
+
+@workload("dq_cross_field_rules", oracle=_DQRULES_ORACLE)
+def dq_cross_field_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CROSS-FIELD DQ RULE ENGINE: five referential/range constraints
+    (ship-before-order needs the lineitem->orders join; the rest are
+    row-local) evaluated in ONE aggregation pass — conditional counts,
+    never five scans — then unpivoted to the per-rule report shape
+    (rule, checked, violations, rate) via stack(). Adding a rule adds
+    one counter to the same pass. This is the constraint-audit layer
+    over the single-column profiles of dq_profile_orders (C11) and the
+    FK audit (C62)."""
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    j = l.join(o, l["l_orderkey"] == o["o_orderkey"])
+    aggs = [F.count(F.lit(1)).alias("n_checked")] + [
+        F.count(F.when(F.expr(pred), 1)).alias(f"v_{name}")
+        for name, pred in _DQ_RULES
+    ]
+    agg = j.agg(*aggs)
+    stack_expr = "stack({n}, {pairs}) AS (rule_name, n_violations)".format(
+        n=len(_DQ_RULES),
+        pairs=", ".join(f"'{name}', v_{name}" for name, _ in _DQ_RULES),
+    )
+    return agg.select("n_checked", F.expr(stack_expr)).select(
+        "rule_name",
+        F.col("n_checked").cast("long"),
+        F.col("n_violations").cast("long"),
+        F.round(
+            F.col("n_violations").cast("double") / F.col("n_checked"), 6
+        ).alias("violation_rate"),
     )

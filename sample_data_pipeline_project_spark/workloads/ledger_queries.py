@@ -6,12 +6,13 @@ ANSI SQL (same LEDGER_CTE prefix) for the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.ledger.derive import LEDGER_CTE, derived_ledger
 from sample_data_pipeline_project_spark.ledger import tasks
+from sample_data_pipeline_project_spark.ledger.derive import LEDGER_CTE, derived_ledger
 from sample_data_pipeline_project_spark.workloads import workload
+
 
 _DAY = "2024-01-05"
 _LEDGER_COLS = (
@@ -95,9 +96,7 @@ def ledger_gaps_one_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tasks.gaps_df(derived_ledger(spark, sf_dir), _DAY, "click", "idx_1")
 
 
-@workload(
-    "ledger_gaps_all_groups",
-    oracle=f"""
+_GAPS_ALL_GROUPS_ORACLE = f"""
 WITH {LEDGER_CTE},
 scoped AS (
   SELECT *,
@@ -112,8 +111,10 @@ SELECT pipeline_name, index_name, query_window_start_day AS day,
        query_window_start_ts AS missing_until_ts
 FROM scoped
 WHERE prev_end_ts IS NOT NULL AND query_window_start_ts != prev_end_ts
-""",
-)
+"""
+
+
+@workload("ledger_gaps_all_groups", oracle=_GAPS_ALL_GROUPS_ORACLE)
 def ledger_gaps_all_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 at scale — same gap query over the WHOLE ledger, window
     partitioned by (pipeline, index, day): parallelism = #groups instead of
@@ -362,7 +363,7 @@ def ledger_coverage_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: backfill work plan — the complement of the coverage islands
+# Backfill work plan — the complement of the coverage islands
 # --------------------------------------------------------------------------
 _BACKFILL_ORACLE = f"""
 WITH {LEDGER_CTE},
@@ -423,7 +424,7 @@ def ledger_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: SLA breach audit over run windows
+# SLA breach audit over run windows
 # --------------------------------------------------------------------------
 _SLA_US = 7_200_000_000  # 2 hours
 
@@ -463,4 +464,168 @@ def ledger_sla_breach_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_breach"),
         F.max("dur_us").cast("long").alias("max_dur_us"),
+    )
+
+
+# --------------------------------------------------------------------------
+# C170 — sweep-line max interval concurrency per (pipeline, index)
+# --------------------------------------------------------------------------
+
+_CONC_ORACLE = f"""
+WITH {LEDGER_CTE},
+pts AS (
+  SELECT pipeline_name, index_name, query_window_start_ts AS ts,
+         1 AS delta, run_id
+  FROM pipeline_runs
+  UNION ALL
+  SELECT pipeline_name, index_name, query_window_end_ts AS ts,
+         -1 AS delta, run_id
+  FROM pipeline_runs
+),
+swept AS (
+  SELECT pipeline_name, index_name, delta,
+         SUM(delta) OVER (
+           PARTITION BY pipeline_name, index_name
+           ORDER BY ts, delta, run_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+         ) AS conc
+  FROM pts
+)
+SELECT pipeline_name, index_name,
+       CAST(SUM(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_runs,
+       CAST(MAX(conc) AS BIGINT) AS max_concurrent
+FROM swept
+GROUP BY pipeline_name, index_name
+"""
+
+
+@workload("ledger_max_concurrency", oracle=_CONC_ORACLE)
+def ledger_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Max number of SIMULTANEOUSLY active runs per (pipeline, index) —
+    the classic sweep line: +1 at each half-open interval's start, -1 at
+    its end, running sum in (ts, delta, run_id) order (ends sort before
+    starts at the same instant, so back-to-back runs never double-count),
+    max per group. The running sum is a window PARTITIONED BY the group
+    key — each partition is one pipeline/index stream, so the sweep
+    parallelizes across groups at any scale; no global sort exists
+    anywhere in the plan. This is the capacity-planning primitive for a
+    run ledger (reference surface: snowflake_tasks.py interval queries)."""
+    runs = derived_ledger(spark, sf_dir)
+    starts = runs.select(
+        "pipeline_name",
+        "index_name",
+        F.col("query_window_start_ts").alias("ts"),
+        F.lit(1).alias("delta"),
+        "run_id",
+    )
+    ends = runs.select(
+        "pipeline_name",
+        "index_name",
+        F.col("query_window_end_ts").alias("ts"),
+        F.lit(-1).alias("delta"),
+        "run_id",
+    )
+    w = (
+        Window.partitionBy("pipeline_name", "index_name")
+        .orderBy("ts", "delta", "run_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    swept = starts.unionByName(ends).withColumn("conc", F.sum("delta").over(w))
+    return swept.groupBy("pipeline_name", "index_name").agg(
+        F.sum(F.when(F.col("delta") == 1, 1).otherwise(0))
+        .cast("long")
+        .alias("n_runs"),
+        F.max("conc").cast("long").alias("max_concurrent"),
+    )
+
+
+# --------------------------------------------------------------------------
+# C180 — bitemporal ledger: event-time latest AS OF a system-time cut
+# --------------------------------------------------------------------------
+
+_BITEMP_ORACLE = f"""
+WITH {LEDGER_CTE},
+cut AS (SELECT CAST(MAX(run_id) // 2 AS BIGINT) AS s FROM pipeline_runs),
+asof_v AS (
+  SELECT pipeline_name, index_name, run_id, query_window_start_ts,
+         ROW_NUMBER() OVER (PARTITION BY pipeline_name, index_name
+                            ORDER BY query_window_start_ts DESC,
+                                     run_id DESC) AS rn
+  FROM pipeline_runs, cut
+  WHERE run_id <= cut.s
+),
+now_ AS (
+  SELECT pipeline_name, index_name, run_id, query_window_start_ts,
+         ROW_NUMBER() OVER (PARTITION BY pipeline_name, index_name
+                            ORDER BY query_window_start_ts DESC,
+                                     run_id DESC) AS rn
+  FROM pipeline_runs
+)
+SELECT n.pipeline_name, n.index_name,
+       a.run_id AS asof_run_id,
+       a.query_window_start_ts AS asof_start_ts,
+       n.run_id AS now_run_id,
+       n.query_window_start_ts AS now_start_ts,
+       (a.run_id IS DISTINCT FROM n.run_id) AS changed
+FROM now_ n
+LEFT JOIN asof_v a
+  ON n.pipeline_name = a.pipeline_name AND n.index_name = a.index_name
+ AND a.rn = 1
+WHERE n.rn = 1
+"""
+
+
+@workload("ledger_bitemporal_asof", oracle=_BITEMP_ORACLE)
+def ledger_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bitemporal ledger reconstruction: the ledger's append-only run_id
+    is its SYSTEM time, the query windows its EVENT time. 'What did the
+    latest-run-per-(pipeline, index) view look like when only the first
+    half of the ledger had been ingested?' — filter to run_id <= cut
+    (system-time travel over an append-only table needs no snapshots,
+    just a monotone ingest id), take the event-time latest per group on
+    both the cut and the full ledger, and diff. The cut is a bounded
+    driver scalar (MAX // 2); per-group latest rows are key-partitioned
+    windows. This is the audit query behind 'which groups' current state
+    is newer than snapshot S' — reference ledger semantics
+    (snowflake_tasks.py latest-record queries) extended along the system
+    axis."""
+    runs = derived_ledger(spark, sf_dir)
+    cut = runs.agg(F.expr("CAST(MAX(run_id) div 2 AS BIGINT)").alias("s")).collect()[
+        0
+    ]["s"]
+    w = Window.partitionBy("pipeline_name", "index_name").orderBy(
+        F.col("query_window_start_ts").desc(), F.col("run_id").desc()
+    )
+    base = runs.select(
+        "pipeline_name", "index_name", "run_id", "query_window_start_ts"
+    )
+    asof = (
+        base.filter(F.col("run_id") <= F.lit(cut))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "pipeline_name",
+            "index_name",
+            F.col("run_id").alias("asof_run_id"),
+            F.col("query_window_start_ts").alias("asof_start_ts"),
+        )
+    )
+    now = (
+        base.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "pipeline_name",
+            "index_name",
+            F.col("run_id").alias("now_run_id"),
+            F.col("query_window_start_ts").alias("now_start_ts"),
+        )
+    )
+    return now.join(asof, ["pipeline_name", "index_name"], "left").select(
+        "pipeline_name",
+        "index_name",
+        "asof_run_id",
+        "asof_start_ts",
+        "now_run_id",
+        "now_start_ts",
+        (~F.col("asof_run_id").eqNullSafe(F.col("now_run_id"))).alias("changed"),
     )

@@ -1,23 +1,59 @@
 """Streaming workloads: incremental execution cross-checked against the
 batch SQL oracle — the correctness statement that matters for a streaming
 engine is exactly "incremental result == batch result".
+
+A stream workload and its batch twin share one oracle, and where the
+Spark side needs the same fold or estimate, one helper: the stream half
+imports it from the batch family's module.
 """
 
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.ledger.derive import LEDGER_CTE
 from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.sources.pydatasource import (
+    register_det_range_stream,
+)
+from sample_data_pipeline_project_spark.sources.scratch import scratch_dir
 from sample_data_pipeline_project_spark.streaming.eventtime import (
     hourly_counts_stream,
     run_stream_to_table,
     stream_events,
 )
-from sample_data_pipeline_project_spark.sources.scratch import scratch_dir
 from sample_data_pipeline_project_spark.workloads import workload
+from sample_data_pipeline_project_spark.workloads.dedup_queries import (
+    _BANDS,
+    _INC_DELTA_MOD,
+    _NUM_HASHES,
+    _duck_minhash_oracle,
+)
+from sample_data_pipeline_project_spark.workloads.event_queries import (
+    _BM_ORACLE,
+    _DEBOUNCE_ORACLE,
+    _SLIDING_ORACLE,
+)
+from sample_data_pipeline_project_spark.workloads.ledger_queries import (
+    _GAPS_ALL_GROUPS_ORACLE,
+)
+from sample_data_pipeline_project_spark.workloads.text_queries import (
+    _CM_SEEDS,
+    _cm_bucket_sql,
+    _cm_estimates,
+    _cm_oracle,
+)
+from sample_data_pipeline_project_spark.workloads.timeseries_queries import (
+    _EWMA_ORACLE,
+    _HOLT_ORACLE,
+    _holt_fold,
+)
+
 
 # Batch oracle of the same aggregation (no n_users: exact COUNT(DISTINCT)
 # is not incrementally computable, see hourly_counts_stream).
@@ -203,28 +239,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_table(out, output_mode="append")
 
 
-from sample_data_pipeline_project_spark.ledger.derive import LEDGER_CTE  # noqa: E402
-
-
-@workload(
-    "stream_ledger_gaps",
-    oracle=f"""
-WITH {LEDGER_CTE},
-scoped AS (
-  SELECT *,
-         LAG(query_window_end_ts) OVER (
-           PARTITION BY pipeline_name, index_name, query_window_start_day
-           ORDER BY query_window_start_ts ASC, run_id ASC
-         ) AS prev_end_ts
-  FROM pipeline_runs
-)
-SELECT pipeline_name, index_name, query_window_start_day AS day,
-       prev_end_ts AS missing_from_ts,
-       query_window_start_ts AS missing_until_ts
-FROM scoped
-WHERE prev_end_ts IS NOT NULL AND query_window_start_ts != prev_end_ts
-""",
-)
+@workload("stream_ledger_gaps", oracle=_GAPS_ALL_GROUPS_ORACLE)
 def stream_ledger_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 as a STREAM — the reference's gap check running online: the
     event stream is mapped to ledger runs (same column definitions as the
@@ -395,14 +410,6 @@ def stream_ledger_gaps_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CONTINUOUSLY — delta documents arrive as micro-batches and are banded
 # against a signature store that grows as batches commit.
 # --------------------------------------------------------------------------
-from sample_data_pipeline_project_spark.workloads.dedup_queries import (  # noqa: E402
-    _BANDS,
-    _INC_DELTA_MOD,
-    _NUM_HASHES,
-    _duck_minhash_oracle,
-)
-
-
 @workload(
     "stream_minhash_dedup",
     oracle=_duck_minhash_oracle(
@@ -483,11 +490,6 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(result)
 
 
-from sample_data_pipeline_project_spark.workloads.analytics_round3 import (  # noqa: E402
-    _EWMA_ORACLE,
-)
-
-
 @workload("stream_ewma", oracle=_EWMA_ORACLE)
 def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C33 as a STREAM — per-user truncated-kernel EWMA running online via
@@ -503,11 +505,6 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = stream_events(spark, sf_dir)
     return run_stream_to_table(ewma_stateful(events), output_mode="append")
-
-
-from sample_data_pipeline_project_spark.workloads.event_queries import (  # noqa: E402
-    _DEBOUNCE_ORACLE,
-)
 
 
 @workload("stream_debounce", oracle=_DEBOUNCE_ORACLE)
@@ -539,20 +536,6 @@ def stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SLIDING_ORACLE = """
-WITH offsets AS (SELECT * FROM (VALUES (0), (1800)) AS t(off)),
-slid AS (
-  SELECT e.*,
-         make_timestamp((((floor((epoch(e.ts) - o.off) / 3600) * 3600)::BIGINT + o.off) * 1000000)::BIGINT) AS window_start
-  FROM events e CROSS JOIN offsets o
-)
-SELECT window_start, COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-FROM slid
-GROUP BY window_start
-"""
-
-
 @workload("stream_sliding_window", oracle=_SLIDING_ORACLE)
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B6 (streaming) — the 1h/30min SLIDING window aggregation as a real
@@ -571,14 +554,6 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming Count-Min sketch: mergeable counters maintained incrementally
 # --------------------------------------------------------------------------
-from sample_data_pipeline_project_spark.workloads.text_queries import (  # noqa: E402
-    _CM_SEEDS,
-    _CM_TOP,
-    _cm_bucket_sql,
-    _cm_oracle,
-)
-
-
 @workload("stream_countmin_merge", oracle=_cm_oracle())
 def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Count-Min sketch maintained AS A STREAM: documents arrive as
@@ -633,23 +608,7 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = run_stream_to_table(
         hashed.groupBy("seed", "bucket").agg(F.count(F.lit(1)).alias("c"))
     )
-    top = tc.orderBy(F.col("exact_count").desc(), F.col("tok").asc()).limit(
-        _CM_TOP
-    )
-    probes = top.select(
-        "tok", "exact_count", F.explode(bucket_structs).alias("h")
-    ).select("tok", "exact_count", "h.seed", "h.bucket")
-    est = (
-        probes.join(F.broadcast(cm), ["seed", "bucket"])
-        .groupBy("tok", "exact_count")
-        .agg(F.min("c").alias("cm_estimate"))
-    )
-    return est.select(
-        "tok",
-        F.col("exact_count").cast("long"),
-        F.col("cm_estimate").cast("long"),
-        (F.col("cm_estimate") >= F.col("exact_count")).alias("overestimate_ok"),
-    )
+    return _cm_estimates(tc, cm, bucket_structs)
 
 
 @workload(
@@ -985,33 +944,9 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: bitmap-block exact distinct maintained AS A STREAM
+# Bitmap-block exact distinct maintained AS A STREAM
 # --------------------------------------------------------------------------
-_STREAM_BM_ORACLE = """
-WITH blocks AS (
-  SELECT event_type,
-         user_id // 62 AS blk,
-         bit_or(CAST(1 AS BIGINT) << CAST(user_id % 62 AS INTEGER)) AS bits
-  FROM events
-  GROUP BY event_type, user_id // 62
-),
-agg AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS BIGINT) AS n_blocks,
-         CAST(SUM(bit_count(bits)) AS BIGINT) AS distinct_bitmap
-  FROM blocks GROUP BY event_type
-),
-exact AS (
-  SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct
-  FROM events GROUP BY event_type
-)
-SELECT a.event_type, a.n_blocks, a.distinct_bitmap,
-       a.distinct_bitmap = e.exact_distinct AS matches_exact
-FROM agg a JOIN exact e ON a.event_type = e.event_type
-"""
-
-
-@workload("stream_bitmap_distinct", oracle=_STREAM_BM_ORACLE)
+@workload("stream_bitmap_distinct", oracle=_BM_ORACLE)
 def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bitmap-block EXACT-DISTINCT sketch (sketch_bitmap_distinct)
     maintained ONLINE: events arrive as micro-batches and a complete-mode
@@ -1053,14 +988,8 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: Holt linear trend fed by a STREAMING weekly aggregate
+# Holt linear trend fed by a STREAMING weekly aggregate
 # --------------------------------------------------------------------------
-from sample_data_pipeline_project_spark.workloads.analytics_round4 import (  # noqa: E402
-    _HOLT_ORACLE,
-    _HOLT_STEP_SPARK,
-)
-
-
 @workload("stream_holt_forecast", oracle=_HOLT_ORACLE)
 def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Holt linear-trend forecaster (C146) fed ONLINE: orders arrive
@@ -1089,26 +1018,132 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the materialized stream result backs both the fold below
     # and the driver's collect
     daily = materialize(run_stream_to_table(weekly), "cache")
-    ser = daily.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_weeks"),
-        F.expr(
-            "transform(array_sort(collect_list(struct(d, CAST(v AS DOUBLE) AS y))),"
-            " x -> named_struct('a', x.y, 'b', CAST('0.0' AS DOUBLE)))"
-        ).alias("ys"),
+    return _holt_fold(daily)
+
+
+# --------------------------------------------------------------------------
+# C196 — streaming Python DataSource (SimpleDataSourceStreamReader)
+# --------------------------------------------------------------------------
+
+_DSS_N = 30_000
+_DSS_CHUNK = 10_000
+
+_DSS_ORACLE = f"""
+WITH t AS (
+  SELECT CAST(r.range AS BIGINT) AS id,
+         CAST(r.range % 10 AS BIGINT) AS bucket,
+         CAST((r.range * 2654435761) % 1000003 AS BIGINT) AS val
+  FROM range({_DSS_N}) r
+)
+SELECT bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(val) AS BIGINT) AS sum_val,
+       CAST(MAX(val) AS BIGINT) AS max_val
+FROM t GROUP BY bucket
+"""
+
+
+@workload("stream_python_datasource", oracle=_DSS_ORACLE)
+def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark 4 STREAMING Python DataSource contract
+    (SimpleDataSourceStreamReader) exercised end to end: dict offsets,
+    chunked incremental read() on the driver with prefetch, exact
+    readBetweenOffsets replay for recovery — the no-JVM path for tailing
+    an external queue/API as a structured stream. availableNow falls
+    back to single-batch for Python stream readers, so the workload
+    drives a processing-time trigger and polls the memory sink until the
+    generator's {n} rows across {k} micro-batches have all landed
+    (hard timeout -> loud failure, never a silent partial result). The
+    drained table then equals the batch range({n}) oracle — micro-batch
+    boundaries cannot affect the answer because the generator replays
+    deterministically."""
+    register_det_range_stream(spark)
+    df = (
+        spark.readStream.format("det_range_stream")
+        .option("n", str(_DSS_N))
+        .option("chunk", str(_DSS_CHUNK))
+        .load()
     )
-    return ser.select(
-        "priority",
-        "n_weeks",
-        F.expr(
-            "aggregate("
-            " slice(ys, 2, greatest(size(ys) - 1, 0)),"
-            " named_struct('a', element_at(ys, 1).a, 'b', CAST('0.0' AS DOUBLE)),"
-            f" {_HOLT_STEP_SPARK})"
-        ).alias("st"),
-    ).select(
-        "priority",
-        "n_weeks",
-        F.col("st.a").alias("level"),
-        F.col("st.b").alias("trend"),
-        (F.col("st.a") + F.col("st.b")).alias("forecast_next"),
+    name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds")
+        .start()
     )
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if spark.table(name).count() >= _DSS_N:
+                break
+            time.sleep(0.3)
+        else:
+            raise AssertionError(
+                f"streaming python datasource did not drain {_DSS_N} rows "
+                f"within 120s (got {spark.table(name).count()})"
+            )
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return spark.table(name).groupBy("bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum("val").cast("long").alias("sum_val"),
+        F.max("val").cast("long").alias("max_val"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# C235 — streaming interarrival anomaly (exact-integer online z-score)
+# ---------------------------------------------------------------------------
+
+_ANOM_ORACLE = """
+WITH seq AS (
+  SELECT event_id, user_id, ts,
+         (epoch_us(ts) - LAG(epoch_us(ts)) OVER w) // 1000000 AS gap_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+mom AS (
+  SELECT event_id, user_id, ts, gap_s,
+         CAST(COALESCE(COUNT(gap_s) OVER p, 0) AS BIGINT) AS n_prior,
+         CAST(COALESCE(SUM(gap_s) OVER p, 0) AS BIGINT) AS sm,
+         CAST(COALESCE(SUM(gap_s * gap_s) OVER p, 0) AS BIGINT) AS sq
+  FROM seq
+  WINDOW p AS (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+)
+SELECT event_id, user_id, ts, gap_s, n_prior,
+       (gap_s IS NOT NULL AND n_prior >= 3
+        AND (gap_s * n_prior - sm) * (gap_s * n_prior - sm)
+            > 9 * (n_prior * sq - sm * sm)) AS is_anomaly
+FROM mom
+"""
+
+
+@workload("stream_anomaly_interarrival", oracle=_ANOM_ORACLE)
+def stream_anomaly_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C235 — per-user ONLINE interarrival anomaly stream
+    (streaming/eventtime.py interarrival_anomaly_stateful): flag an
+    event when its gap to the previous same-user event z-scores |z| > 3
+    against all PRIOR gaps (>= 3 required). Per-key state is four
+    int64s (last ts + exact count/sum/sumsq of gaps in whole seconds),
+    and the z-test is pure int64 algebra — (gap*n - sum)^2 >
+    9*(n*sumsq - sum^2) — so the stream is BIT-identical to the batch
+    window twin at any micro-batch boundary and both hash against one
+    DuckDB oracle. The O(1)-state shape is what per-entity rate anomaly
+    detection needs at 100 TB ingest (contrast: a quantile-based
+    detector would carry unbounded per-key history)."""
+    from sample_data_pipeline_project_spark.streaming.eventtime import (
+        interarrival_anomaly_stateful,
+        run_stream_to_table,
+        stream_events,
+    )
+
+    events = stream_events(spark, sf_dir)
+    out = run_stream_to_table(
+        interarrival_anomaly_stateful(events), output_mode="append"
+    )
+    # cast the sink's TIMESTAMP back to NTZ for oracle parity (the
+    # stream source casts NTZ -> TIMESTAMP for watermark eligibility)
+    return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))

@@ -4,26 +4,40 @@ Token counting, quality scoring, language-ID heuristic, fingerprinting —
 all pure JVM-side expressions (no UDFs), each with a DuckDB oracle twin
 computing the identical per-row arithmetic (integer counts + one double
 division -> deterministic across engines).
+
+Ranking and language-model workloads keep libm out of the hash: BM25 and
+PMI scores go through `ln`, whose last-ulp behavior is libm-dependent, so
+scores are ROUND(_, 9)ed (or pre-scaled to an exact BIGINT) on both sides
+before hashing/ordering. Good-Turing and Kneser-Ney smoothing are
+rationals over exact integer count tables evaluated in ONE fixed shared
+double expression (the discount D=0.75 is exactly representable). Scalar
+statistics reach row expressions via a constant-key equi-join, never a
+cross join. Fixed-size chunking with overlap (`text_chunk_overlap`)
+produces the stride-aligned windows `dedup_chunk_exact` hashes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sample_data_pipeline_project_spark.functions.text import (
     LANG_STOPWORDS,
     md5_fingerprint,
+    md5_prefix_uint32_sql,
     stopword_count,
     token_count,
     tokens,
     word_bigrams,
     word_ngrams,
 )
+from sample_data_pipeline_project_spark.functions.text import (
+    md5_prefix_uint32_sql as _md5_u32,
+)
 from sample_data_pipeline_project_spark.operators.materialize import materialize
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
+
 
 # DuckDB twin of functions.text.tokens()
 _DUCK_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -449,10 +463,6 @@ def text_corpus_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUDGET = 512
 _PACK_SHARDS = 8
 
-from sample_data_pipeline_project_spark.functions.text import (  # noqa: E402
-    md5_prefix_uint32_sql as _md5_u32,
-)
-
 # Engine-portable shard assignment: first 32 bits of md5(doc_id) mod
 # n_shards — the same SQL fragment evaluates identically in Spark and
 # DuckDB, so the oracle states the identical shard arithmetic.
@@ -623,10 +633,6 @@ def text_bigram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Quality-weighted deterministic sampling (importance sampling, no RNG)
 # --------------------------------------------------------------------------
-from sample_data_pipeline_project_spark.functions.text import (  # noqa: E402
-    md5_prefix_uint32_sql,
-)
-
 _QW_U32 = md5_prefix_uint32_sql("CAST(doc_id AS STRING)")
 
 _QW_ORACLE = f"""
@@ -683,7 +689,6 @@ def text_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # --------------------------------------------------------------------------
 # Count-Min sketch: mergeable frequency estimates with an EXACT oracle
 # --------------------------------------------------------------------------
@@ -738,6 +743,29 @@ FROM top t JOIN est e USING (tok)
 """
 
 
+def _cm_estimates(tc: DataFrame, cm: DataFrame, bucket_structs: Column) -> DataFrame:
+    """Point-query the CM counters `cm` (seed, bucket, c) for the exact
+    top-k tokens of `tc` (tok, exact_count): min over the hash rows, plus
+    the never-undercounts guarantee as a column."""
+    top = tc.orderBy(F.col("exact_count").desc(), F.col("tok").asc()).limit(
+        _CM_TOP
+    )
+    probes = top.select(
+        "tok", "exact_count", F.explode(bucket_structs).alias("h")
+    ).select("tok", "exact_count", "h.seed", "h.bucket")
+    est = (
+        probes.join(F.broadcast(cm), ["seed", "bucket"])
+        .groupBy("tok", "exact_count")
+        .agg(F.min("c").alias("cm_estimate"))
+    )
+    return est.select(
+        "tok",
+        F.col("exact_count").cast("long"),
+        F.col("cm_estimate").cast("long"),
+        (F.col("cm_estimate") >= F.col("exact_count")).alias("overestimate_ok"),
+    )
+
+
 @workload("sketch_countmin_token_counts", oracle=_cm_oracle())
 def sketch_countmin_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch tier — COUNT-MIN frequency estimation over the raw token
@@ -775,23 +803,7 @@ def sketch_countmin_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = hashed.groupBy("seed", "bucket").agg(
         F.sum("exact_count").alias("c")
     )
-    top = tc.orderBy(
-        F.col("exact_count").desc(), F.col("tok").asc()
-    ).limit(_CM_TOP)
-    probes = top.select("tok", "exact_count", F.explode(bucket_structs).alias("h")).select(
-        "tok", "exact_count", "h.seed", "h.bucket"
-    )
-    est = (
-        probes.join(F.broadcast(cm), ["seed", "bucket"])
-        .groupBy("tok", "exact_count")
-        .agg(F.min("c").alias("cm_estimate"))
-    )
-    return est.select(
-        "tok",
-        F.col("exact_count").cast("long"),
-        F.col("cm_estimate").cast("long"),
-        (F.col("cm_estimate") >= F.col("exact_count")).alias("overestimate_ok"),
-    )
+    return _cm_estimates(tc, cm, bucket_structs)
 
 
 # --------------------------------------------------------------------------
@@ -1699,4 +1711,1172 @@ def features_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return hash_features(d, n_buckets=_FH_BUCKETS, as_array=False).select(
         "doc_id", "buckets", "counts", "nnz"
+    )
+
+
+# --------------------------------------------------------------------------
+# TF-IDF top terms per document
+# --------------------------------------------------------------------------
+_TFIDF_K = 3
+
+_TFIDF_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+  FROM documents
+),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
+df AS (SELECT term, COUNT(*) AS doc_freq FROM tf GROUP BY term),
+n AS (SELECT COUNT(*) AS n_docs FROM documents),
+scored AS (
+  SELECT tf.doc_id, tf.term, tf.tf, df.doc_freq,
+         ROW_NUMBER() OVER (
+           PARTITION BY tf.doc_id
+           ORDER BY ROUND(tf.tf * LN(CAST(n.n_docs AS DOUBLE)
+                                     / CAST(df.doc_freq AS DOUBLE)), 9) DESC,
+                    tf.term ASC
+         ) AS rnk
+  FROM tf JOIN df USING (term) CROSS JOIN n
+)
+SELECT doc_id, term, tf, doc_freq, rnk
+FROM scored WHERE rnk <= {_TFIDF_K}
+"""
+
+
+@workload("text_tfidf_top_terms", oracle=_TFIDF_ORACLE)
+def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B4 — top-{k} TF-IDF terms per document. Term frequencies keep
+    duplicates (unlike the distinct-token near-dup operators); document
+    frequency comes from the tf table (one aggregate, no second tokenize
+    pass); idf joins via broadcast (vocabulary << corpus). The float
+    tf*ln(N/df) score exists ONLY inside the ranking and is rounded to 9
+    decimals first, so mathematically-equal scores computed by different
+    ln() libraries rank identically and the term tiebreak fires the same
+    way on both engines; the hashed output is all-integer."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+    )
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
+    n_docs = d.count()
+    score = F.round(
+        F.col("tf")
+        * F.log(F.lit(float(n_docs)) / F.col("doc_freq").cast("double")),
+        9,
+    )
+    w = Window.partitionBy("doc_id").orderBy(score.desc(), F.col("term").asc())
+    return (
+        tf.join(F.broadcast(df), "term")
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _TFIDF_K)
+        .select("doc_id", "term", "tf", "doc_freq", "rnk")
+    )
+
+
+# --------------------------------------------------------------------------
+# BM25 full-text ranking for a fixed query
+# --------------------------------------------------------------------------
+_BM25_TERMS = ("spark", "join", "window")
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+_BM25_TOP = 20
+
+_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
+
+_BM25_ORACLE = f"""
+WITH docs AS (
+  SELECT doc_id,
+         string_split_regex(lower(trim(text)), '\\s+') AS toks
+  FROM documents
+),
+dl AS (
+  SELECT doc_id, len(toks) AS dl FROM docs
+),
+stats AS (
+  SELECT COUNT(*) AS n_docs, SUM(dl) AS total_tok FROM dl
+),
+tf AS (
+  SELECT doc_id, tok AS term, COUNT(*) AS tf
+  FROM (SELECT doc_id, unnest(toks) AS tok FROM docs)
+  WHERE tok IN ({_TERMS_SQL})
+  GROUP BY doc_id, tok
+),
+df AS (
+  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
+),
+scored AS (
+  SELECT tf.doc_id,
+         SUM(
+           ln((s.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
+           * (tf.tf * ({_BM25_K1} + 1.0))
+           / (tf.tf + {_BM25_K1} * (1.0 - {_BM25_B}
+              + {_BM25_B} * dl.dl
+                / (CAST(s.total_tok AS DOUBLE) / s.n_docs)))
+         ) AS score
+  FROM tf
+  JOIN df ON tf.term = df.term
+  JOIN dl ON tf.doc_id = dl.doc_id
+  CROSS JOIN stats s
+  GROUP BY tf.doc_id
+)
+SELECT doc_id, ROUND(score, 9) AS bm25
+FROM scored
+ORDER BY ROUND(score, 9) DESC, doc_id ASC
+LIMIT {_BM25_TOP}
+"""
+
+
+@workload("text_bm25_search", oracle=_BM25_ORACLE)
+def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 ranking of `documents` for the fixed query {terms}: tf from the
+    token stream FILTERED to query terms before any shuffle (the grouped
+    state is |terms| x |matching docs|, not the corpus token count),
+    document-frequency and corpus stats are single-row/3-row broadcasts,
+    top-{k} via orderBy().limit() (TakeOrderedAndProject). Lucene-standard
+    idf = ln((N - df + .5)/(df + .5) + 1); scores rounded to 9 dp on both
+    engines because ln()'s last ulp is libm-specific."""
+    from sample_data_pipeline_project_spark.functions.text import tokens
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", tokens("text").alias("toks")
+    )
+    dl = d.select("doc_id", F.size("toks").alias("dl"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tok")
+    )
+    tf = (
+        d.select("doc_id", F.explode("toks").alias("term"))
+        .filter(F.col("term").isin(*_BM25_TERMS))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    scored = (
+        tf.join(F.broadcast(df_t), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .withColumn(
+            "term_score",
+            F.expr(
+                f"ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)"
+                f" * (tf * ({_BM25_K1} + 1.0))"
+                f" / (tf + {_BM25_K1} * (1.0 - {_BM25_B}"
+                f" + {_BM25_B} * dl / (CAST(total_tok AS DOUBLE) / n_docs)))"
+            ),
+        )
+        .groupBy("doc_id")
+        .agg(F.sum("term_score").alias("score"))
+    )
+    return (
+        scored.select("doc_id", F.round("score", 9).alias("bm25"))
+        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+        .limit(_BM25_TOP)
+    )
+
+
+# --------------------------------------------------------------------------
+# Hybrid retrieval: reciprocal-rank fusion of BM25 + token-Jaccard
+# --------------------------------------------------------------------------
+_RRF_K = 60
+_RRF_TOP = 10
+_RRF_NQ = len(_BM25_TERMS)
+
+_RRF_ORACLE = f"""
+WITH docs AS (
+  SELECT doc_id,
+         string_split_regex(lower(trim(text)), '\\s+') AS toks
+  FROM documents
+),
+dl AS (
+  SELECT doc_id, len(toks) AS dl FROM docs
+),
+stats AS (
+  SELECT COUNT(*) AS n_docs, SUM(dl) AS total_tok FROM dl
+),
+tf AS (
+  SELECT doc_id, tok AS term, COUNT(*) AS tf
+  FROM (SELECT doc_id, unnest(toks) AS tok FROM docs)
+  WHERE tok IN ({_TERMS_SQL})
+  GROUP BY doc_id, tok
+),
+dfx AS (
+  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
+),
+scored AS (
+  SELECT tf.doc_id,
+         SUM(
+           ln((s.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
+           * (tf.tf * ({_BM25_K1} + 1.0))
+           / (tf.tf + {_BM25_K1} * (1.0 - {_BM25_B}
+              + {_BM25_B} * dl.dl
+                / (CAST(s.total_tok AS DOUBLE) / s.n_docs)))
+         ) AS score
+  FROM tf
+  JOIN dfx ON tf.term = dfx.term
+  JOIN dl ON tf.doc_id = dl.doc_id
+  CROSS JOIN stats s
+  GROUP BY tf.doc_id
+),
+bmtop AS (
+  SELECT doc_id, ROUND(score, 9) AS bm25
+  FROM scored
+  ORDER BY ROUND(score, 9) DESC, doc_id ASC
+  LIMIT {_BM25_TOP}
+),
+ra AS (
+  SELECT x.doc_id, CAST(1 + COUNT(y.doc_id) AS BIGINT) AS rank_a
+  FROM bmtop x LEFT JOIN bmtop y
+    ON y.bm25 > x.bm25 OR (y.bm25 = x.bm25 AND y.doc_id < x.doc_id)
+  GROUP BY x.doc_id
+),
+jtoks AS (
+  SELECT doc_id, unnest(list_distinct(toks)) AS tok FROM docs
+),
+jac AS (
+  SELECT doc_id,
+         CAST(SUM(CASE WHEN tok IN ({_TERMS_SQL}) THEN 1 ELSE 0 END)
+              AS BIGINT) AS shared,
+         CAST(COUNT(*) AS BIGINT) AS n_tok
+  FROM jtoks GROUP BY doc_id
+),
+jtop AS (
+  SELECT doc_id,
+         CAST(shared AS DOUBLE)
+           / CAST(n_tok + {_RRF_NQ} - shared AS DOUBLE) AS jacc
+  FROM jac
+  ORDER BY CAST(shared AS DOUBLE)
+             / CAST(n_tok + {_RRF_NQ} - shared AS DOUBLE) DESC,
+           doc_id ASC
+  LIMIT {_BM25_TOP}
+),
+rb AS (
+  SELECT x.doc_id, CAST(1 + COUNT(y.doc_id) AS BIGINT) AS rank_b
+  FROM jtop x LEFT JOIN jtop y
+    ON y.jacc > x.jacc OR (y.jacc = x.jacc AND y.doc_id < x.doc_id)
+  GROUP BY x.doc_id
+),
+fused AS (
+  SELECT COALESCE(ra.doc_id, rb.doc_id) AS doc_id,
+         ra.rank_a, rb.rank_b,
+         COALESCE(1.0 / ({_RRF_K}.0 + CAST(ra.rank_a AS DOUBLE)), 0.0)
+         + COALESCE(1.0 / ({_RRF_K}.0 + CAST(rb.rank_b AS DOUBLE)), 0.0)
+           AS rrf
+  FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
+)
+SELECT doc_id, rank_a, rank_b, rrf
+FROM fused
+ORDER BY rrf DESC, doc_id ASC
+LIMIT {_RRF_TOP}
+"""
+
+
+def _selfjoin_rank(top: DataFrame, score: str, rank_name: str) -> DataFrame:
+    """Rank a bounded top-k frame by (score DESC, doc_id ASC) via a k x k
+    self-join count — no window, no single-partition Exchange (the
+    bigram-LM/BPE rank pattern)."""
+    x = top.alias("x")
+    y = top.alias("y")
+    ahead = (F.col(f"y.{score}") > F.col(f"x.{score}")) | (
+        (F.col(f"y.{score}") == F.col(f"x.{score}"))
+        & (F.col("y.doc_id") < F.col("x.doc_id"))
+    )
+    return (
+        x.join(y, ahead, "left")
+        .groupBy(F.col("x.doc_id").alias("doc_id"))
+        .agg((F.lit(1) + F.count(F.col("y.doc_id"))).cast("long").alias(rank_name))
+    )
+
+
+@workload("text_hybrid_rrf_fusion", oracle=_RRF_ORACLE)
+def text_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HYBRID SEARCH: reciprocal-rank fusion (k=60) of two independent
+    retrievers over the same fixed query — lexical BM25 (the
+    text_bm25_search ranking, reused verbatim) and token-set Jaccard —
+    the standard way RAG stacks combine sparse retrievers without
+    score calibration, since RRF consumes only RANKS. Both top-20 lists
+    come from TakeOrderedAndProject; ranks are derived by bounded k x k
+    self-joins (no global window); fusion is a 20-row full outer join.
+    1/(60+rank) terms are exact-input IEEE divisions, identical on both
+    engines. At 100 TB only the two retrievers touch the corpus — the
+    fusion cost is O(k)."""
+    from sample_data_pipeline_project_spark.functions.text import tokens
+
+    bmtop = text_bm25_search(spark, sf_dir)
+    ra = _selfjoin_rank(bmtop, "bm25", "rank_a")
+
+    d = load_table(spark, sf_dir, "documents")
+    jac = (
+        d.select(
+            "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("tok")
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.sum(
+                F.when(F.col("tok").isin(*_BM25_TERMS), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("shared"),
+            F.count(F.lit(1)).cast("long").alias("n_tok"),
+        )
+    )
+    jtop = (
+        jac.select(
+            "doc_id",
+            (
+                F.col("shared").cast("double")
+                / (F.col("n_tok") + F.lit(_RRF_NQ) - F.col("shared")).cast(
+                    "double"
+                )
+            ).alias("jacc"),
+        )
+        .orderBy(F.col("jacc").desc(), F.col("doc_id").asc())
+        .limit(_BM25_TOP)
+    )
+    rb = _selfjoin_rank(jtop, "jacc", "rank_b")
+
+    fused = ra.join(rb, "doc_id", "full_outer").select(
+        "doc_id",
+        "rank_a",
+        "rank_b",
+        (
+            F.coalesce(
+                F.lit(1.0) / (F.lit(float(_RRF_K)) + F.col("rank_a").cast("double")),
+                F.lit(0.0),
+            )
+            + F.coalesce(
+                F.lit(1.0) / (F.lit(float(_RRF_K)) + F.col("rank_b").cast("double")),
+                F.lit(0.0),
+            )
+        ).alias("rrf"),
+    )
+    return fused.orderBy(F.col("rrf").desc(), F.col("doc_id").asc()).limit(
+        _RRF_TOP
+    )
+
+
+# --------------------------------------------------------------------------
+# KL divergence of each source's token distribution vs the corpus
+# --------------------------------------------------------------------------
+_KL_TERM = (
+    "(CAST(c_st AS DOUBLE) / CAST(n_s AS DOUBLE))"
+    " * ln((CAST(c_st AS DOUBLE) * CAST(n AS DOUBLE))"
+    " / (CAST(n_s AS DOUBLE) * CAST(c_t AS DOUBLE)))"
+)
+
+_KL_ORACLE = f"""
+WITH t AS (
+  SELECT source, unnest({_DUCK_TOKENS}) AS tok FROM documents
+),
+st AS (
+  SELECT source, tok, COUNT(*) AS c_st FROM t WHERE tok != ''
+  GROUP BY source, tok
+),
+src AS (SELECT source, SUM(c_st) AS n_s FROM st GROUP BY source),
+gt AS (SELECT tok, SUM(c_st) AS c_t FROM st GROUP BY tok),
+n AS (SELECT SUM(c_st) AS n FROM st),
+terms AS (
+  SELECT st.source,
+         CAST(ROUND({_KL_TERM} * 1000000000.0, 0) AS BIGINT) AS term_scaled
+  FROM st
+  JOIN src ON st.source = src.source
+  JOIN gt ON st.tok = gt.tok
+  CROSS JOIN n
+)
+SELECT t.source, CAST(src.n_s AS BIGINT) AS n_tokens,
+       CAST(SUM(t.term_scaled) AS DOUBLE) / 1000000000.0 AS kl_nats
+FROM terms t JOIN src ON t.source = src.source
+GROUP BY t.source, src.n_s
+"""
+
+
+@workload("text_kl_divergence_by_source", oracle=_KL_ORACLE)
+def text_kl_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DOMAIN-SKEW detector: KL(source || corpus) over token unigram
+    distributions — how far each provenance source's language drifts from
+    the overall mix (the quantitative side of corpus-mix curation). All
+    distributions are exact integer counts; each (source, token) cell's
+    p*ln(p/q) term uses the SCALED-INTEGER TERM SUM tactic (term * 1e9
+    rounded to BIGINT), so the per-source reduction is an exact,
+    map-side-combinable int64 SUM with no float summation-order
+    dependence. Shuffles are keyed (source, token) then source; the token
+    marginal joins broadcast (vocabulary-bounded)."""
+    d = load_table(spark, sf_dir, "documents")
+    st = (
+        d.select("source", F.explode(tokens("text")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("source", "tok")
+        .agg(F.count(F.lit(1)).alias("c_st"))
+    )
+    src = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
+    gt = st.groupBy("tok").agg(F.sum("c_st").alias("c_t"))
+    n = st.agg(F.sum("c_st").alias("n"))
+    term = (
+        F.col("c_st").cast("double") / F.col("n_s").cast("double")
+    ) * F.log(
+        (F.col("c_st").cast("double") * F.col("n").cast("double"))
+        / (F.col("n_s").cast("double") * F.col("c_t").cast("double"))
+    )
+    terms = (
+        st.join(F.broadcast(src), "source")
+        .join(F.broadcast(gt), "tok")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "source",
+            "n_s",
+            F.round(term * 1000000000.0, 0).cast("long").alias("term_scaled"),
+        )
+    )
+    return (
+        terms.groupBy("source", "n_s")
+        .agg(F.sum("term_scaled").alias("s"))
+        .select(
+            "source",
+            F.col("n_s").cast("long").alias("n_tokens"),
+            (F.col("s").cast("double") / 1000000000.0).alias("kl_nats"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# PMI collocations (pointwise mutual information over adjacent bigrams)
+# --------------------------------------------------------------------------
+_PMI_TOP_K = 25
+_PMI_MIN_PAIR = 5
+
+_PMI_SCORE = (
+    "ln((CAST(n_pair AS DOUBLE) * CAST(n_uni AS DOUBLE) * CAST(n_uni AS DOUBLE))"
+    " / (CAST(n_big AS DOUBLE) * CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE)))"
+)
+
+_PMI_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+  FROM documents
+),
+uni AS (
+  SELECT unnest(t) AS w FROM toks
+),
+c_uni AS (SELECT w, COUNT(*) AS c FROM uni WHERE w != '' GROUP BY w),
+n_uni AS (SELECT CAST(SUM(c) AS BIGINT) AS n_uni FROM c_uni),
+bigrams AS (
+  SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+  FROM toks
+),
+pair_counts AS (
+  SELECT w1, w2, COUNT(*) AS n_pair FROM bigrams
+  WHERE w1 != '' AND w2 != ''
+  GROUP BY w1, w2
+),
+n_big AS (SELECT CAST(SUM(n_pair) AS BIGINT) AS n_big FROM pair_counts),
+scored AS (
+  SELECT w1, w2, n_pair,
+         CAST(ROUND({_PMI_SCORE} * 1000000000.0, 0) AS BIGINT) AS pmi_scaled
+  FROM (
+    SELECT p.w1, p.w2, p.n_pair, u1.c AS c1, u2.c AS c2,
+           n_uni.n_uni, n_big.n_big
+    FROM pair_counts p
+    JOIN c_uni u1 ON p.w1 = u1.w
+    JOIN c_uni u2 ON p.w2 = u2.w
+    CROSS JOIN n_uni CROSS JOIN n_big
+    WHERE p.n_pair >= {_PMI_MIN_PAIR}
+  )
+),
+ranked AS (
+  SELECT w1, w2, n_pair, pmi_scaled,
+         ROW_NUMBER() OVER (ORDER BY pmi_scaled DESC, w1 ASC, w2 ASC) AS rnk
+  FROM scored
+)
+SELECT w1, w2, CAST(n_pair AS BIGINT) AS n_pair, pmi_scaled,
+       CAST(rnk AS BIGINT) AS rnk
+FROM ranked WHERE rnk <= {_PMI_TOP_K}
+"""
+
+
+@workload("text_pmi_collocations", oracle=_PMI_ORACLE)
+def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COLLOCATION mining by pointwise mutual information: PMI(w1,w2) =
+    ln(p(w1,w2) / (p(w1)p(w2))) over adjacent in-order bigrams — the
+    classic phrase detector (Church & Hanks 1990; the word2vec phrase
+    pass uses the same statistic). Counts are exact integers; the ln()
+    score is pre-scaled to BIGINT (ROUND(.*1e9)) so the top-k ORDER is an
+    exact integer sort no libm ulp can flip. Top-{k} via
+    TakeOrderedAndProject + bounded k x k rank join (the C15 pattern —
+    no global window over the vocabulary^2 pair table); unigram marginals
+    join on the word key (vocabulary-sized, broadcast)."""
+    from sample_data_pipeline_project_spark.functions.text import word_bigrams
+
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(tokens("text").alias("__t"))
+    uni = (
+        toks.select(F.explode("__t").alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    n_uni = uni.agg(F.sum("c").cast("long").alias("n_uni"))
+    pair_counts = (
+        toks.select(F.explode(word_bigrams("__t")).alias("b"))
+        .select("b.w1", "b.w2")
+        .filter((F.col("w1") != "") & (F.col("w2") != ""))
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("n_pair"))
+    )
+    n_big = pair_counts.agg(F.sum("n_pair").cast("long").alias("n_big"))
+    scored = (
+        pair_counts.filter(F.col("n_pair") >= _PMI_MIN_PAIR)
+        .join(F.broadcast(uni.withColumnRenamed("w", "w1").withColumnRenamed("c", "c1")), "w1")
+        .join(F.broadcast(uni.withColumnRenamed("w", "w2").withColumnRenamed("c", "c2")), "w2")
+        .crossJoin(F.broadcast(n_uni))
+        .crossJoin(F.broadcast(n_big))
+        .select(
+            "w1",
+            "w2",
+            "n_pair",
+            F.round(F.expr(_PMI_SCORE) * 1000000000.0, 0)
+            .cast("long")
+            .alias("pmi_scaled"),
+        )
+    )
+    top = scored.orderBy(
+        F.col("pmi_scaled").desc(), F.col("w1").asc(), F.col("w2").asc()
+    ).limit(_PMI_TOP_K)
+    lhs, rhs = top.alias("l"), top.alias("r")
+    ahead = (
+        (F.col("r.pmi_scaled") > F.col("l.pmi_scaled"))
+        | (
+            (F.col("r.pmi_scaled") == F.col("l.pmi_scaled"))
+            & (F.col("r.w1") < F.col("l.w1"))
+        )
+        | (
+            (F.col("r.pmi_scaled") == F.col("l.pmi_scaled"))
+            & (F.col("r.w1") == F.col("l.w1"))
+            & (F.col("r.w2") < F.col("l.w2"))
+        )
+    )
+    return (
+        lhs.join(rhs, ahead, "left")
+        .groupBy(
+            F.col("l.w1").alias("w1"),
+            F.col("l.w2").alias("w2"),
+            F.col("l.n_pair").alias("n_pair"),
+            F.col("l.pmi_scaled").alias("pmi_scaled"),
+        )
+        .agg((F.count(F.col("r.w1")) + 1).cast("long").alias("rnk"))
+        .select(
+            "w1", "w2", F.col("n_pair").cast("long"), "pmi_scaled", "rnk"
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# Source-pair vocabulary overlap (corpus provenance structure)
+# --------------------------------------------------------------------------
+_VOCAB_ORACLE = """
+WITH vt AS (
+  SELECT DISTINCT source,
+         unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+  FROM documents
+),
+v AS (SELECT source, tok FROM vt WHERE tok != ''),
+sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_vocab FROM v GROUP BY source),
+inter AS (
+  SELECT a.source AS src_a, b.source AS src_b, CAST(COUNT(*) AS BIGINT) AS n_inter
+  FROM v a JOIN v b ON a.tok = b.tok AND a.source < b.source
+  GROUP BY a.source, b.source
+)
+SELECT i.src_a, i.src_b, sa.n_vocab AS vocab_a, sb.n_vocab AS vocab_b,
+       i.n_inter,
+       CAST(i.n_inter AS DOUBLE)
+       / CAST(sa.n_vocab + sb.n_vocab - i.n_inter AS DOUBLE) AS jaccard
+FROM inter i
+JOIN sizes sa ON i.src_a = sa.source
+JOIN sizes sb ON i.src_b = sb.source
+"""
+
+
+@workload("text_source_vocab_overlap", oracle=_VOCAB_ORACLE)
+def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PROVENANCE-pair VOCABULARY overlap: Jaccard similarity between the
+    distinct-token vocabularies of every source pair — the coarse "are
+    these two crawls the same distribution" screen run before the
+    per-document dedup machinery (cheap: vocabulary-sized, not
+    corpus-sized). Exact integer intersections via a token-keyed
+    equi-join of per-source vocabularies; output is |sources|^2-bounded."""
+    d = load_table(spark, sf_dir, "documents")
+    v = (
+        d.select("source", F.explode(tokens("text")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .distinct()
+    )
+    sizes = v.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_vocab"))
+    a, b = v.alias("a"), v.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.tok") == F.col("b.tok"))
+            & (F.col("a.source") < F.col("b.source")),
+        )
+        .groupBy(
+            F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b")
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
+    )
+    return (
+        inter.join(
+            sizes.withColumnRenamed("source", "src_a").withColumnRenamed(
+                "n_vocab", "vocab_a"
+            ),
+            "src_a",
+        )
+        .join(
+            sizes.withColumnRenamed("source", "src_b").withColumnRenamed(
+                "n_vocab", "vocab_b"
+            ),
+            "src_b",
+        )
+        .select(
+            "src_a",
+            "src_b",
+            "vocab_a",
+            "vocab_b",
+            "n_inter",
+            (
+                F.col("n_inter").cast("double")
+                / (F.col("vocab_a") + F.col("vocab_b") - F.col("n_inter")).cast(
+                    "double"
+                )
+            ).alias("jaccard"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# C181 — Good-Turing count-of-counts and adjusted counts
+# --------------------------------------------------------------------------
+
+_GT_TOP_R = 50
+
+_GT_ORACLE = f"""
+WITH toks AS (
+  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+  FROM documents
+),
+tc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY tok),
+coc AS (SELECT c AS r, CAST(COUNT(*) AS BIGINT) AS n_r FROM tc GROUP BY c)
+SELECT a.r, a.n_r,
+       CAST((a.r + 1) * b.n_r AS DOUBLE) / CAST(a.n_r AS DOUBLE) AS r_star
+FROM coc a LEFT JOIN coc b ON b.r = a.r + 1
+ORDER BY a.r ASC LIMIT {_GT_TOP_R}
+"""
+
+
+@workload("text_good_turing_counts", oracle=_GT_ORACLE)
+def text_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Good-Turing frequency re-estimation over the corpus vocabulary:
+    the count-of-counts table N_r (how many token types occur exactly r
+    times) and the adjusted count r* = (r+1) * N_{r+1} / N_r — the
+    classic estimator of unseen-event mass (r*=NULL where N_{r+1}=0, the
+    point where practical SGT switches to a fitted line). Two grouped
+    aggregations (token counts, then count-of-counts); the N_r table is
+    at most #distinct-frequencies rows, so the r+1 self-join is tiny at
+    any corpus size. Exact integer counts; the single division is the
+    only double op."""
+    d = load_table(spark, sf_dir, "documents")
+    tc = (
+        d.select(F.explode(tokens("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    coc = tc.groupBy(F.col("c").alias("r")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_r")
+    )
+    a, b = coc.alias("a"), coc.alias("b")
+    return (
+        a.join(b, F.col("b.r") == F.col("a.r") + 1, "left")
+        .select(
+            F.col("a.r").alias("r"),
+            F.col("a.n_r").alias("n_r"),
+            (
+                ((F.col("a.r") + 1) * F.col("b.n_r")).cast("double")
+                / F.col("a.n_r").cast("double")
+            ).alias("r_star"),
+        )
+        .orderBy(F.col("r").asc())
+        .limit(_GT_TOP_R)
+    )
+
+
+# --------------------------------------------------------------------------
+# C184 — interpolated Kneser-Ney bigram probabilities (D = 0.75)
+# --------------------------------------------------------------------------
+
+_KN_TOP_K = 50
+_KN_P_EXPR = (
+    "(GREATEST(CAST(c AS DOUBLE) - 0.75, CAST(0 AS DOUBLE)) / CAST(c1 AS DOUBLE))"
+    " + ((0.75 * CAST(n1fw AS DOUBLE) / CAST(c1 AS DOUBLE))"
+    " * (CAST(n1bw AS DOUBLE) / CAST(t_pairs AS DOUBLE)))"
+)
+
+_KN_ORACLE = f"""
+WITH toks AS (
+  SELECT string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents
+),
+bigrams AS (
+  SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2 FROM toks
+),
+pc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM bigrams GROUP BY w1, w2),
+fw AS (
+  SELECT w1, CAST(SUM(c) AS BIGINT) AS c1, CAST(COUNT(*) AS BIGINT) AS n1fw
+  FROM pc GROUP BY w1
+),
+bw AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1bw FROM pc GROUP BY w2),
+tp AS (SELECT CAST(COUNT(*) AS BIGINT) AS t_pairs FROM pc),
+top AS (SELECT w1, w2, c FROM pc ORDER BY c DESC, w1 ASC, w2 ASC LIMIT {_KN_TOP_K})
+SELECT t.w1, t.w2, t.c, f.c1, f.n1fw, b.n1bw, tp.t_pairs,
+       {_KN_P_EXPR} AS p_kn
+FROM top t
+JOIN fw f USING (w1)
+JOIN bw b USING (w2)
+JOIN tp ON 1 = 1
+"""
+
+
+@workload("text_kneser_ney_bigram", oracle=_KN_ORACLE)
+def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpolated Kneser-Ney bigram probabilities with absolute
+    discount D=0.75: P(w2|w1) = max(c-D,0)/c(w1.) + D*N1+(w1.)/c(w1.) *
+    N1+(.w2)/T — the continuation-count smoothing that modern n-gram LM
+    toolkits (KenLM) use, built ENTIRELY from four grouped integer count
+    tables (pair counts, forward prefix totals + distinct-successor
+    counts, distinct-predecessor counts, total bigram types). Reported
+    for the top-{k} bigrams by raw count (TakeOrderedAndProject + stats
+    joined AFTER the limit, broadcast k-row side); the probability is
+    one fixed shared double expression, D being exactly representable.
+    The scalar type total joins on a constant key (broadcast hash), not
+    a cross join."""
+    d = load_table(spark, sf_dir, "documents")
+    bigrams = (
+        d.select(tokens("text").alias("__t"))
+        .select(F.explode(word_bigrams("__t")).alias("b"))
+        .select("b.w1", "b.w2")
+    )
+    pc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    fw = pc.groupBy("w1").agg(
+        F.sum("c").cast("long").alias("c1"),
+        F.count(F.lit(1)).cast("long").alias("n1fw"),
+    )
+    bw = pc.groupBy("w2").agg(F.count(F.lit(1)).cast("long").alias("n1bw"))
+    tp = pc.agg(F.count(F.lit(1)).cast("long").alias("t_pairs")).withColumn(
+        "j", F.lit(1)
+    )
+    top = (
+        pc.orderBy(F.col("c").desc(), F.col("w1").asc(), F.col("w2").asc())
+        .limit(_KN_TOP_K)
+        .withColumn("j", F.lit(1))
+    )
+    joined = (
+        fw.join(F.broadcast(top), "w1")
+        .join(bw, "w2")
+        .join(F.broadcast(tp), "j")
+    )
+    return joined.select(
+        "w1",
+        "w2",
+        "c",
+        "c1",
+        "n1fw",
+        "n1bw",
+        "t_pairs",
+        F.expr(_KN_P_EXPR).alias("p_kn"),
+    )
+
+
+# --------------------------------------------------------------------------
+# C207 — corpus n-gram novelty rate by source
+# --------------------------------------------------------------------------
+
+_NOV_ORACLE = """
+WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+  FROM documents
+),
+bigrams AS (
+  SELECT DISTINCT doc_id,
+         unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+  FROM toks
+),
+firsts AS (
+  SELECT w1, w2, MIN(doc_id) AS first_doc FROM bigrams GROUP BY w1, w2
+),
+per_doc AS (
+  SELECT b.doc_id,
+         CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+         CAST(SUM(CASE WHEN f.first_doc = b.doc_id THEN 1 ELSE 0 END)
+              AS BIGINT) AS n_novel
+  FROM bigrams b JOIN firsts f ON b.w1 = f.w1 AND b.w2 = f.w2
+  GROUP BY b.doc_id
+)
+SELECT d.source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(p.n_bigrams) AS BIGINT) AS n_bigrams,
+       CAST(SUM(p.n_novel) AS BIGINT) AS n_novel,
+       CAST(SUM(p.n_novel) AS DOUBLE) / CAST(SUM(p.n_bigrams) AS DOUBLE)
+         AS novelty_rate
+FROM per_doc p JOIN documents d ON p.doc_id = d.doc_id
+GROUP BY d.source
+"""
+
+
+@workload("text_novelty_rate", oracle=_NOV_ORACLE)
+def text_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus NOVELTY accounting: every distinct bigram is attributed to
+    its first-occurrence document (MIN doc_id over an ingestion-ordered
+    corpus), and each source reports what fraction of its documents'
+    bigrams were first seen there — the marginal-information curve that
+    says when additional scraping stops adding content (the
+    diminishing-returns signal behind dedup-aware corpus growth, cf.
+    the repeated-ngram and decontamination tiers). Two grouped
+    aggregations plus a bigram-keyed join back — all shuffles keyed on
+    bigrams or doc ids, exact counts, one final division."""
+    from sample_data_pipeline_project_spark.functions.text import (
+        tokens,
+        word_bigrams,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    bigrams = (
+        d.select("doc_id", tokens("text").alias("__t"))
+        .select("doc_id", F.explode(word_bigrams("__t")).alias("b"))
+        .select("doc_id", "b.w1", "b.w2")
+        .distinct()
+    )
+    firsts = bigrams.groupBy("w1", "w2").agg(F.min("doc_id").alias("first_doc"))
+    per_doc = (
+        bigrams.join(firsts, ["w1", "w2"])
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            F.sum(F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_novel"),
+        )
+    )
+    return (
+        per_doc.join(d.select("doc_id", "source"), "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_bigrams").cast("long").alias("n_bigrams"),
+            F.sum("n_novel").cast("long").alias("n_novel"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "n_bigrams",
+            "n_novel",
+            (
+                F.col("n_novel").cast("double") / F.col("n_bigrams").cast("double")
+            ).alias("novelty_rate"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# C224 — Gopher-style quality gates (rule ensemble over token statistics)
+# --------------------------------------------------------------------------
+_GOPHER_STOP = ("the", "a")  # corpus stopwords (synthetic vocab)
+_G_MIN_TOK, _G_MAX_TOK = 20, 80
+_G_MIN_MEAN, _G_MAX_MEAN = 3.0, 10.0
+_G_MIN_STOP = 2
+_G_MAX_TOP_SHARE = 0.12
+
+_GOPHER_ORACLE = f"""
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+  FROM documents
+),
+tc AS (
+  SELECT doc_id, tok, COUNT(*) AS cnt
+  FROM tok WHERE tok <> '' GROUP BY doc_id, tok
+),
+d AS (
+  SELECT doc_id,
+         CAST(SUM(cnt) AS BIGINT) AS n_tokens,
+         CAST(SUM(CAST(LENGTH(tok) AS BIGINT) * cnt) AS BIGINT) AS n_chars_tok,
+         CAST(COALESCE(SUM(cnt) FILTER (
+             WHERE tok IN {str(tuple(_GOPHER_STOP))}), 0) AS BIGINT) AS n_stop,
+         CAST(MAX(cnt) AS BIGINT) AS top_cnt
+  FROM tc GROUP BY doc_id
+),
+g AS (
+  SELECT doc_id, n_tokens, n_stop,
+         ROUND(CAST(n_chars_tok AS DOUBLE) / n_tokens, 6) AS mean_tok_len,
+         ROUND(CAST(top_cnt AS DOUBLE) / n_tokens, 6) AS top_share,
+         (n_tokens BETWEEN {_G_MIN_TOK} AND {_G_MAX_TOK}) AS g_length,
+         (CAST(n_chars_tok AS DOUBLE) / n_tokens >= {_G_MIN_MEAN}
+          AND CAST(n_chars_tok AS DOUBLE) / n_tokens <= {_G_MAX_MEAN})
+           AS g_mean_len,
+         (n_stop >= {_G_MIN_STOP}) AS g_stopwords,
+         (CAST(top_cnt AS DOUBLE) / n_tokens <= {_G_MAX_TOP_SHARE})
+           AS g_repetition
+  FROM d
+)
+SELECT doc_id, n_tokens, mean_tok_len, n_stop, top_share,
+       g_length, g_mean_len, g_stopwords, g_repetition,
+       (g_length AND g_mean_len AND g_stopwords AND g_repetition)
+         AS passes_all
+FROM g
+"""
+
+
+@workload("text_gopher_quality_gates", oracle=_GOPHER_ORACLE)
+def text_gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GOPHER-STYLE QUALITY GATES (Rae et al. 2021's rule-ensemble
+    document filter, the standard pre-training curation stage): per-doc
+    token-length band, mean-token-length band, minimum stopword count,
+    and top-token repetition share — each surfaced as its own boolean
+    gate plus the conjunction, so downstream curation can report WHICH
+    rule rejected a document, not just that one did. Two-level exact-int
+    aggregation ((doc, token) counts -> per-doc stats, the same shuffle
+    key chain), two ROUND(_,6) divisions of exact ints — no double
+    summation anywhere. Complements the single-signal filters C20
+    (repetition) and B4 quality scoring."""
+    from sample_data_pipeline_project_spark.functions.text import tokens
+
+    d = load_table(spark, sf_dir, "documents")
+    tc = (
+        d.select("doc_id", F.explode(tokens("text")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    stats = tc.groupBy("doc_id").agg(
+        F.sum("cnt").cast("long").alias("n_tokens"),
+        F.sum(F.length("tok").cast("long") * F.col("cnt"))
+        .cast("long")
+        .alias("n_chars_tok"),
+        F.coalesce(
+            F.sum(F.when(F.col("tok").isin(*_GOPHER_STOP), F.col("cnt"))),
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("n_stop"),
+        F.max("cnt").cast("long").alias("top_cnt"),
+    )
+    mean_len = F.col("n_chars_tok").cast("double") / F.col("n_tokens")
+    top_share = F.col("top_cnt").cast("double") / F.col("n_tokens")
+    g_length = F.col("n_tokens").between(_G_MIN_TOK, _G_MAX_TOK)
+    g_mean = (mean_len >= _G_MIN_MEAN) & (mean_len <= _G_MAX_MEAN)
+    g_stop = F.col("n_stop") >= _G_MIN_STOP
+    g_rep = top_share <= _G_MAX_TOP_SHARE
+    return stats.select(
+        "doc_id",
+        "n_tokens",
+        F.round(mean_len, 6).alias("mean_tok_len"),
+        "n_stop",
+        F.round(top_share, 6).alias("top_share"),
+        g_length.alias("g_length"),
+        g_mean.alias("g_mean_len"),
+        g_stop.alias("g_stopwords"),
+        g_rep.alias("g_repetition"),
+        (g_length & g_mean & g_stop & g_rep).alias("passes_all"),
+    )
+
+
+_CHUNK = 50
+_STRIDE = 40
+
+_CHUNK_CTE = f"""
+toks AS (
+  SELECT doc_id, COALESCE({_DUCK_TOKENS}, []) AS t FROM documents
+),
+starts AS (
+  SELECT doc_id, t,
+         unnest(range(0, GREATEST(len(t), 1), {_STRIDE})) AS start
+  FROM toks
+),
+chunks AS (
+  SELECT doc_id,
+         CAST(start // {_STRIDE} AS BIGINT) AS chunk_index,
+         CAST(start AS BIGINT) AS start_token,
+         CAST(len(list_slice(t, start + 1, start + {_CHUNK})) AS BIGINT) AS n_tokens,
+         md5(array_to_string(list_slice(t, start + 1, start + {_CHUNK}), ' ')) AS chunk_hash
+  FROM starts
+)
+"""
+
+
+@workload(
+    "text_chunk_overlap",
+    oracle=f"""
+WITH {_CHUNK_CTE}
+SELECT doc_id, chunk_index, start_token, n_tokens, chunk_hash FROM chunks
+""",
+)
+def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C229 — RAG/window chunking: fixed 50-token chunks on a 40-token
+    stride (tail chunks shorter; every doc yields >= 1 chunk). JVM-side
+    sequence + slice + posexplode — one narrow projection, no shuffle,
+    trivially shard-parallel at 100 TB. Token arrays are coalesced to
+    empty on BOTH sides: without it a NULL `text` diverges between the
+    engines (Spark size(slice(NULL,..)) = -1 vs DuckDB
+    len(list_slice(NULL,..)) = NULL), a silent dependence on the
+    generator never emitting NULL text."""
+    docs = load_table(spark, sf_dir, "documents")
+    t = docs.select(
+        "doc_id",
+        F.coalesce(
+            tokens("text"), F.expr("CAST(array() AS array<string>)")
+        ).alias("t"),
+    )
+    return (
+        t.select(
+            "doc_id",
+            "t",
+            F.posexplode(
+                F.expr(f"sequence(0, greatest(size(t) - 1, 0), {_STRIDE})")
+            ).alias("chunk_index", "start"),
+        )
+        .select(
+            "doc_id",
+            F.col("chunk_index").cast("long").alias("chunk_index"),
+            F.col("start").cast("long").alias("start_token"),
+            F.expr(f"size(slice(t, start + 1, {_CHUNK}))")
+            .cast("long")
+            .alias("n_tokens"),
+            F.expr(
+                f"md5(array_join(slice(t, start + 1, {_CHUNK}), ' '))"
+            ).alias("chunk_hash"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# C239 — DSIR-style importance resampling (hashed-ngram LM log-ratio)
+# ---------------------------------------------------------------------------
+_DSIR_TARGET = "src7"
+_DSIR_B = 256
+_DSIR_TOP = 50
+
+
+def _dsir_bucket_expr() -> str:
+    from sample_data_pipeline_project_spark.functions.text import (
+        md5_prefix_uint32_sql,
+    )
+
+    return md5_prefix_uint32_sql("'dsir|' || tok") + f" % {_DSIR_B}"
+
+
+def _dsir_lnratio_expr() -> str:
+    """ln of an exact integer rational: both counts and totals are exact
+    BIGINTs cast to DOUBLE before one multiply/divide each side — the only
+    libm call is the single ln, absorbed by the final ROUND(.., 9)."""
+    return (
+        f"ln((CAST(COALESCE(cnt_t, 0) + 1 AS DOUBLE)"
+        f" * CAST(n_r + {_DSIR_B} AS DOUBLE))"
+        f" / (CAST(cnt_r + 1 AS DOUBLE)"
+        f" * CAST(n_t + {_DSIR_B} AS DOUBLE)))"
+    )
+
+
+def _dsir_oracle() -> str:
+    bucket = _dsir_bucket_expr()
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_DUCK_TOKENS}) AS tok FROM documents
+),
+tf AS (
+  SELECT doc_id, {bucket} AS bucket, COUNT(*) AS tf
+  FROM toks WHERE tok != '' GROUP BY doc_id, {bucket}
+),
+raw AS (SELECT bucket, CAST(SUM(tf) AS BIGINT) AS cnt_r FROM tf GROUP BY bucket),
+tgt AS (
+  SELECT t.bucket, CAST(SUM(t.tf) AS BIGINT) AS cnt_t
+  FROM tf t JOIN documents d ON t.doc_id = d.doc_id
+  WHERE d.source = '{_DSIR_TARGET}'
+  GROUP BY t.bucket
+),
+tot AS (
+  SELECT CAST(SUM(t.tf) AS BIGINT) AS n_r,
+         CAST(SUM(CASE WHEN d.source = '{_DSIR_TARGET}' THEN t.tf ELSE 0 END)
+              AS BIGINT) AS n_t
+  FROM tf t JOIN documents d ON t.doc_id = d.doc_id
+),
+lr AS (
+  SELECT r.bucket, {_dsir_lnratio_expr()} AS lnratio
+  FROM raw r LEFT JOIN tgt g ON r.bucket = g.bucket CROSS JOIN tot
+)
+SELECT t.doc_id, d.source AS source,
+       ROUND(SUM(t.tf * lr.lnratio), 9) AS llr_score
+FROM tf t JOIN lr ON t.bucket = lr.bucket
+JOIN documents d ON t.doc_id = d.doc_id
+GROUP BY t.doc_id, d.source
+ORDER BY llr_score DESC, t.doc_id ASC
+LIMIT {_DSIR_TOP}
+"""
+
+
+@workload("text_dsir_importance_sample", oracle=_dsir_oracle())
+def text_dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C239 — data selection by importance resampling (DSIR, Xie et al.
+    2023): score every document by the log-likelihood ratio of a hashed
+    unigram LM fit on a TARGET domain (source = {target}) vs one fit on
+    the raw corpus, add-one smoothed over {b} md5 buckets, and keep the
+    top-{n} — the published recipe for "select pretraining data that
+    looks like my high-quality domain" without a trained classifier.
+
+    Spark-first / 100 TB shape: the token explode is map-side; the only
+    corpus-sized shuffles are keyed (doc_id, bucket) then doc_id; both
+    LMs are <= {b}-row aggregates joined back by BROADCAST (the bucket
+    domain is fixed, never vocabulary-sized — the hashing trick is what
+    makes DSIR shuffle-free at any vocabulary); the corpus-total frame
+    is a 1-row broadcast crossJoin (BNLJ-allowlisted); the final top-{n}
+    is TakeOrderedAndProject. Determinism: bucket counts are exact
+    integers, each bucket's log-ratio is ONE ln of an exact rational,
+    and per-doc scores round to 9 dp on both engines (the
+    text_bm25_search libm rule)."""
+    from sample_data_pipeline_project_spark.functions.text import tokens
+
+    d = load_table(spark, sf_dir, "documents")
+    src = d.select("doc_id", "source")
+    tf = (
+        d.select("doc_id", F.explode(tokens("text")).alias("tok"))
+        .filter(F.col("tok") != "")
+        .select("doc_id", F.expr(_dsir_bucket_expr()).alias("bucket"))
+        .groupBy("doc_id", "bucket")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    tf_src = tf.join(src, "doc_id")
+    raw = tf.groupBy("bucket").agg(F.sum("tf").alias("cnt_r"))
+    tgt = (
+        tf_src.filter(F.col("source") == _DSIR_TARGET)
+        .groupBy("bucket")
+        .agg(F.sum("tf").alias("cnt_t"))
+    )
+    tot = tf_src.agg(
+        F.sum("tf").alias("n_r"),
+        F.sum(
+            F.when(F.col("source") == _DSIR_TARGET, F.col("tf")).otherwise(0)
+        ).alias("n_t"),
+    )
+    lr = (
+        raw.join(tgt, "bucket", "left")
+        .crossJoin(F.broadcast(tot))
+        .select("bucket", F.expr(_dsir_lnratio_expr()).alias("lnratio"))
+    )
+    scored = (
+        tf.join(F.broadcast(lr), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.round(F.sum(F.col("tf") * F.col("lnratio")), 9).alias(
+                "llr_score"
+            )
+        )
+    )
+    return (
+        scored.join(src, "doc_id")
+        .select("doc_id", "source", "llr_score")
+        .orderBy(F.col("llr_score").desc(), F.col("doc_id").asc())
+        .limit(_DSIR_TOP)
     )

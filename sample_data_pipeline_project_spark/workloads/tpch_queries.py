@@ -1,23 +1,38 @@
-"""Remaining TPC-H query shapes (Q2, Q7-Q11, Q15-Q18, Q20, Q21), adapted
-to the reduced testdata schema (no partsupp table, no commit/receipt
-dates, no container/mfgr columns). Each keeps the ORIGINAL query's
-operator shape — that is what matters for engine coverage:
+"""TPC-H query shapes (Q1-Q22 where the testdata's columns allow) over the
+TPC-H-ish testdata.
 
+Each keeps the ORIGINAL query's operator shape — that is what matters for
+engine coverage — adapted to the reduced schema (no partsupp table, no
+commit/receipt dates, no container/mfgr columns):
+
+  Q1   pricing summary: grouped exact-decimal aggregates
   Q2   correlated MIN subquery over a supply relation (decorrelated to a
        per-key MIN + join-back)            -> groupBy + equi-join
+  Q3   shipping priority: 3-way join + top-10 revenue
+  Q4   order priority: EXISTS -> semi join
+  Q5   local supplier volume: 6-way join with a same-nation predicate
+  Q6   forecast revenue: pure filter + aggregate
   Q7   two-nation volume shipping, OR'd nation pairs, YEAR extraction
   Q8   market share: conditional CASE aggregate / total per group
   Q9   product-type profit: LIKE filter + 5-way join + signed amounts
   Q10  returned items: top-20 revenue per customer over a quarter
   Q11  important parts: uncorrelated scalar subquery in HAVING
+  Q12  join + SUM(CASE ...) conditional aggregates
+  Q13  LEFT OUTER join with a join-side filter + two-level agg (the
+       count-of-counts histogram)
+  Q14  CASE-ratio over an equi-join (promo revenue share)
   Q15  top supplier: CTE + scalar MAX subquery, exact-decimal equality
   Q16  supplier-part counts: NOT IN anti join + COUNT(DISTINCT)
   Q17  small-quantity revenue: correlated AVG -> per-key window, exact
        integer-arithmetic comparison (5*qty*cnt < sum)
   Q18  large-volume customers: IN over grouped HAVING -> semi join
+  Q19  OR-of-ANDs predicate — Catalyst must still push the common join
+       key and prune columns despite the disjunction
   Q20  promotion suppliers: nested semi-join chain over shipped volumes
   Q21  waiting suppliers: EXISTS + NOT EXISTS double correlation ->
        semi + anti joins ("late" adapted to shipdate > orderdate + 60d)
+  Q22  uncorrelated scalar subquery (avg balance) + anti join, with the
+       comparison rewritten multiplication-side for exactness
 
 Substitutions vs. the genuine TPC-H text, forced by the schema:
   - partsupp is reconstructed as the DISTINCT (l_partkey, l_suppkey)
@@ -28,27 +43,437 @@ Substitutions vs. the genuine TPC-H text, forced by the schema:
     60 days (Q21).
 
 All money/quantity aggregation follows the package's determinism
-contract: exact DECIMAL partials, one final cast to DOUBLE; predicate
+contract: exact DECIMAL partials (`_dsum`, `_revenue_dec` from
+workloads/relational.py), one final cast to DOUBLE; predicate
 comparisons that feed row selection are kept in integer/decimal
 arithmetic so both engines select identical rows.
 
-Scale notes: nation/region/supplier/part are broadcast everywhere; the
-only shuffles are the fact-table aggregations on their own keys, and
-every LIMIT has a unique-key tiebreak.
+Scale notes: nation/region/supplier/part/customer are broadcast
+everywhere; the only shuffles are the fact-table aggregations on their
+own keys, and every LIMIT has a unique-key tiebreak.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 from sample_data_pipeline_project_spark.workloads.relational import (
     _REV_DEC_SQL,
+    _REV_SQL,
+    _dsum,
     _revenue_dec,
 )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q1 shape: scan + filter + group-agg (A2/A3/A8/B7)
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q1_pricing_summary",
+    oracle=f"""
+SELECT l_returnflag, l_linestatus,
+       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+       CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS sum_disc_price,
+       CAST(SUM({_REV_DEC_SQL} * (1 + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE) AS sum_charge,
+       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
+       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price,
+       CAST(SUM(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
+       COUNT(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+GROUP BY l_returnflag, l_linestatus
+""",
+)
+def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pricing summary: the canonical scan->filter->groupBy->agg pipeline.
+    Partial aggregation keeps the shuffle at |groups| x |partitions| rows."""
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz")
+    )
+    n = F.count(F.lit(1))
+    return l.groupBy("l_returnflag", "l_linestatus").agg(
+        _dsum(F.col("l_quantity"), "DECIMAL(18,2)").alias("sum_qty"),
+        _dsum(F.col("l_extendedprice"), "DECIMAL(18,2)").alias("sum_base_price"),
+        F.sum(_revenue_dec()).cast("double").alias("sum_disc_price"),
+        F.sum(_revenue_dec() * (F.lit(1) + F.col("l_tax").cast("decimal(4,2)")))
+        .cast("double")
+        .alias("sum_charge"),
+        (_dsum(F.col("l_quantity"), "DECIMAL(18,2)") / n).alias("avg_qty"),
+        (_dsum(F.col("l_extendedprice"), "DECIMAL(18,2)") / n).alias("avg_price"),
+        (_dsum(F.col("l_discount"), "DECIMAL(18,6)") / n).alias("avg_disc"),
+        n.alias("count_order"),
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q3 shape: 3-way join + group-agg + top-k (B7)
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q3_shipping_priority",
+    oracle=f"""
+SELECT l_orderkey,
+       {_REV_SQL} AS revenue,
+       o_orderdate, o_orderpriority
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON l_orderkey = o_orderkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+  AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+GROUP BY l_orderkey, o_orderdate, o_orderpriority
+ORDER BY revenue DESC, l_orderkey ASC
+LIMIT 10
+""",
+)
+def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unshipped-orders revenue: customer (filtered, broadcast) |><| orders
+    |><| lineitem, grouped per order, global top-10 by revenue."""
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp_ntz")
+    )
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > F.lit("1998-03-15 00:00:00").cast("timestamp_ntz")
+    )
+    return (
+        F.broadcast(c.select("c_custkey"))
+        .join(o, F.col("c_custkey") == F.col("o_custkey"))
+        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(F.sum(_revenue_dec()).cast("double").alias("revenue"))
+        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
+        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
+        .limit(10)
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q5 shape: 6-way join + group-agg (B7)
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q5_local_supplier_volume",
+    oracle=f"""
+SELECT n_name,
+       {_REV_SQL} AS revenue
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON l_orderkey = o_orderkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+GROUP BY n_name
+""",
+)
+def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Local-supplier volume: the classic snowflake-schema join tree.
+    region/nation/supplier/customer are broadcast; only orders |><| lineitem
+    shuffles (on orderkey)."""
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nt = load_table(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
+    )
+    l = load_table(spark, sf_dir, "lineitem")
+    return (
+        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
+        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(
+            F.broadcast(s),
+            (F.col("l_suppkey") == F.col("s_suppkey"))
+            & (F.col("c_nationkey") == F.col("s_nationkey")),
+        )
+        .join(F.broadcast(nt), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .groupBy("n_name")
+        .agg(F.sum(_revenue_dec()).cast("double").alias("revenue"))
+    )
+
+
+@workload(
+    "tpch_q6_forecast_revenue",
+    oracle="""
+SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+             * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
+       COUNT(*) AS n_items
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
+  AND l_discount BETWEEN 0.05 AND 0.07
+  AND l_quantity < 24
+""",
+)
+def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q6 shape: pure scan + conjunctive sargable filters + ungrouped
+    aggregate — every predicate must reach the parquet reader
+    (PushedFilters), making this the canonical pushdown benchmark."""
+    l = load_table(spark, sf_dir, "lineitem")
+    return (
+        l.filter(
+            (F.col("l_shipdate") >= "1996-01-01")
+            & (F.col("l_shipdate") < "1997-01-01")
+            & (F.col("l_discount").between(0.05, 0.07))
+            & (F.col("l_quantity") < 24)
+        )
+        .agg(
+            F.sum(
+                F.col("l_extendedprice").cast("decimal(18,2)")
+                * F.col("l_discount").cast("decimal(4,2)")
+            ).cast("double").alias("revenue"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
+    )
+
+
+@workload(
+    "tpch_q4_order_priority",
+    oracle="""
+SELECT o_orderpriority, COUNT(*) AS order_count
+FROM orders o
+WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o.o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+  AND EXISTS (
+    SELECT 1 FROM lineitem l
+    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
+  )
+GROUP BY o_orderpriority
+""",
+)
+def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 shape: EXISTS correlated subquery -> LEFT SEMI join (the
+    decorrelation Catalyst performs on the SQL form, written directly as
+    the DataFrame plan). Semi join carries no payload columns from the
+    probe side — minimal shuffle width."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-10-01")
+    )
+    l = load_table(spark, sf_dir, "lineitem")
+    cond = (F.col("l.l_orderkey") == F.col("o.o_orderkey")) & (
+        F.col("l.l_shipdate") > F.col("o.o_orderdate")
+    )
+    return (
+        o.alias("o")
+        .join(l.alias("l"), cond, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count"))
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q12 shape: join + conditional (CASE) aggregates
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q12_conditional_agg",
+    oracle="""
+SELECT l_returnflag,
+       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
+GROUP BY l_returnflag
+""",
+)
+def tpch_q12_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q12 shape: fact-to-fact equi-join, then SUM(CASE...) pivot-style
+    conditional counts — integer arithmetic only, exact on both engines."""
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
+    )
+    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    return (
+        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
+            F.sum(F.when(~is_high, 1).otherwise(0)).alias("low_line_count"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q13 shape: LEFT OUTER join with join-side filter + count histogram
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q13_order_distribution",
+    oracle="""
+WITH c_orders AS (
+  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+  FROM customer
+  LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+  GROUP BY c_custkey
+)
+SELECT c_count, COUNT(*) AS custdist
+FROM c_orders
+GROUP BY c_count
+""",
+)
+def tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q13 shape: LEFT OUTER join whose filter lives in the join condition
+    (NOT the WHERE — it must preserve customers with zero orders), then a
+    count-of-counts histogram. COUNT(o_orderkey) counts non-nulls, so
+    no-order customers land in bucket 0. Two shuffles by construction:
+    custkey, then c_count."""
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    per_cust = (
+        c.join(
+            o,
+            (F.col("c_custkey") == F.col("o_custkey"))
+            & (F.col("o_orderpriority") != "1-URGENT"),
+            "left",
+        )
+        .groupBy("c_custkey")
+        .agg(F.count("o_orderkey").alias("c_count"))
+    )
+    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q14 shape: CASE-ratio aggregate over an equi-join
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q14_promo_revenue",
+    oracle=f"""
+SELECT CAST(SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {_REV_DEC_SQL} ELSE 0 END) AS DOUBLE)
+         * 100.0
+         / CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS promo_revenue_pct,
+       COUNT(*) AS n_items
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
+  AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
+""",
+)
+def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q14 shape: promo revenue share. Numerator and denominator are exact
+    decimal sums; the ratio is computed in DOUBLE with the same operation
+    order on both engines ((cast * 100.0) / cast), so it is bit-identical.
+    part broadcasts; lineitem never shuffles (ungrouped agg = one partial
+    per partition + driver-side merge)."""
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
+    l = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-04-01")
+    )
+    promo = F.when(F.col("p_type").like("PROMO%"), _revenue_dec()).otherwise(
+        F.lit(0).cast("decimal(18,4)")
+    )
+    return (
+        l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .agg(
+            (
+                F.sum(promo).cast("double")
+                * F.lit(100.0)
+                / F.sum(_revenue_dec()).cast("double")
+            ).alias("promo_revenue_pct"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q19 shape: disjunction of conjunctions (OR-of-ANDs)
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q19_disjunctive_filter",
+    oracle=f"""
+SELECT CAST(SUM({_REV_DEC_SQL}) AS DOUBLE) AS revenue,
+       COUNT(*) AS n_items
+FROM lineitem JOIN part ON p_partkey = l_partkey
+WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
+   OR (p_brand = 'Brand#22' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 35)
+   OR (p_brand = 'Brand#25' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 20 AND 50)
+""",
+)
+def tpch_q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q19 shape: OR-of-ANDs across both join sides. Catalyst still joins on
+    the common p_partkey equi-key and applies the disjunction as a join
+    residual; per-side implied filters (p_brand IN (...), l_quantity <= 50)
+    are inferred and pushed below the join by constraint propagation."""
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    l = load_table(spark, sf_dir, "lineitem")
+    arm = lambda brand, s_lo, s_hi, q_lo, q_hi: (  # noqa: E731
+        (F.col("p_brand") == brand)
+        & F.col("p_size").between(s_lo, s_hi)
+        & F.col("l_quantity").between(q_lo, q_hi)
+    )
+    cond = (
+        arm("Brand#11", 1, 15, 1, 20)
+        | arm("Brand#22", 10, 30, 10, 35)
+        | arm("Brand#25", 20, 50, 20, 50)
+    )
+    return (
+        l.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        .filter(cond)
+        .agg(
+            F.sum(_revenue_dec()).cast("double").alias("revenue"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# TPC-H Q22 shape: uncorrelated scalar subquery + anti join
+# --------------------------------------------------------------------------
+@workload(
+    "tpch_q22_idle_rich_customers",
+    oracle="""
+WITH stats AS (
+  SELECT COUNT(*) AS n_pos,
+         SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS total_pos
+  FROM customer WHERE c_acctbal > 0.0
+)
+SELECT c_mktsegment,
+       COUNT(*) AS numcust,
+       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+FROM customer, stats
+WHERE CAST(c_acctbal AS DECIMAL(18,2)) * n_pos > total_pos
+  AND NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+GROUP BY c_mktsegment
+""",
+)
+def tpch_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q22 shape: above-average-balance customers who never placed an
+    URGENT order, grouped by segment. (Every testdata customer has orders,
+    so the classic "no orders at all" anti-join is degenerate — the
+    priority filter keeps the anti join selective AND non-empty.) The
+    global average arrives as an uncorrelated scalar subquery — a 1-row
+    broadcast cross join, NOT a collect() (the plan stays fully
+    declarative). The `bal > avg` comparison is rewritten as
+    `bal * n > total` so it is exact decimal arithmetic on both engines
+    (no decimal division rounding to disagree about)."""
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    bal_dec = F.col("c_acctbal").cast("decimal(18,2)")
+    stats = c.filter(F.col("c_acctbal") > 0.0).agg(
+        F.count(F.lit(1)).alias("n_pos"),
+        F.sum(bal_dec).alias("total_pos"),
+    )
+    return (
+        c.crossJoin(F.broadcast(stats))
+        .filter(bal_dec * F.col("n_pos") > F.col("total_pos"))
+        .join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("numcust"),
+            F.sum(bal_dec).cast("double").alias("totacctbal"),
+        )
+    )
+
 
 _QTY_DEC = "CAST(l_quantity AS DECIMAL(18,2))"
 

@@ -6,6 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.operators.materialize import (
+    materialize_scope,
+)
 from sample_data_pipeline_project_spark.plans.introspect import (
     exchange_count,
     join_strategies,
@@ -240,7 +243,7 @@ _BNLJ_ALLOWLIST: set[str] = {
     # round-10 additions, adjudicated round 11 (VERDICT r10 item 1):
     # - train_temperature_mix: the round-10 laziness fix normalizes
     #   per-source weights via crossJoin(broadcast(<1-row weight total>))
-    #   (workloads/analytics_round9.py) — 1-row side, bounded by design.
+    #   (workloads/curation_queries.py) — 1-row side, bounded by design.
     "train_temperature_mix",
     # - graph_knn_mutual_edges_ivf_balanced (C232): the balanced-vs-
     #   default bit-identity cert combines two 1-row summary aggregates
@@ -359,16 +362,20 @@ def test_registry_construction_is_lazy(spark):
 
     for t in TESTDATA_TABLES:
         load_table(spark, _SF, t)
+    # earlier tests may leave cache entries; the check below is this loop's
+    spark.catalog.clearCache()
     offenders: dict[str, int] = {}
     for name, w in sorted(load_all().items()):
         if name in _BUILD_JOB_ALLOWLIST:
             continue
         before = njobs()
-        w.fn(spark, _SF)
+        with materialize_scope():
+            w.fn(spark, _SF)
         launched = njobs() - before
         if launched > 0:
             offenders[name] = launched
     assert offenders == {}, offenders
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_registry_has_no_single_partition_window(spark):
@@ -381,13 +388,15 @@ def test_registry_has_no_single_partition_window(spark):
     window_offenders = {}
     cartesian_offenders = []
     bnlj_offenders = []
+    spark.catalog.clearCache()  # the check at the end is this loop's
     for name, w in sorted(load_all().items()):
-        df = w.fn(spark, _SF)
-        if name not in _GLOBAL_WINDOW_ALLOWLIST:
-            sites = single_partition_window_sites(df)
-            if sites:
-                window_offenders[name] = sites[0]
-        plan = physical_plan(df)
+        with materialize_scope():
+            df = w.fn(spark, _SF)
+            if name not in _GLOBAL_WINDOW_ALLOWLIST:
+                sites = single_partition_window_sites(df)
+                if sites:
+                    window_offenders[name] = sites[0]
+            plan = physical_plan(df)
         if "CartesianProduct" in plan:
             cartesian_offenders.append(name)
         if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOWLIST:
@@ -395,6 +404,7 @@ def test_registry_has_no_single_partition_window(spark):
     assert window_offenders == {}, window_offenders
     assert cartesian_offenders == [], cartesian_offenders
     assert bnlj_offenders == [], bnlj_offenders
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # --------------------------------------------------------------------------

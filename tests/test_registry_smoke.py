@@ -32,11 +32,6 @@ def registry_sweep(spark):
     def persisted() -> set[int]:
         return {int(i) for i in jsc.getPersistentRDDs().keySet()}
 
-    # Earlier tests build workloads outside any scope, which leaves cache
-    # entries whose blocks are stored only when a plan first executes. A
-    # scope never releases a plan someone else cached, so start from an
-    # empty cache: every cache the sweep sees is then its own workload's.
-    spark.catalog.clearCache()
     results = {}
     for name, w in sorted(load_all().items()):
         before = persisted()

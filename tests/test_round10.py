@@ -42,7 +42,7 @@ def _vectors(spark):
 def test_maxsim_matches_python_fold(spark):
     """Late-interaction score = sum over query vecs of max cosine,
     folded in qid order — replicated exactly in Python floats."""
-    from sample_data_pipeline_project_spark.workloads.analytics_round10 import (
+    from sample_data_pipeline_project_spark.workloads.similarity_queries import (
         _LI_GROUP,
         _LI_TOPK,
         sim_late_interaction_maxsim,
@@ -68,7 +68,7 @@ def test_maxsim_matches_python_fold(spark):
 
 def test_kcenter_matches_python_greedy(spark):
     """Greedy farthest-point selection replicated with the exact fold."""
-    from sample_data_pipeline_project_spark.workloads.analytics_round10 import (
+    from sample_data_pipeline_project_spark.workloads.curation_queries import (
         _KC_K,
         _KC_SEED_ID,
         sample_kcenter_coreset,
@@ -94,7 +94,7 @@ def test_kcenter_matches_python_greedy(spark):
 
 def test_balanced_ivf_cert_split_engages_and_matches(spark):
     row = __import__(
-        "sample_data_pipeline_project_spark.workloads.analytics_round10",
+        "sample_data_pipeline_project_spark.workloads.graph_linkage_queries",
         fromlist=["graph_knn_mutual_edges_ivf_balanced"],
     ).graph_knn_mutual_edges_ivf_balanced(spark, SF).collect()[0]
     assert row["split_engaged"] is True
@@ -123,7 +123,7 @@ def test_stream_anomaly_hand_computed(spark, tmp_path):
         for i, s in enumerate(times)
     ]
     sf = _write_events(spark, tmp_path, rows)
-    from sample_data_pipeline_project_spark.workloads.analytics_round10 import (
+    from sample_data_pipeline_project_spark.workloads.streaming_queries import (
         stream_anomaly_interarrival,
     )
 
@@ -250,7 +250,7 @@ def test_kcenter_plan_is_lazy(spark):
     """Building the coreset query launches no Spark jobs (the chained
     1-row broadcasts are all lazy) — the C231 eager-normalizer class."""
     from sample_data_pipeline_project_spark.sources.catalog import load_table
-    from sample_data_pipeline_project_spark.workloads.analytics_round10 import (
+    from sample_data_pipeline_project_spark.workloads.curation_queries import (
         sample_kcenter_coreset,
     )
 

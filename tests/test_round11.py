@@ -53,7 +53,7 @@ def test_pairs_ivf_forced_split_identical(spark):
 def test_semivf_floor_applies_only_under_gate_root(tmp_path):
     """Per-scale recall pins are measured against the canonical gate
     corpora; any other directory named like one must get 'default'."""
-    from sample_data_pipeline_project_spark.workloads.analytics_round11 import (
+    from sample_data_pipeline_project_spark.workloads.similarity_queries import (
         _SEMIVF_FLOORS,
         _semivf_floor,
     )
@@ -66,7 +66,7 @@ def test_semivf_floor_applies_only_under_gate_root(tmp_path):
 
 def test_semantic_dedup_ivf_certifies(spark):
     """The C236 gate workload returns all-TRUE at test scale."""
-    from sample_data_pipeline_project_spark.workloads.analytics_round11 import (
+    from sample_data_pipeline_project_spark.workloads.similarity_queries import (
         sim_semantic_dedup_ivf,
     )
 
@@ -97,7 +97,7 @@ def test_mmr_select_matches_python_greedy(spark):
     Python floats with the engines' exact left-fold dot — selection order
     and relevance values must match exactly."""
     from sample_data_pipeline_project_spark.sources.catalog import load_table
-    from sample_data_pipeline_project_spark.workloads.analytics_round11 import (
+    from sample_data_pipeline_project_spark.workloads.similarity_queries import (
         _MMR_DIV,
         _MMR_K,
         _MMR_LAM,
@@ -145,7 +145,7 @@ def test_dsir_scores_match_python_lm(spark):
     import math
 
     from sample_data_pipeline_project_spark.sources.catalog import load_table
-    from sample_data_pipeline_project_spark.workloads.analytics_round11 import (
+    from sample_data_pipeline_project_spark.workloads.text_queries import (
         _DSIR_B,
         _DSIR_TARGET,
         _DSIR_TOP,

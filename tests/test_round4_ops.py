@@ -105,7 +105,7 @@ def test_kmv_estimate_tracks_truth():
 # Poisson(1) inverse-CDF thresholds reproduce the pmf
 # --------------------------------------------------------------------------
 def test_poisson_threshold_draw_distribution():
-    from sample_data_pipeline_project_spark.workloads.analytics_round4f import (
+    from sample_data_pipeline_project_spark.workloads.stats_queries import (
         _POIS_T,
     )
 

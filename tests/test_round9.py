@@ -133,7 +133,7 @@ def test_chunk_overlap_spans(spark):
 
     d = tempfile.mkdtemp()
     df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    from sample_data_pipeline_project_spark.workloads.analytics_round9 import (
+    from sample_data_pipeline_project_spark.workloads.text_queries import (
         text_chunk_overlap,
     )
 
@@ -167,7 +167,7 @@ def test_chunk_dedup_finds_shared_windows(spark):
 
     d = tempfile.mkdtemp()
     df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    from sample_data_pipeline_project_spark.workloads.analytics_round9 import (
+    from sample_data_pipeline_project_spark.workloads.dedup_queries import (
         dedup_chunk_exact,
     )
 
@@ -180,7 +180,7 @@ def test_chunk_dedup_finds_shared_windows(spark):
 
 
 def test_temperature_mix_weights(spark):
-    from sample_data_pipeline_project_spark.workloads.analytics_round9 import (
+    from sample_data_pipeline_project_spark.workloads.curation_queries import (
         train_temperature_mix,
     )
 
@@ -207,11 +207,11 @@ def test_temperature_mix_is_lazy(spark):
     enters as a crossJoin of the 1-row total, not a construction-time
     .first()). Pinned via a job group: any job run while the group is
     active would show up in getJobIdsForGroup."""
-    from sample_data_pipeline_project_spark.workloads.analytics_round9 import (
+    from sample_data_pipeline_project_spark.workloads.curation_queries import (
         train_temperature_mix,
     )
 
-    from sample_data_pipeline_project_spark.workloads.analytics_round9 import (
+    from sample_data_pipeline_project_spark.workloads.text_queries import (
         text_chunk_overlap,
     )
 
