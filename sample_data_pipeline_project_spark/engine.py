@@ -18,13 +18,25 @@ local[N]:
     session's core count rather than the 200 default, and AQE's wide
     start at 8 x cores (256 at 32); at cluster scale either is
     overridden per-deploy through `extra_conf`.
+
+This is the only module that changes a session's conf. A query that
+needs other settings takes them as writer/UDTF options or runs in
+`session_with(spark, conf)`, so queries sharing one session never see
+each other's settings. Deploy-specific confs (e.g. the RocksDB state
+store provider) go in through `get_spark(extra_conf=...)`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
+
+from sample_data_pipeline_project_spark.functions.timeops import (
+    NANOS_AS_LONG_CONF,
+)
 
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -48,6 +60,10 @@ _DEFAULTS = {
     # This also resolves the driver-measured r11 regression on
     # dedup_minhash_lsh (3.67 -> 1.69 s in the same A/B).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # events.parquet's TIMESTAMP(NANOS) `ts` arrives as BIGINT epoch-nanos
+    # (functions/timeops.py); on from the start, so loading events does
+    # not change a live session's conf.
+    NANOS_AS_LONG_CONF: "true",
     # Keep planner stats honest on raw parquet dirs.
     "spark.sql.parquet.filterPushdown": "true",
     # local[N] runs single-JVM; cap UI/noise.
@@ -97,21 +113,6 @@ def width_conf(parallelism: int) -> dict[str, str]:
     }
 
 
-# Streaming state-store backend. The default (HDFS-backed) provider keeps
-# every key's state as JVM objects on-heap — at 1M+ distinct keys
-# (stream_debounce at sf10) the store itself becomes the dominant cost
-# and competes with shuffles for the unified heap. RocksDB
-# (rocksdbjni ships with Spark) keeps state off-heap with an on-disk
-# spill path, which is the documented deployment answer for
-# high-key-cardinality stateful queries. Opt-in knob, measured in
-# SCALING.md before being made a default anywhere:
-#   SPARK_GRAFT_STATESTORE=rocksdb
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
 def _cpus() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
@@ -141,10 +142,6 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            _ROCKSDB_PROVIDER
-        )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -152,13 +149,6 @@ def get_spark(
         for k, v in width_conf(spark.sparkContext.defaultParallelism).items():
             if k not in (extra_conf or {}):
                 spark.conf.set(k, v)
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        # getOrCreate ignores builder conf on a live session; the provider
-        # is a runtime SQL conf read at stream START, so re-apply it here
-        # to cover the shared-session (pytest) path too.
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
     # Hygiene: reap warehouse scratch left by DEAD processes (per-pid
     # scratch dirs and pid-scoped bucketed tables — see
     # sources/scratch.py:reap_dead_scratch). Safe on a live session:
@@ -172,6 +162,44 @@ def get_spark(
     except Exception:
         pass
     return spark
+
+
+# caller session -> {frozen conf: child}; see session_with
+_CHILDREN: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CHILDREN_LOCK = threading.Lock()
+
+
+def session_with(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session running with the caller's SQL conf plus `conf`, leaving
+    the caller's own conf untouched: the way a query gets settings of its
+    own while other queries share `spark`.
+
+    The child shares the caller's SparkContext, cache and catalog (not
+    its temp views or UDFs). There is one child per caller and `conf`,
+    re-synced to the caller's conf and database on every call: each session
+    that starts a stream adds listeners to the shared listener bus that
+    are never removed, so a fresh child per query would leak them."""
+    key = frozenset(conf.items())
+    with _CHILDREN_LOCK:
+        kids = _CHILDREN.setdefault(spark, {})
+        if key not in kids:
+            kids[key] = spark.newSession()
+        child = kids[key]
+        want = {**spark.conf.getAll, **conf}
+        have = child.conf.getAll
+        for k in have.keys() - want.keys():
+            if child.conf.isModifiable(k):
+                child.conf.unset(k)
+        for k, v in want.items():
+            if have.get(k) != v and child.conf.isModifiable(k):
+                child.conf.set(k, v)
+        db = spark.catalog.currentDatabase()
+        if child.catalog.currentDatabase() != db:
+            child.catalog.setCurrentDatabase(db)
+        # table listings are cached per session: drop the child's, so a
+        # table the caller rewrote since the last call is listed afresh
+        child._jsparkSession.sessionState().catalog().invalidateAllCachedTables()
+    return child
 
 
 def stop_spark() -> None:

@@ -8,11 +8,11 @@ scan, so callers never pay for a true full scan.
 Scale notes:
   - Loading is lazy; no data moves until an action. Filters composed later
     reach the parquet reader (`PushedFilters` in .explain).
-  - `events.ts` is parquet TIMESTAMP(NANOS): Spark's reader rejects it, so
-    the loader flips `spark.sql.legacy.parquet.nanosAsLong` and rebuilds a
-    TIMESTAMP_NTZ column timezone-independently (functions/timeops.py).
-    The conf is a dynamic SQL conf; it is left set for the session so the
-    lazy scan stays valid at execution time.
+  - `events.ts` is parquet TIMESTAMP(NANOS): Spark's reader rejects it
+    unless `spark.sql.legacy.parquet.nanosAsLong` is on (the engine's
+    sessions start with it; the loader sets it on any other session), and
+    the loader rebuilds a TIMESTAMP_NTZ column timezone-independently
+    (functions/timeops.py).
 """
 
 from __future__ import annotations
@@ -50,9 +50,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     key = os.path.realpath(path)
-    if name == "events":
-        # Dynamic conf: must be set before the read resolves the footer
-        # schema AND still set at execution; leave it on for the session.
+    if name == "events" and spark.conf.get(NANOS_AS_LONG_CONF) != "true":
+        # The engine starts its sessions with this conf on; a session it
+        # did not start (a driver's) gets it here, the one conf write
+        # outside engine.py. It must be set before the read resolves the
+        # footer schema AND still set at execution, so it stays on.
         # Harmless when the writer used TIMESTAMP(MICROS) — the column then
         # arrives as TIMESTAMP_NTZ and ensure_ts_ntz leaves it alone.
         spark.conf.set(NANOS_AS_LONG_CONF, "true")

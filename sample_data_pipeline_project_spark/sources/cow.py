@@ -38,8 +38,6 @@ from sample_data_pipeline_project_spark.envelope import new_query_id, run_task
 from sample_data_pipeline_project_spark.log_utils import LogBlock
 from sample_data_pipeline_project_spark.operators.materialize import materialize
 
-_DYN = "spark.sql.sources.partitionOverwriteMode"
-
 
 def _mutate_partitions(
     spark: SparkSession,
@@ -62,7 +60,7 @@ def _mutate_partitions(
         ]
         scope = df.filter(F.col(partition_col).isin(days))
         rewritten = materialize(transform(scope, predicate), "checkpoint")
-        _overwrite_partitions(spark, rewritten, path, partition_col)
+        _overwrite_partitions(rewritten, path, partition_col)
     _refresh_after_rewrite(spark, path)
     return affected
 
@@ -80,21 +78,18 @@ def _refresh_after_rewrite(spark: SparkSession, path: str) -> None:
 
 
 def _overwrite_partitions(
-    spark: SparkSession, rewritten: DataFrame, path: str, partition_col: str
+    rewritten: DataFrame, path: str, partition_col: str
 ) -> None:
     """Replace only the partitions present in `rewritten` (dynamic
-    partition overwrite), one file per partition."""
-    prev = spark.conf.get(_DYN, "static")
-    spark.conf.set(_DYN, "dynamic")
-    try:
-        (
-            rewritten.repartition(1, partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(_DYN, prev)
+    partition overwrite, an option of this write alone), one file per
+    partition."""
+    (
+        rewritten.repartition(1, partition_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def cow_update(
@@ -201,7 +196,7 @@ def cow_merge(
                 .unionByName(source.select(*cols)),
                 "checkpoint",
             )
-            _overwrite_partitions(spark, rewritten, path, partition_col)
+            _overwrite_partitions(rewritten, path, partition_col)
         _refresh_after_rewrite(spark, path)
         return {
             "query_id": new_query_id(),

@@ -10,6 +10,10 @@ is also how the streaming result gets cross-checked against the DuckDB
 batch oracle (stream-vs-batch parity is the correctness statement that
 matters for an incremental engine).
 
+Stream reads come from `stream_session(spark)`, a child session with the
+state width pinned, so a stream never changes the conf of the session
+other queries share; its result frames belong to that child.
+
 Scale notes:
   - State size is bounded by the watermark: closed windows are evicted, so
     steady-state memory is (#keys x #open windows), independent of stream
@@ -29,21 +33,40 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sample_data_pipeline_project_spark.engine import session_with
 from sample_data_pipeline_project_spark.functions.timeops import (
     NANOS_AS_LONG_CONF,
     ensure_ts_ntz,
 )
 
 
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The session every stream read comes from: the caller's conf with
+    `spark.sql.shuffle.partitions` pinned to 8, in a child session
+    (`engine.session_with`), so the caller's own width is never touched.
+
+    The width is the stateful operators' partition count, and every
+    stateful-stream partition carries a whole state store, whose fixed
+    per-batch cost (snapshot, commit, file IO) dwarfs row work on
+    moderate key counts — 32 stores vs 8 was 16.4s vs 3.5s on the test
+    corpus. Size it to key cardinality / executor count on a real cluster
+    (the value is fixed at first start by the checkpoint, by design).
+    nanosAsLong is on too, so the events file source reads
+    TIMESTAMP(NANOS) on a session the engine did not start."""
+    return session_with(
+        spark, {"spark.sql.shuffle.partitions": "8", NANOS_AS_LONG_CONF: "true"}
+    )
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as an unbounded stream (file source; each parquet
-    file is one micro-batch unit).
+    file is one micro-batch unit), read from `stream_session(spark)`.
 
     The file source needs an explicit schema; probe it from the parquet
     footer with a (lazy, metadata-only) batch read so both event-time
     encodings the driver has shipped work: TIMESTAMP(NANOS) (BIGINT `ts`
     under the nanosAsLong conf) and TIMESTAMP(MICROS) (TIMESTAMP_NTZ)."""
-    spark.conf.set(NANOS_AS_LONG_CONF, "true")
+    spark = stream_session(spark)
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     raw_schema = spark.read.parquet(path).schema
     # The file source wants a directory basePath; the testdata table is a
@@ -224,20 +247,12 @@ def user_totals_stateful(events: DataFrame) -> DataFrame:
 
 
 def run_stream_to_table(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int = 8,
+    stream_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Execute a streaming DataFrame over the finite source with the
-    availableNow trigger into a memory sink; returns the materialized
-    result as a batch DataFrame.
-
-    `state_partitions` pins `spark.sql.shuffle.partitions` for this query:
-    every stateful-stream partition carries a whole state store, whose
-    fixed per-batch cost (snapshot, commit, file IO) dwarfs row work on
-    moderate key counts — 32 stores vs 8 was 16.4s vs 3.5s on the test
-    corpus. Size it to key cardinality / executor count on a real cluster
-    (the value is fixed at first start by the checkpoint, by design).
+    availableNow trigger; returns the result as a batch DataFrame of the
+    stream's session. The stream runs with that session's conf as it
+    stands: streams read from `stream_session` get its state width.
 
     SINK CHOICE (round-8 scale fix): append-mode output volume is
     data-scale-bound (the OOO gap stream emits ~0.95 rows per input row),
@@ -246,46 +261,45 @@ def run_stream_to_table(
     OOM found by the probe. Append streams therefore land in a
     per-process parquet FILE sink (executor-side, spill-free) and return
     as a lazy batch scan; complete-mode aggregates stay on the memory
-    sink, whose size is the (bounded) aggregate state, not the data."""
+    sink, whose size is the (bounded) aggregate state, not the data. The
+    memory sink's temp view is dropped once the frame holds its plan, so
+    runs do not accumulate views in the session."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        if output_mode == "append":
-            from sample_data_pipeline_project_spark.sources.scratch import (
-                scratch_dir,
-            )
+    if output_mode == "append":
+        from sample_data_pipeline_project_spark.sources.scratch import (
+            scratch_dir,
+        )
 
-            root = scratch_dir(f"stream_sink_{uuid.uuid4().hex[:8]}")
-            q = (
-                stream_df.writeStream.format("parquet")
-                .option("path", f"{root}/data")
-                .option("checkpointLocation", f"{root}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-            # An availableNow stream over an EMPTY source may execute no
-            # batch at all, leaving the data dir uncreated; the memory
-            # sink returned an empty table in that case, so match it
-            # rather than raising PATH_NOT_FOUND.
-            os.makedirs(f"{root}/data", exist_ok=True)
-            return spark.read.schema(stream_df.schema).parquet(f"{root}/data")
-        name = f"stream_out_{uuid.uuid4().hex[:8]}"
+        root = scratch_dir(f"stream_sink_{uuid.uuid4().hex[:8]}")
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+            stream_df.writeStream.format("parquet")
+            .option("path", f"{root}/data")
+            .option("checkpointLocation", f"{root}/ckpt")
+            .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+        # An availableNow stream over an EMPTY source may execute no
+        # batch at all, leaving the data dir uncreated; the memory
+        # sink returned an empty table in that case, so match it
+        # rather than raising PATH_NOT_FOUND.
+        os.makedirs(f"{root}/data", exist_ok=True)
+        return spark.read.schema(stream_df.schema).parquet(f"{root}/data")
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    q.stop()
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 # ---------------------------------------------------------------------------

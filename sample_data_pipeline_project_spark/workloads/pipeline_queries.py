@@ -271,14 +271,13 @@ FROM e
 def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking via Python UDTF (lateral generator join):
     every document fans out into 32-token chunks at stride 16 (50%%
-    overlap). Arrow-batched UDTF execution; the generator runs
-    executor-side so no per-doc array ever sits on the driver. At corpus
-    scale this is a map-only stage — no shuffle at all."""
+    overlap). The generator runs executor-side (row-path UDTF, see
+    operators/chunking.py) so no per-doc array ever sits on the driver.
+    At corpus scale this is a map-only stage — no shuffle at all."""
     from sample_data_pipeline_project_spark.operators.chunking import (
         register_chunker,
     )
 
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
     register_chunker(spark)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("_docs_chunk_src")
     return spark.sql(

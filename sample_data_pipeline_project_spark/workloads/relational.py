@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.engine import session_with
 from sample_data_pipeline_project_spark.operators.rangejoin import band_range_join
 from sample_data_pipeline_project_spark.sources.catalog import (
     load_table,
@@ -654,61 +655,52 @@ def join_skew_aqe_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (C36) measures the skew, this certifies the runtime mitigation.
     The value result (per-group rollup over the joined rows) is
     oracle-hashed like any other workload, so the mitigation is also
-    certified to not change answers."""
-    old = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    try:
-        for k, v in _SKEW_CONFS.items():
-            spark.conf.set(k, v)
-        # Load INSIDE the conf window: file-split planning happens at
-        # execution, but keeping the whole lifecycle inside makes the
-        # mapper-count precondition explicit.
-        li = load_table(spark, sf_dir, "lineitem")
-        fact = li.select(
-            F.when(F.col("l_orderkey") % 2 == 0, F.lit(0))
-            .otherwise(F.col("l_orderkey") % _SKEW_MOD + 1)
-            .cast("long")
-            .alias("k"),
-            "l_quantity",
-            "l_extendedprice",
-        ).repartition(_SKEW_FACT_MAPPERS)  # see _SKEW_FACT_MAPPERS note
-        dim = spark.range(0, _DIM_N).select(
-            F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
+    certified to not change answers. The certification runs in a child
+    session carrying `_SKEW_CONFS` (`engine.session_with`); the returned
+    query is the same one built on the caller's session and conf."""
+    # AQE decisions are runtime decisions: the final adaptive plan (and
+    # its skew markers) exists only after execution, so materialize the
+    # (7-row) result, then inspect the SAME QueryExecution's executed plan.
+    cert = _skew_rollup(session_with(spark, _SKEW_CONFS), sf_dir)
+    cert.collect()
+    plan = cert._jdf.queryExecution().executedPlan().toString()
+    if "skew=true" not in plan:
+        raise AssertionError(
+            "expected AQE skew-join mitigation (skew=true on the "
+            "sort-merge join) on the hot-key join; plan:\n" + plan
         )
-        out = (
-            fact.join(dim, "k")
-            .groupBy("grp")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(F.col("l_quantity").cast("long"))
-                .cast("long")
-                .alias("sum_qty"),
-                F.sum(
-                    (
-                        F.col("l_extendedprice").cast("decimal(18,2)") * 100
-                    ).cast("long")
+    return _skew_rollup(spark, sf_dir)
+
+
+def _skew_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The hot-key join and its per-group rollup, built on `spark`."""
+    li = load_table(spark, sf_dir, "lineitem")
+    fact = li.select(
+        F.when(F.col("l_orderkey") % 2 == 0, F.lit(0))
+        .otherwise(F.col("l_orderkey") % _SKEW_MOD + 1)
+        .cast("long")
+        .alias("k"),
+        "l_quantity",
+        "l_extendedprice",
+    ).repartition(_SKEW_FACT_MAPPERS)  # see _SKEW_FACT_MAPPERS note
+    dim = spark.range(0, _DIM_N).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
+    )
+    return (
+        fact.join(dim, "k")
+        .groupBy("grp")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum(F.col("l_quantity").cast("long")).cast("long").alias("sum_qty"),
+            F.sum(
+                (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
+                    "long"
                 )
-                .cast("long")
-                .alias("rev_cents"),
             )
+            .cast("long")
+            .alias("rev_cents"),
         )
-        # AQE decisions are runtime decisions: the final adaptive plan
-        # (and its skew markers) exists only after execution, so
-        # materialize the (7-row) result, then inspect the SAME
-        # QueryExecution's executed plan.
-        out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if "skew=true" not in plan:
-            raise AssertionError(
-                "expected AQE skew-join mitigation (skew=true on the "
-                "sort-merge join) on the hot-key join; plan:\n" + plan
-            )
-        return out
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -750,7 +742,9 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero movement; the rollup result is oracle-hashed against the
     plain (layout-free) join, certifying the layout changes the PLAN,
     never the answer. Tables are pid-scoped under the gitignored
-    warehouse (the scratch_dir convention)."""
+    warehouse (the scratch_dir convention). The exchange check runs in a
+    child session carrying `_BKT_CONFS` (`engine.session_with`); the
+    returned query is built on the caller's session and conf."""
     import os
 
     from sample_data_pipeline_project_spark.plans.introspect import (
@@ -768,51 +762,39 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     reap_dead_scratch()
     pid = os.getpid()
     to, tl = f"bkt_orders_{pid}", f"bkt_lineitem_{pid}"
-    old = {k: spark.conf.get(k, None) for k in _BKT_CONFS}
-    try:
-        for k, v in _BKT_CONFS.items():
-            spark.conf.set(k, v)
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_extendedprice"
+    )
+    o.write.bucketBy(_BKT_N, "o_orderkey").sortBy("o_orderkey").mode(
+        "overwrite"
+    ).format("parquet").saveAsTable(to)
+    li.write.bucketBy(_BKT_N, "l_orderkey").sortBy("l_orderkey").mode(
+        "overwrite"
+    ).format("parquet").saveAsTable(tl)
+
+    def join(s: SparkSession) -> DataFrame:
+        bo, bl = s.table(to), s.table(tl)
+        return bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"])
+
+    cert = join(session_with(spark, _BKT_CONFS))
+    nx = exchange_count(cert)
+    if nx != 0:
+        raise AssertionError(
+            f"bucketed co-located join planned {nx} shuffle "
+            "exchange(s); the write-time bucket layout must satisfy "
+            "the join distribution. Plan:\n"
+            + cert._jdf.queryExecution().executedPlan().toString()
         )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity", "l_extendedprice"
+    return join(spark).groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).cast("long").alias("n_items"),
+        F.sum(F.col("l_quantity").cast("long")).cast("long").alias("sum_qty"),
+        F.sum(
+            (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
         )
-        o.write.bucketBy(_BKT_N, "o_orderkey").sortBy("o_orderkey").mode(
-            "overwrite"
-        ).format("parquet").saveAsTable(to)
-        li.write.bucketBy(_BKT_N, "l_orderkey").sortBy("l_orderkey").mode(
-            "overwrite"
-        ).format("parquet").saveAsTable(tl)
-        bo, bl = spark.table(to), spark.table(tl)
-        joined = bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"])
-        nx = exchange_count(joined)
-        if nx != 0:
-            raise AssertionError(
-                f"bucketed co-located join planned {nx} shuffle "
-                "exchange(s); the write-time bucket layout must satisfy "
-                "the join distribution. Plan:\n"
-                + joined._jdf.queryExecution().executedPlan().toString()
-            )
-        return joined.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(F.col("l_quantity").cast("long"))
-            .cast("long")
-            .alias("sum_qty"),
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("rev_cents"),
-        )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        .cast("long")
+        .alias("rev_cents"),
+    )
 
 
 # --------------------------------------------------------------------------

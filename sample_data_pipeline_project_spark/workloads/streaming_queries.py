@@ -9,7 +9,6 @@ imports it from the batch family's module.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -26,6 +25,7 @@ from sample_data_pipeline_project_spark.streaming.eventtime import (
     hourly_counts_stream,
     run_stream_to_table,
     stream_events,
+    stream_session,
 )
 from sample_data_pipeline_project_spark.workloads import workload
 from sample_data_pipeline_project_spark.workloads.dedup_queries import (
@@ -269,7 +269,7 @@ _OOO_BATCHES = 4
 # value ranges -> nothing arrives below the watermark at ANY split;
 # terminal availableNow batch flushes start_ts <= max - delay), which
 # tests/test_streaming.py pins by running the same data at two widths.
-_OOO_ROWS_PER_BATCH = int(os.environ.get("SPARK_GRAFT_OOO_ROWS_PER_BATCH", 250_000))
+_OOO_ROWS_PER_BATCH = 250_000
 _OOO_MAX_BATCHES = 64
 
 
@@ -395,7 +395,8 @@ def stream_ledger_gaps_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(stage)
         )
     stream = (
-        spark.readStream.schema(runs.schema)
+        stream_session(spark)
+        .readStream.schema(runs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
@@ -571,7 +572,8 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     doc_stream = (
-        spark.readStream.schema(d.schema)
+        stream_session(spark)
+        .readStream.schema(d.schema)
         .format("parquet")
         .load(f"{sf_dir.rstrip('/')}/documents.parque[t]")
     )
@@ -596,7 +598,8 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     doc_stream2 = (
-        spark.readStream.schema(d.schema)
+        stream_session(spark)
+        .readStream.schema(d.schema)
         .format("parquet")
         .load(f"{sf_dir.rstrip('/')}/documents.parque[t]")
     )
@@ -1006,7 +1009,8 @@ def stream_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o_schema = load_table(spark, sf_dir, "orders").schema
     orders_stream = (
-        spark.readStream.schema(o_schema)
+        stream_session(spark)
+        .readStream.schema(o_schema)
         .format("parquet")
         .load(f"{sf_dir.rstrip('/')}/orders.parque[t]")
     )

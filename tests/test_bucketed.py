@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.engine import session_with
 from sample_data_pipeline_project_spark.sources.bucketed import (
     bucketed_join,
     ensure_bucketed_table,
@@ -17,25 +18,23 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture()
 def no_broadcast(spark):
-    """Disable broadcast so the join strategy question is real (at test SF
-    everything fits in a broadcast, which would hide a missing shuffle)."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    """A session with broadcast disabled, so the join strategy question is
+    real (at test SF everything fits in a broadcast, which would hide a
+    missing shuffle)."""
+    return session_with(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
 
 
-def test_bucketed_join_has_no_exchange(spark, no_broadcast):
-    joined = bucketed_join(spark, SF)
+def test_bucketed_join_has_no_exchange(no_broadcast):
+    joined = bucketed_join(no_broadcast, SF)
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert "Exchange" not in plan  # the whole point of bucketing
 
 
-def test_unbucketed_join_does_shuffle(spark, no_broadcast):
+def test_unbucketed_join_does_shuffle(no_broadcast):
     """Control: the same join over plain parquet shuffles both sides."""
-    o = load_table(spark, SF, "orders")
-    l = load_table(spark, SF, "lineitem")
+    o = load_table(no_broadcast, SF, "orders")
+    l = load_table(no_broadcast, SF, "lineitem")
     plan = (
         l.join(o, l["l_orderkey"] == o["o_orderkey"])
         ._jdf.queryExecution()

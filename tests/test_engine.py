@@ -1,13 +1,18 @@
-"""Engine session widths: the width rule on a new session, `extra_conf`
-pins, and a live session left alone by later `get_spark()` calls."""
+"""Engine session conf: the width rule on a new session, `extra_conf`
+pins, a live session left alone by later `get_spark()` calls, and
+per-query conf through `session_with` instead of the shared session."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+
+from sample_data_pipeline_project_spark.engine import session_with
 
 _INIT = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 _SHUFFLE = "spark.sql.shuffle.partitions"
@@ -66,3 +71,71 @@ def test_get_spark_leaves_live_session_widths(spark):
     # the client's lazy connect is a second get_spark() call
     assert SparkQueryClient().spark is spark
     assert (spark.conf.get(_SHUFFLE), spark.conf.get(_INIT)) == before
+
+
+def test_session_with_gives_a_query_its_conf_on_a_child(spark):
+    adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.getAll
+    child = session_with(spark, {_SHUFFLE: "9"})
+    assert spark.conf.getAll == before
+    assert child is not spark and child.sparkContext is spark.sparkContext
+    assert child.conf.get(_SHUFFLE) == "9"
+    assert child.conf.get(_INIT) == spark.conf.get(_INIT)
+    # one child per caller and conf, re-synced to the caller on each call
+    assert adv not in before
+    spark.conf.set(adv, "1MB")
+    try:
+        assert session_with(spark, {_SHUFFLE: "9"}) is child
+        assert child.conf.get(adv) == "1MB"
+    finally:
+        spark.conf.unset(adv)
+    assert session_with(spark, {_SHUFFLE: "9"}) is child
+    assert adv not in child.conf.getAll
+    assert session_with(spark, {_SHUFFLE: "7"}) is not child
+
+
+def test_session_with_lists_tables_the_caller_rewrote(spark):
+    # without the re-sync the child keeps its listing of the first write
+    # and fails with FAILED_READ_FILE.FILE_NOT_EXIST
+    name = f"session_with_t_{os.getpid()}"
+    try:
+        spark.range(10).write.mode("overwrite").saveAsTable(name)
+        assert session_with(spark, {_SHUFFLE: "9"}).table(name).count() == 10
+        spark.range(25).write.mode("overwrite").saveAsTable(name)
+        assert session_with(spark, {_SHUFFLE: "9"}).table(name).count() == 25
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_session_with_gives_concurrent_callers_one_child(spark):
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            kids = list(
+                pool.map(lambda _: session_with(spark, {_SHUFFLE: "11"}), range(32))
+            )
+    finally:
+        sys.setswitchinterval(interval)
+    assert len({id(k) for k in kids}) == 1
+    assert kids[0].conf.get(_SHUFFLE) == "11"
+
+
+def test_only_the_engine_sets_session_conf():
+    """A query's settings travel with the query (writer and UDTF options,
+    `session_with`). The one conf write outside engine.py is
+    `load_table`'s nanosAsLong fallback for sessions the engine did not
+    start."""
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "sample_data_pipeline_project_spark"
+    files = [*pkg.rglob("*.py"), *(root / "tools").glob("*.py"), *root.glob("*.py")]
+    writes = re.compile(r"conf\.(set|unset)\(|sql\(\s*f?[\"']\s*(re)?set\b", re.I)
+    offenders = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(files)
+        if p.name != "engine.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if writes.search(line)
+        and not (p.name == "catalog.py" and "NANOS_AS_LONG_CONF" in line)
+    ]
+    assert not offenders, offenders

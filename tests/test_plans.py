@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.engine import session_with
 from sample_data_pipeline_project_spark.operators.materialize import (
     materialize_scope,
 )
@@ -78,27 +79,12 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        o = load_table(spark, _SF, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        li = load_table(spark, _SF, "lineitem")
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .count()
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan, plan[:2000]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    s = session_with(spark, confs)
+    o = load_table(s, _SF, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    li = load_table(s, _SF, "lineitem")
+    j = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderpriority").count()
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain" in plan, plan[:2000]
 
 
 def test_tfidf_idf_join_broadcasts(spark):

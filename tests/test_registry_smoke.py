@@ -26,7 +26,8 @@ _SF = "/root/testdata/sf0.001"
 def registry_sweep(spark):
     """One pass over the registry: build each workload's DataFrame once,
     capture (schema, count-or-error, RDDs persisted by the run and still
-    persisted after its scope) for the tests below to assert on."""
+    persisted after its scope, session conf keys the run changed) for the
+    tests below to assert on."""
     jsc = spark.sparkContext._jsc
 
     def persisted() -> set[int]:
@@ -35,6 +36,7 @@ def registry_sweep(spark):
     results = {}
     for name, w in sorted(load_all().items()):
         before = persisted()
+        conf = spark.conf.getAll
         try:
             with materialize_scope():
                 df = w.fn(spark, _SF)
@@ -43,14 +45,20 @@ def registry_sweep(spark):
             err = None
         except Exception as exc:  # noqa: BLE001 - collect all failures
             schema, n, err = None, -1, f"{type(exc).__name__}: {exc}"
-        results[name] = (schema, n, err, persisted() - before)
+        after = spark.conf.getAll
+        changed = {
+            k: (conf.get(k), after.get(k))
+            for k in conf.keys() | after.keys()
+            if conf.get(k) != after.get(k)
+        }
+        results[name] = (schema, n, err, persisted() - before, changed)
     return results
 
 
 def test_every_workload_runs_under_terminal_count(registry_sweep):
     failures = [
         f"{name}: {err if err else 'negative count'}"
-        for name, (_, n, err, _) in registry_sweep.items()
+        for name, (_, n, err, _, _) in registry_sweep.items()
         if err or n < 0
     ]
     assert not failures, failures[:3]
@@ -61,10 +69,19 @@ def test_no_workload_leaves_a_persisted_rdd_after_its_scope(registry_sweep):
     `materialize`, so closing the run's scope releases all of them."""
     leaks = {
         name: sorted(left)
-        for name, (_, _, _, left) in registry_sweep.items()
+        for name, (_, _, _, left, _) in registry_sweep.items()
         if left
     }
     assert not leaks, leaks
+
+
+def test_no_workload_changes_the_session_conf(registry_sweep):
+    """A workload's own settings ride on its writes, UDTFs or a child
+    session (`engine.session_with`), never on the session it shares."""
+    changed = {
+        name: diff for name, (*_, diff) in registry_sweep.items() if diff
+    }
+    assert not changed, changed
 
 
 def test_no_workload_emits_complex_typed_output(registry_sweep):
@@ -80,7 +97,7 @@ def test_no_workload_emits_complex_typed_output(registry_sweep):
     from pyspark.sql import types as T
 
     offenders = []
-    for name, (schema, _, err, _) in registry_sweep.items():
+    for name, (schema, _, err, _, _) in registry_sweep.items():
         if schema is None:
             continue  # execution failure already reported above
         for field in schema.fields:

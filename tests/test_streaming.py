@@ -158,3 +158,61 @@ def test_run_stream_to_table_append_empty_source(spark, tmp_path):
     got = run_stream_to_table(stream, "append")
     assert got.count() == 0
     assert [f.name for f in got.schema.fields] == ["event_id", "user_id"]
+
+
+def test_memory_sink_runs_leave_no_stream_view(spark, events_stream):
+    got = run_stream_to_table(hourly_counts_stream(events_stream))
+    assert got.count() > 0  # the frame outlives its view
+    views = [
+        t.name
+        for s in (spark, events_stream.sparkSession)
+        for t in s.catalog.listTables()
+        if t.name.startswith("stream_out_")
+    ]
+    assert not views, views
+
+
+def test_stream_state_width_rides_on_the_stream_session(spark, monkeypatch):
+    """stream_debounce's stateful operator runs 8 state partitions while
+    the caller's own width stays as it is for the whole run, and a second
+    run reuses the stream session. Every session that starts a stream
+    adds a listener to the shared bus that is never removed, so a fresh
+    child session per run would grow the bus by one per run on top of
+    the at most one that Spark's own per-query session clone adds."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from sample_data_pipeline_project_spark.operators.materialize import (
+        materialize_scope,
+    )
+    from sample_data_pipeline_project_spark.workloads import load_all
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        started.append((q, spark.conf.get("spark.sql.shuffle.partitions")))
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    w = load_all()["stream_debounce"]
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    conf = spark.conf.getAll
+    listeners = []
+    for _ in range(2):
+        with materialize_scope():
+            assert w.fn(spark, _SF_DIR).count() > 0
+        listeners.append(bus.listeners().size())
+    assert spark.conf.getAll == conf
+    assert len(started) == 2
+    for q, caller_width in started:
+        assert caller_width == conf["spark.sql.shuffle.partitions"]
+        widths = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+        assert widths == {8}
+    (q1, _), (q2, _) = started
+    assert q1._jsq.sparkSession().equals(q2._jsq.sparkSession())
+    assert listeners[1] - listeners[0] <= 1
