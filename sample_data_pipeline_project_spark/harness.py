@@ -131,6 +131,8 @@ def stage_table(spark, tag: str) -> list[dict]:
     first. Only stages that ran are listed: a stage skipped because its
     shuffle output was reused did no work.
 
+    A stage is named by its job's description if it has one (each
+    `iterate` round, each stream batch), else by its JVM call site.
     Task-seconds and the max task are executor run time (the
     `executorRunTime` task metric), so the max never exceeds the sum;
     sizes are MB of 10^6 bytes."""
@@ -168,9 +170,11 @@ def stage_table(spark, tag: str) -> list[dict]:
                 st.completionTime().get().getTime()
                 - st.submissionTime().get().getTime()
             )
+            desc = st.description()
+            name = desc.get() if desc.isDefined() else st.name()
             rows.append({
                 "stage": sid,
-                "name": st.name()[:120],
+                "name": " ".join(name.split())[:120],
                 "wall_sec": round(wall_ms / 1000.0, 2),
                 "n_tasks": st.numCompleteTasks(),
                 "task_sec_sum": round(st.executorRunTime() / 1000.0, 2),

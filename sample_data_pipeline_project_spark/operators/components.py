@@ -19,17 +19,19 @@ per round re-expands the self-joined plan enough to cost MORE — one is
 the sweet spot). Each round is one edge-sized shuffle join + aggregate
 plus one label-sized hash join — at 100 TB corpus scale the edge list
 is the near-dup pair set, orders of magnitude smaller than the corpus.
-Lineage is truncated every round with an eager localCheckpoint; the
-convergence check rides on the SAME job via df.observe (no separate
-count pass).
+Rounds run through `materialize.iterate`, which stops at the first
+round that changes no label.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 
 
 def connected_components(
@@ -52,7 +54,8 @@ def connected_components(
     max_iter bounds the PROPAGATION rounds and must exceed the graph
     diameter by one: confirming convergence inherently costs a final
     zero-change round. Extra budget is free — the loop exits on the
-    first zero-change round — so the default is generous.
+    first zero-change round — so the default is generous; too little
+    raises RuntimeError (the labels would not be component minima).
     """
     # Materialize the edge list BEFORE symmetrizing: the union reads it in
     # both branches, so checkpointing after the union would execute the
@@ -80,9 +83,9 @@ def connected_components(
         sym.select(F.col("src").alias("vid")).distinct(),
         "capped_disk",
     )
-    labels = active.select("vid", F.col("vid").alias("comp"))
-    changed = 0
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("vid", "comp")
         nbr_min = (
             sym.join(labels, sym["src"] == labels["vid"])
             .select(F.col("dst").alias("vid"), "comp")
@@ -102,31 +105,17 @@ def connected_components(
         jumped = stepped.select(
             F.col("vid").alias("jvid"), F.col("comp").alias("jcomp")
         )
-        obs = Observation()
-        merged = materialize(
-            stepped.join(jumped, stepped["comp"] == jumped["jvid"])
-            .select("vid", "old_comp", F.col("jcomp").alias("comp"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("comp") < F.col("old_comp"), 1).otherwise(0)
-                ).alias("changed"),
-            ),
-            "capped",
+        return stepped.join(jumped, stepped["comp"] == jumped["jvid"]).select(
+            "vid", "old_comp", F.col("jcomp").alias("comp")
         )
-        changed = int(obs.get["changed"] or 0)
-        labels = merged.select("vid", "comp")
-        if changed == 0:
-            break
-    if changed:
-        # Propagation needs O(diameter) rounds; exhausting max_iter first
-        # means the labels are NOT component minima. Silent wrong answers
-        # are worse than a loud one.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter (the graph "
-            "diameter exceeds the round budget)"
-        )
+
+    labels = iterate(
+        active.select("vid", F.col("vid").alias("comp")),
+        step,
+        max_iter,
+        name="connected_components",
+        changed=F.when(F.col("comp") < F.col("old_comp"), 1).otherwise(0),
+    ).select("vid", "comp")
     v = vertices.select(F.col(id_col).alias("vid"))
     singletons = v.join(active, "vid", "left_anti")
     # Restrict to the caller's vertex set: stray edge endpoints relayed

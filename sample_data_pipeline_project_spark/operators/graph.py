@@ -27,7 +27,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
+
+
+def _simple_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Undirected simple edges (a, b) with a < b, each exactly once."""
+    return (
+        edges.select(
+            F.least(F.col(a_col), F.col(b_col)).alias("a"),
+            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _symmetric_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both directions (src, dst) of every simple edge, materialized."""
+    e = _simple_edges(edges, a_col, b_col)
+    return materialize(
+        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))),
+        "capped",
+    )
 
 
 def triangle_counts(
@@ -41,22 +66,11 @@ def triangle_counts(
     lists. Returns (vertex, n_triangles) for every vertex on >= 1
     triangle — each triangle increments all three of its corners.
     """
-    # Canonicalize: undirected simple edges with a < b, exactly once.
     # Materialized eagerly: the edge list is referenced four times below
     # (degree both sides + orientation), and without truncation every
     # reference re-plans — and at runtime re-executes — the whole upstream
     # pair-generation pipeline (e.g. a blocked-matmul similarity join).
-    # Same pattern as connected_components: materialize the (small) edge
-    # list once, then everything downstream joins in-memory data.
-    e = materialize(
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        "capped",
-    )
+    e = materialize(_simple_edges(edges, a_col, b_col), "capped")
     # Degree per vertex (over canonical edges); materialized because it
     # feeds BOTH sides of the orientation join below (without truncation
     # the union+aggregate would execute twice per action).
@@ -139,24 +153,13 @@ def kcore_peel(
     vertices that lost every edge do not appear.
 
     Scale shape: each round is one keyed degree aggregate plus two
-    semi-join-shaped equi-joins, all edge-list-sized; lineage is
-    truncated per round with an eager localCheckpoint (the
-    components/pagerank pattern), so plans stay constant-size across
-    rounds.
+    semi-join-shaped equi-joins, all edge-list-sized.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = materialize(
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        "capped",
-    )
+    e = materialize(_simple_edges(edges, a_col, b_col), "capped")
 
     def _degrees(ed: DataFrame) -> DataFrame:
         return (
@@ -166,15 +169,15 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
 
-    for _ in range(rounds):
+    def peel(e: DataFrame) -> DataFrame:
         keep = _degrees(e).filter(F.col("degree") >= k).select("vertex")
-        e = materialize(
+        return (
             e.join(keep.withColumnRenamed("vertex", "a"), "a")
             .join(keep.withColumnRenamed("vertex", "b"), "b")
-            .select("a", "b"),
-            "capped",
+            .select("a", "b")
         )
-    return _degrees(e)
+
+    return _degrees(iterate(e, peel, rounds, name="kcore_peel"))
 
 
 def bfs_hops(
@@ -202,45 +205,33 @@ def bfs_hops(
 
     Scale shape: each round is one equi-join of the current distance
     table against the symmetrized edge list plus one keyed MIN
-    aggregate (map-side combinable); lineage is truncated per round with
-    an eager localCheckpoint so plans stay constant-size. Distance-table
-    rows only ever carry (vertex, hops) — O(V) state, edge-sized
-    shuffles, no frontier materialization on the driver.
+    aggregate (map-side combinable). Distance-table rows only ever
+    carry (vertex, hops) — O(V) state, edge-sized shuffles, no frontier
+    materialization on the driver.
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
     # Symmetrize once — relaxation below walks src -> dst only.
-    sym = materialize(
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))),
-        "capped",
-    )
+    sym = _symmetric_edges(edges, a_col, b_col)
     dist = materialize(
         seeds.select(F.col(seed_col).alias("vertex"))
         .distinct()
         .select("vertex", F.lit(0).cast("long").alias("hops")),
         "capped",
     )
-    for _ in range(rounds):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (
             dist.join(sym, dist["vertex"] == sym["src"])
             .select(F.col("dst").alias("vertex"), (F.col("hops") + 1).alias("hops"))
         )
-        dist = materialize(
+        return (
             dist.unionByName(relaxed)
             .groupBy("vertex")
-            .agg(F.min("hops").alias("hops")),
-            "capped",
+            .agg(F.min("hops").alias("hops"))
         )
-    return dist
+
+    return iterate(dist, relax, rounds, name="bfs_hops")
 
 
 def hits_bipartite(
@@ -322,27 +313,13 @@ def lpa_labels(
     kcore_peel contract).
 
     Scale shape: each round is one edge-sized equi-join (neighbor-label
-    expansion), one (vertex, label) keyed count, and one
-    vertex-PARTITIONED rank window (never global); lineage is truncated
-    per round with an eager localCheckpoint. Vertices are derived from
-    the edge list, so every vertex has >= 1 neighbor and the mode is
-    total.
+    expansion), one (vertex, label) keyed count, and one vertex-keyed
+    mode election (never global). Vertices are derived from the edge
+    list, so every vertex has >= 1 neighbor and the mode is total.
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    sym = materialize(
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))),
-        "capped",
-    )
+    sym = _symmetric_edges(edges, a_col, b_col)
     labels = materialize(
         sym.select(F.col("src").alias("vertex"))
         .distinct()
@@ -355,19 +332,19 @@ def lpa_labels(
     # map-side partial aggregation on both. Ordering key
     # struct(n, -label) is unique per vertex (labels are distinct rows),
     # so its MAX equals the old (n DESC, label ASC) head exactly.
-    for _ in range(rounds):
+    def adopt_mode(labels: DataFrame) -> DataFrame:
         nb = sym.join(
             labels.withColumnRenamed("vertex", "dst"), "dst"
         ).select(F.col("src").alias("vertex"), "label")
         cnt = nb.groupBy("vertex", "label").agg(F.count(F.lit(1)).alias("n"))
-        labels = materialize(
+        return (
             cnt.groupBy("vertex")
             .agg(
                 F.max_by(
                     "label", F.struct("n", (-F.col("label")).alias("__neg"))
                 ).alias("label")
             )
-            .select("vertex", "label"),
-            "capped",
+            .select("vertex", "label")
         )
-    return labels
+
+    return iterate(labels, adopt_mode, rounds, name="lpa_labels")

@@ -9,11 +9,8 @@ ITERATIVE algorithms on DataFrames:
   - each Lloyd iteration is assign (broadcast centroids, argmin distance)
     + recompute (element-wise mean via posexplode/groupBy) — two shuffles
     of (N x dim) rows, the canonical distributed k-means shape;
-  - `localCheckpoint` after every iteration truncates the lineage — an
-    unbounded iterative plan otherwise grows by two stages per iteration
-    until the optimizer chokes (the classic iterative-Spark trap);
-  - centroids are tiny (k x dim) and live driver-side between iterations,
-    broadcast back for assignment.
+  - iterations run through `materialize.iterate`;
+  - centroids are tiny (k x dim) and broadcast for assignment.
 
 Distances use squared L2 on the raw vectors (Lloyd's objective); switch
 the corpus to unit-normalized vectors for spherical/cosine k-means.
@@ -25,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import iterate
 from sample_data_pipeline_project_spark.operators.partitioning import widen
 
 
@@ -77,6 +74,23 @@ def assign_clusters(
     )
 
 
+def _mean_vectors(
+    df: DataFrame, keys: list[str], vec_col: str, out_col: str
+) -> DataFrame:
+    """Element-wise mean of `vec_col` per `keys` group, as `out_col`:
+    explode to (keys, dim, value), average, reassemble ordered by dim."""
+    by_dim = (
+        df.select(*keys, F.posexplode(vec_col).alias("dim", "v"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg(F.col("v").cast("double")).alias("m"))
+    )
+    return (
+        by_dim.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("pairs"))
+        .select(*keys, F.expr("transform(pairs, p -> p.m)").alias(out_col))
+    )
+
+
 def kmeans_fit(
     vectors: DataFrame,
     k: int,
@@ -99,28 +113,12 @@ def kmeans_fit(
             F.col(vec_col).cast("array<double>").alias("c_vec"),
         )
     )
-    for _ in range(max_iters):
+
+    def lloyd(centroids: DataFrame) -> DataFrame:
         assigned = assign_clusters(vectors, centroids, id_col, vec_col)
-        # element-wise mean: explode to (cluster, dim, value), average,
-        # reassemble ordered by dim
-        by_dim = assigned.select(
-            "cluster", F.posexplode(F.col(vec_col)).alias("dim", "v")
-        ).groupBy("cluster", "dim").agg(F.avg(F.col("v").cast("double")).alias("m"))
-        new_centroids = (
-            by_dim.groupBy("cluster")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "m"))
-                ).alias("pairs")
-            )
-            .select(
-                "cluster",
-                F.expr("transform(pairs, p -> p.m)").alias("c_vec"),
-            )
-        )
-        # truncate lineage: without this the plan doubles every iteration
-        centroids = materialize(new_centroids, "checkpoint")
-    return centroids
+        return _mean_vectors(assigned, ["cluster"], vec_col, "c_vec")
+
+    return iterate(centroids, lloyd, max_iters, name="kmeans_fit")
 
 
 def nearest_clusters(centroids: DataFrame, query: DataFrame, nprobe: int) -> DataFrame:

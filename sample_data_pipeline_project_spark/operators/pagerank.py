@@ -4,9 +4,9 @@ Power iteration as pure DataFrame algebra: each round is one equi-join
 (edge list against current ranks) plus one aggregate (incoming mass per
 destination) — the same shuffle shape as connected components
 (operators/components.py), so the 100 TB scaling argument carries over:
-per-round cost is sized by the EDGE list, lineage is truncated per round
-with an eager localCheckpoint, and rounds are a fixed constant (this is
-the bounded-iteration analytics form, not convergence detection).
+per-round cost is sized by the EDGE list, and rounds are a fixed
+constant (this is the bounded-iteration analytics form, not convergence
+detection).
 
 Simplified update (documented variant, dangling mass not redistributed):
     r_{t+1}(v) = (1-d)/n + d * sum_{(u,v) in E} r_t(u) / outdeg(u)
@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 
 
 def pagerank_fixed(
@@ -56,24 +59,22 @@ def pagerank_fixed(
     # outdeg does not — precompute src -> outdeg once on the edge list
     ew = materialize(e.join(deg, "src"), "capped_disk")
     v = materialize(vertices.select(F.col(id_col).alias("vid")), "capped")
-    r = v.withColumn("r", F.lit(float(1.0 / n)))
-    for _ in range(iters):
+
+    def step(r: DataFrame) -> DataFrame:
         mass = (
             ew.join(r, ew["src"] == r["vid"])
             .select("dst", (F.col("r") / F.col("outdeg")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("m"))
         )
-        r = materialize(
-            v.join(mass, v["vid"] == mass["dst"], "left")
-            .select(
-                "vid",
-                (F.lit(base) + F.lit(damping) * F.coalesce("m", F.lit(0.0))).alias(
-                    "r"
-                ),
-            ),
-            "capped",
+        return v.join(mass, v["vid"] == mass["dst"], "left").select(
+            "vid",
+            (F.lit(base) + F.lit(damping) * F.coalesce("m", F.lit(0.0))).alias("r"),
         )
+
+    r = iterate(
+        v.withColumn("r", F.lit(float(1.0 / n))), step, iters, name="pagerank_fixed"
+    )
     return (
         r.join(deg.withColumnRenamed("src", "vid"), "vid", "left")
         .select(

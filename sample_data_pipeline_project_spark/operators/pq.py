@@ -30,8 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sample_data_pipeline_project_spark.operators.kmeans import _sq_l2
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.kmeans import _mean_vectors, _sq_l2
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 
 
 def _unit_normalized(
@@ -154,7 +157,7 @@ def pq_fit(
     # map-side so the exchange carries n*m rows and no sort runs. The
     # key struct(d2, code) is unique per group (codes are distinct), so
     # the argmin equals the old (d2 ASC, code ASC) tiebreak row-for-row.
-    for _ in range(max_iters):
+    def lloyd(centroids: DataFrame) -> DataFrame:
         assigned = (
             subs.join(F.broadcast(centroids), "sub_id")
             .select(
@@ -177,22 +180,7 @@ def pq_fit(
                 F.col("__best.code").alias("code"),
             )
         )
-        by_dim = (
-            assigned.select(
-                "sub_id", "code", F.posexplode("subvec").alias("d", "v")
-            )
-            .groupBy("sub_id", "code", "d")
-            .agg(F.avg(F.col("v").cast("double")).alias("mv"))
-        )
-        recomputed = (
-            by_dim.groupBy("sub_id", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("d", "mv"))).alias("ps"))
-            .select(
-                "sub_id",
-                "code",
-                F.expr("transform(ps, p -> p.mv)").alias("new_vec"),
-            )
-        )
+        recomputed = _mean_vectors(assigned, ["sub_id", "code"], "subvec", "new_vec")
         # Empty-cluster preservation: a code whose cluster received zero
         # points this round (possible when init rows collide — duplicate
         # subvectors among the k lowest ids — since the argmin tiebreak
@@ -200,17 +188,13 @@ def pq_fit(
         # centroid instead of silently vanishing; otherwise the codebook
         # would shrink below m*k_codes and every downstream encode would
         # quietly degrade.
-        centroids = materialize(
-            centroids.join(recomputed, ["sub_id", "code"], "left")
-            .select(
-                "sub_id",
-                "code",
-                F.coalesce("new_vec", "c_vec").alias("c_vec"),
-            ),
-            # truncate lineage: the plan otherwise doubles per iteration
-            "checkpoint",
+        return centroids.join(recomputed, ["sub_id", "code"], "left").select(
+            "sub_id",
+            "code",
+            F.coalesce("new_vec", "c_vec").alias("c_vec"),
         )
-    return centroids
+
+    return iterate(centroids, lloyd, max_iters, name="pq_fit")
 
 
 def pq_encode(

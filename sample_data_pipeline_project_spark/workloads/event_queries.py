@@ -45,7 +45,10 @@ from pyspark.sql import types as T
 
 from sample_data_pipeline_project_spark.functions.text import md5_prefix_uint32_sql
 from sample_data_pipeline_project_spark.operators.heavyhitters import mg_summary
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 from sample_data_pipeline_project_spark.operators.ranks import bucketed_global_rank
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
@@ -2156,7 +2159,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("r").cast("double"),
         0,
     ).cast("long")
-    for _ in range(_MKV_ITERS):
+
+    def transition(p: DataFrame) -> DataFrame:
         wdf = (
             cells.join(p, cells["prv"] == p["typ"])
             .join(rows_.withColumnRenamed("prv", "rprv"), cells["prv"] == F.col("rprv"))
@@ -2164,20 +2168,18 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(term).cast("long").alias("w"))
         )
         sw = wdf.agg(F.sum("w").alias("sw"))
-        p = materialize(
-            wdf.crossJoin(F.broadcast(sw))
-            .select(
-                F.col("typ2").alias("typ"),
-                F.round(
-                    F.col("w").cast("double") / F.col("sw").cast("double")
-                    * float(_MKV_SCALE),
-                    0,
-                )
-                .cast("long")
-                .alias("p"),
-            ),
-            "checkpoint",
+        return wdf.crossJoin(F.broadcast(sw)).select(
+            F.col("typ2").alias("typ"),
+            F.round(
+                F.col("w").cast("double") / F.col("sw").cast("double")
+                * float(_MKV_SCALE),
+                0,
+            )
+            .cast("long")
+            .alias("p"),
         )
+
+    p = iterate(p, transition, _MKV_ITERS, name="events_markov_stationary")
     return p.select(F.col("typ").alias("event_type"), F.col("p").cast("long").alias("p_scaled"))
 
 

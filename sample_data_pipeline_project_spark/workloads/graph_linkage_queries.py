@@ -41,7 +41,10 @@ from sample_data_pipeline_project_spark.operators.graph import (
     kcore_peel,
     triangle_counts,
 )
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 from sample_data_pipeline_project_spark.operators.similarity import (
     neardup_cosine_pairs_blocked,
 )
@@ -193,9 +196,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors — duplicate cliques survive, star-shaped false-positive
     hubs dissolve. Fixed-round semantics make the result deterministic
     and SQL-unrollable (`operators/graph.py:kcore_peel`); each round is
-    edge-list-sized equi-joins + one keyed degree aggregate with
-    per-round lineage truncation. The oracle unrolls the identical
-    rounds over the exact quadratic pair set."""
+    edge-list-sized equi-joins + one keyed degree aggregate. The oracle
+    unrolls the identical rounds over the exact quadratic pair set."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = neardup_cosine_pairs_blocked(emb, _TRI_THRESHOLD).select("a", "b")
     return kcore_peel(edges, _KCORE_K, _KCORE_ROUNDS).select(
@@ -547,12 +549,12 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank (operators/pagerank.py) over the symmetrized bigram-Jaccard
     near-dup graph — the 'which duplicate cluster hubs matter' view of
     the dedup relation. Per round: one edge join + one aggregate, edge-
-    list-sized, lineage truncated (same scaling argument as connected
-    components). The hashed projection emits only the TOP-{k} hub
-    ranking: TakeOrderedAndProject on (ROUND(r,9) desc, doc_id) — each
-    partition keeps a local top-k, the driver merges, no global window,
-    output driver-bounded — then ranks the k survivors with a k x k
-    bounded self-join (rnk = 1 + |rows strictly ahead|). Only integers
+    list-sized (same scaling argument as connected components). The
+    hashed projection emits only the TOP-{k} hub ranking:
+    TakeOrderedAndProject on (ROUND(r,9) desc, doc_id) — each partition
+    keeps a local top-k, the driver merges, no global window, output
+    driver-bounded — then ranks the k survivors with a k x k bounded
+    self-join (rnk = 1 + |rows strictly ahead|). Only integers
     are hashed and the ordering key rounds to 9 decimals, so double
     sum-order ulps between engines cannot flip the hash; the oracle
     unrolls the identical iterations in SQL."""
@@ -648,9 +650,8 @@ def graph_bfs_contamination_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("how many near-dup links from a known-bad document is each doc").
     Candidate edges come from the blocked-matmul near-dup operator
     (linear shuffle volume); each BFS round is one edge-sized equi-join +
-    keyed MIN with lineage truncation (operators/graph.py:bfs_hops). The
-    oracle unrolls the identical rounds over the exact quadratic pair
-    set."""
+    keyed MIN (operators/graph.py:bfs_hops). The oracle unrolls the
+    identical rounds over the exact quadratic pair set."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = neardup_cosine_pairs_blocked(emb, _BFS_THRESHOLD).select("a", "b")
     seeds = emb.filter(F.col("vec_id") % _BFS_SEED_MOD == 0).select(
@@ -1004,12 +1005,10 @@ def graph_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic distance, ROUND((1-cos)*1e6) — exact int min-plus algebra
     from there on). Each round is one edge-list join + a min aggregate —
     the frontier-free distributed SSSP shape whose cost is rounds x
-    |edges|, with localCheckpoint truncating lineage between rounds
-    exactly like the PageRank operator; a bounded round count answers
-    'what is reachable within k weighted hops', the neighborhood-radius
-    question dedup triage asks. Source = the minimum vertex id touched by
-    any edge (deterministic); the oracle unrolls the identical rounds as
-    chained CTEs."""
+    |edges|; a bounded round count answers 'what is reachable within k
+    weighted hops', the neighborhood-radius question dedup triage asks.
+    Source = the minimum vertex id touched by any edge (deterministic);
+    the oracle unrolls the identical rounds as chained CTEs."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = neardup_cosine_pairs_blocked(emb, _BF_THRESHOLD).select(
         "a",
@@ -1026,16 +1025,17 @@ def graph_bellman_ford_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = sym.agg(F.min("s")).first()[0]
     dist = spark.createDataFrame([(int(src), 0)], "v long, d long")
-    for _ in range(_BF_ROUNDS):
-        relaxed = materialize(
+
+    def relax(dist: DataFrame) -> DataFrame:
+        return (
             dist.join(sym, dist["v"] == sym["s"])
             .select(F.col("t").alias("v"), (F.col("d") + F.col("w")).alias("d"))
             .unionByName(dist.select("v", "d"))
             .groupBy("v")
-            .agg(F.min("d").cast("long").alias("d")),
-            "checkpoint",
+            .agg(F.min("d").cast("long").alias("d"))
         )
-        dist = relaxed
+
+    dist = iterate(dist, relax, _BF_ROUNDS, name="graph_bellman_ford_bounded")
     return dist.select(F.col("v").alias("vertex"), F.col("d").alias("dist_scaled"))
 
 

@@ -33,7 +33,10 @@ from sample_data_pipeline_project_spark.functions.text import (
     md5_prefix_uint32_sql,
     tokens,
 )
-from sample_data_pipeline_project_spark.operators.materialize import materialize
+from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
+    materialize,
+)
 from sample_data_pipeline_project_spark.sources.catalog import load_table
 from sample_data_pipeline_project_spark.workloads import workload
 from sample_data_pipeline_project_spark.workloads.relational import _CENTS_O
@@ -610,7 +613,6 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark_df = spark.createDataFrame(
         [(k, _PCA_VSCALE) for k in range(_PCA_DIM)], "k int, v long"
     )
-    v = spark_df
     term = F.round(
         F.col("g").cast("double")
         / F.col("n").cast("double")
@@ -619,7 +621,8 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.col("v").cast("double"),
         0,
     ).cast("long")
-    for _ in range(_PCA_ITERS):
+
+    def matvec(v: DataFrame) -> DataFrame:
         w = (
             sym.join(v, sym["i"] == v["k"])
             .crossJoin(F.broadcast(n))
@@ -627,20 +630,18 @@ def ml_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(term).cast("long").alias("w"))
         )
         mx = w.agg(F.max(F.abs(F.col("w"))).alias("mx"))
-        v = materialize(
-            w.crossJoin(F.broadcast(mx))
-            .select(
-                F.col("k2").alias("k"),
-                F.round(
-                    F.col("w").cast("double") / F.col("mx").cast("double")
-                    * float(_PCA_VSCALE),
-                    0,
-                )
-                .cast("long")
-                .alias("v"),
-            ),
-            "checkpoint",
+        return w.crossJoin(F.broadcast(mx)).select(
+            F.col("k2").alias("k"),
+            F.round(
+                F.col("w").cast("double") / F.col("mx").cast("double")
+                * float(_PCA_VSCALE),
+                0,
+            )
+            .cast("long")
+            .alias("v"),
         )
+
+    v = iterate(spark_df, matvec, _PCA_ITERS, name="ml_pca_power_iteration")
     return v.select(
         F.col("k").cast("long").alias("dim"), F.col("v").cast("long").alias("v_scaled")
     )

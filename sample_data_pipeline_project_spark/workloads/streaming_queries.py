@@ -1090,7 +1090,9 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.table(name).groupBy("bucket").agg(
+        drained = spark.table(name)
+        spark.catalog.dropTempView(name)
+    return drained.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val").cast("long").alias("sum_val"),
         F.max("val").cast("long").alias("max_val"),

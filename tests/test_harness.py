@@ -79,6 +79,18 @@ def test_run_workload_releases_iterative_checkpoints(spark):
     assert _stored_rdds(spark) <= before
 
 
+def test_stage_table_names_each_iterate_round(spark):
+    from sample_data_pipeline_project_spark.workloads.graph_linkage_queries import (
+        _KCORE_ROUNDS,
+    )
+
+    w = load_all()["graph_kcore"]
+    assert harness.run_workload(spark, w, _SF, "kcore-rounds") > 0
+    names = {s["name"] for s in harness.stage_table(spark, "kcore-rounds")}
+    rounds = {n for n in names if n.startswith("kcore_peel round ")}
+    assert rounds == {f"kcore_peel round {i}" for i in range(1, _KCORE_ROUNDS + 1)}
+
+
 def test_run_workload_keeps_caches_it_did_not_create(spark):
     before = _stored_rdds(spark)
     kept = spark.range(0, 1000).selectExpr("id % 7 AS k").cache()

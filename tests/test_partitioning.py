@@ -1,14 +1,21 @@
-"""Partition hygiene (`widen`, the capped checkpoint kinds) and the one
-materialization primitive with its releasing scope."""
+"""Partition hygiene (`widen`, the capped checkpoint kinds), the one
+materialization primitive with its releasing scope, and `iterate`, the
+one round loop."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+from sample_data_pipeline_project_spark.operators.components import (
+    connected_components,
+)
 from sample_data_pipeline_project_spark.operators.materialize import (
+    iterate,
     materialize,
     materialize_scope,
 )
@@ -143,3 +150,97 @@ def test_no_bare_materialization_outside_the_primitive():
         if "clearCache" in line
     ]
     assert not offenders, offenders
+
+
+def test_round_loops_go_through_iterate():
+    """A `materialize` call in a loop body is a hand-rolled round loop:
+    rounds go through `iterate`, which releases superseded rounds.
+    `mmr_select` is not a round loop: it caches each selected row lazily
+    (no job) and every later round and the final union read all of them."""
+    allowed = {
+        ("operators/materialize.py", "iterate"),
+        ("operators/similarity.py", "mmr_select"),
+    }
+    offenders = []
+    for sub in ("operators", "workloads"):
+        for p in sorted((_PKG / sub).rglob("*.py")):
+            rel = str(p.relative_to(_PKG))
+            for fn in ast.parse(p.read_text()).body:
+                loops = [
+                    n for n in ast.walk(fn)
+                    if isinstance(n, (ast.For, ast.AsyncFor, ast.While))
+                ]
+                offenders += [
+                    f"{rel}:{call.lineno}"
+                    for loop in loops
+                    for stmt in loop.body + loop.orelse
+                    for call in ast.walk(stmt)
+                    if isinstance(call, ast.Call)
+                    and getattr(call.func, "id", None) == "materialize"
+                    and (rel, getattr(fn, "name", None)) not in allowed
+                ]
+    assert not offenders, offenders
+
+
+def _rising(df):
+    # every row's v climbs by one per round until it reaches 3
+    return df.select(
+        "id", F.col("v").alias("old"), F.least(F.col("v") + 1, F.lit(3)).alias("v")
+    )
+
+
+def _rose():
+    return F.when(F.col("v") != F.col("old"), 1).otherwise(0)
+
+
+def test_iterate_zero_rounds_returns_init(spark):
+    init = spark.range(0, 5)
+    assert iterate(init, _rising, 0, name="never", changed=_rose()) is init
+
+
+def test_iterate_stops_at_the_first_round_without_changes(spark):
+    sc = spark.sparkContext
+    calls = []
+
+    def step(df):
+        calls.append(df)
+        return _rising(df)
+
+    init = spark.range(0, 10).withColumn("v", F.lit(0))
+    sc.setJobDescription("outer")
+    try:
+        with materialize_scope():
+            out = iterate(init, step, 50, name="rise", changed=_rose())
+            assert {r["v"] for r in out.collect()} == {3}
+        # three rounds raise every row, the fourth confirms no change
+        assert len(calls) == 4
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_iterate_raises_when_rounds_run_out(spark):
+    init = spark.range(0, 10).withColumn("v", F.lit(0))
+    with materialize_scope():
+        with pytest.raises(RuntimeError, match="rise did not converge in 2 rounds"):
+            iterate(init, _rising, 2, name="rise", changed=_rose())
+
+
+def test_iterate_releases_superseded_rounds(spark):
+    """Outside any scope, connected components keeps its edge list, its
+    vertex list and its last round, however many rounds the chain takes:
+    every superseded round is released."""
+    sc = spark.sparkContext
+    for n in (10, 40):
+        before = _stored_rdds(spark)
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "a long, b long"
+        )
+        verts = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
+        got = connected_components(edges, verts).collect()
+        assert {r["component_id"] for r in got} == {1}
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        kept = _stored_rdds(spark) - before
+        for rdd_id in kept:
+            sc._jsc.getPersistentRDDs().get(rdd_id).unpersist(False)
+        assert len(kept) == 3, (n, sorted(kept))

@@ -161,13 +161,17 @@ def test_run_stream_to_table_append_empty_source(spark, tmp_path):
 
 
 def test_memory_sink_runs_leave_no_stream_view(spark, events_stream):
+    from sample_data_pipeline_project_spark.workloads import load_all
+
     got = run_stream_to_table(hourly_counts_stream(events_stream))
     assert got.count() > 0  # the frame outlives its view
+    pyds = load_all()["stream_python_datasource"].fn(spark, _SF_DIR)
+    assert pyds.count() > 0
     views = [
         t.name
         for s in (spark, events_stream.sparkSession)
         for t in s.catalog.listTables()
-        if t.name.startswith("stream_out_")
+        if t.name.startswith(("stream_out_", "pyds_stream_"))
     ]
     assert not views, views
 
