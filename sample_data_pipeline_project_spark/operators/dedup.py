@@ -556,8 +556,10 @@ def minhash_lsh_candidates_incremental(
     the base-base pairs already found by earlier runs."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
+    # "capped", not "cache": a cache would keep its 8 x cores population
+    # width, and both band joins re-read the delta (materialize.py)
     delta_sigs = materialize(
-        minhash_signatures(delta_docs, num_hashes, id_col, text_col), "cache"
+        minhash_signatures(delta_docs, num_hashes, id_col, text_col), "capped"
     )
     all_banded = _band_explode(
         base_sigs.unionByName(delta_sigs), num_hashes, bands, id_col

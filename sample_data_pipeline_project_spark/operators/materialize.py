@@ -8,7 +8,12 @@ sites that use it:
 - `"cache"`: `DataFrame.cache()` (`.persist()` is the same level for a
   DataFrame). Used where the consumers need the producing plan's
   AQE-coalesced width to survive: the cached plan keeps it, a
-  checkpoint's blocks keep the final stage's raw width instead.
+  checkpoint's blocks keep the final stage's raw width instead. The
+  other side of that rule: with `canChangeCachedPlanOutputPartitioning`
+  off (engine.py), a cache also keeps its population width, 8 x cores
+  under AQE's wide start, however few rows it holds. So it is the wrong
+  kind for a tiny frame that joins re-read: each read runs that many
+  near-empty tasks.
 - `"checkpoint"`: eager `localCheckpoint`. Used for re-read vector
   columns, where the columnar cache's decode of array columns costs 2x
   a checkpoint's raw row blocks.
@@ -18,11 +23,13 @@ sites that use it:
   (narrow, no shuffle, no job) down to the session's default
   parallelism, bounded below by the persisted size so no read task
   merges more than ~`_TARGET_BLOCK_BYTES`. Used for every round of
-  `iterate` and wherever an iterative operator (connected components,
+  `iterate`, wherever an iterative operator (connected components,
   PageRank, k-core, BFS, LPA) materializes a frame its rounds re-read
-  many times. A checkpoint otherwise keeps the partitioning of its
-  job's final stage, which under AQE's wide start (8 x cores initial
-  partitions, engine.py) is often not read-coalesced: measured on
+  many times, and for incremental LSH's delta signatures (a few dozen
+  rows per batch that two band joins re-read: cached, each join ran 32
+  tasks at `local[4]`). A checkpoint otherwise keeps the partitioning
+  of its job's final stage, which under AQE's wide start (8 x cores
+  initial partitions, engine.py) is often not read-coalesced: measured on
   `dedup_connected_components` at sf0.1 on 32 cores, the top stages
   were 256/512 tasks of 0.02-0.09 s each, pure scheduling overhead.
   Coalescing BEFORE the checkpoint (round 11) collapsed into the

@@ -734,7 +734,8 @@ def _ivf_stage(
     targets. Returns (staged, width, id_t, vec_t): `staged` has columns
     (cell, salt, role, id, vec) where role 'b' = both, 's' = source
     rows of a split sub-task, 't' = replicated rerank targets; `width`
-    is the compute-balanced repartition count (2x group count, capped);
+    is the compute-balanced repartition count (core count when the
+    total work fits one task's budget, else 2x group count, capped);
     id_t/vec_t are the caller's column type strings for Arrow schemas.
     Every design decision here (budgets, salting, persist, width) is
     documented inline — factored in round 11 so the pairs-mode scale
@@ -886,11 +887,13 @@ def _ivf_stage(
         for r in cell_rows
         if r["m"] * r["m"] > pair_budget
     }
+    n_groups = k - len(oversized) + sum(oversized.values())
     if split_stats is not None:
         # build-time census, surfaced for the balanced-path certification
         # workload (split_engaged must be a measured fact, not assumed)
         split_stats["n_oversized"] = len(oversized)
         split_stats["max_ns"] = max(oversized.values(), default=1)
+        split_stats["n_groups"] = n_groups
     if oversized:
         ns_map = F.create_map(
             *[
@@ -957,10 +960,19 @@ def _ivf_stage(
     # count keeps expected heavy-heavy collisions low; explicit
     # repartition(N, cols) is REPARTITION_BY_NUM, which AQE will not
     # re-coalesce, and it satisfies applyInPandas's clustering so no
-    # second shuffle is added. Per-task Arrow overhead at a few
-    # thousand partitions is milliseconds against a seconds-scale stage.
-    n_groups = k - len(oversized) + sum(oversized.values())
-    width = int(min(8192, max(64, 2 * n_groups)))
+    # second shuffle is added. That width is for work that needs
+    # spreading: each applyInPandas task costs ~100 ms of executor time
+    # whatever it holds (measured on 4 vCPU: 44 groups over 2000 rows
+    # took 2.8-3.1 s at 88 partitions, 0.43-0.46 s at 4). So when the
+    # census's total work sum(m^2) fits ONE task's budget, no hashing of
+    # cells onto tasks can exceed the cap, and the stage runs at core
+    # count. Above it (every sf100 plan, and always under "max-cell",
+    # whose budget sits below the largest m^2) the group-count width
+    # stands.
+    if sum(int(r["m"]) ** 2 for r in cell_rows) <= pair_budget:
+        width = spark.sparkContext.defaultParallelism
+    else:
+        width = int(min(8192, max(64, 2 * n_groups)))
     return staged, width, id_t, vec_t
 
 

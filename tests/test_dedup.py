@@ -103,7 +103,7 @@ def test_prefix_filter_distributed_rank_path(spark, monkeypatch):
     assert _pairs(fallback_df) == collected and len(collected) > 0
 
 
-def test_minhash_incremental_equals_full_minus_base_base(spark):
+def test_minhash_incremental_equals_full_minus_base_base(spark, scoped):
     """Incremental LSH (delta vs materialized base signatures) must equal
     the full-corpus candidate set restricted to pairs touching the
     delta."""
@@ -119,18 +119,39 @@ def test_minhash_incremental_equals_full_minus_base_base(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
-    full = {
-        (r["a"], r["b"])
-        for r in minhash_lsh_candidates(docs, 12, 4).collect()
-    }
+    with scoped():
+        full = {
+            (r["a"], r["b"])
+            for r in minhash_lsh_candidates(docs, 12, 4).collect()
+        }
+        got = {
+            (r["a"], r["b"])
+            for r in minhash_lsh_candidates_incremental(
+                minhash_signatures(base, 12), delta, 12, 4
+            ).collect()
+        }
     want = {(a, b) for a, b in full if a % 3 == 0 or b % 3 == 0}
-    got = {
-        (r["a"], r["b"])
-        for r in minhash_lsh_candidates_incremental(
-            minhash_signatures(base, 12), delta, 12, 4
-        ).collect()
-    }
     assert got == want and len(want) > 0
+
+
+def test_minhash_incremental_runs_no_stage_wider_than_the_cores(spark, tmp_path):
+    """The delta's signatures are a few dozen rows that both band joins
+    re-read. Checkpointed "capped", every read runs at most one task per
+    core; a cache would keep its population width (one task more than
+    the cores on the union side here, 8 x cores under the engine's wide
+    AQE start)."""
+    from sample_data_pipeline_project_spark import harness
+    from sample_data_pipeline_project_spark.workloads import load_all
+
+    rows = [(i, f"doc body {i % 7} shared words tail {i % 5}") for i in range(400)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    w = load_all()["dedup_minhash_incremental"]
+    tag = "minhash-incremental-widths"
+    assert harness.run_workload(spark, w, str(tmp_path), tag) > 0
+    widths = [s["n_tasks"] for s in harness.stage_table(spark, tag)]
+    assert widths and max(widths) <= spark.sparkContext.defaultParallelism
 
 
 # --------------------------------------------------------------------------

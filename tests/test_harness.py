@@ -102,9 +102,9 @@ def test_run_workload_keeps_caches_it_did_not_create(spark):
     kept.unpersist()
 
 
-def test_bench_subset_output_feeds_bench_diff(monkeypatch, capsys, tmp_path):
-    """bench_subset's stdout is a bench_diff input (pure Python: the
-    session and the harness's timed calls are stubbed)."""
+def _stub_bench_session(monkeypatch) -> None:
+    """Stub the session and the harness's timed calls, so bench_subset
+    runs as pure Python."""
     from sample_data_pipeline_project_spark import engine
 
     fake = types.SimpleNamespace(
@@ -114,6 +114,11 @@ def test_bench_subset_output_feeds_bench_diff(monkeypatch, capsys, tmp_path):
     monkeypatch.setattr(harness, "warm_up", lambda spark, sf_dir: None)
     monkeypatch.setattr(harness, "stage_table", lambda spark, tag: [])
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", _SF)
+
+
+def test_bench_subset_output_feeds_bench_diff(monkeypatch, capsys, tmp_path):
+    """bench_subset's stdout is a bench_diff input."""
+    _stub_bench_session(monkeypatch)
     bench_subset, bench_diff = _tool("bench_subset"), _tool("bench_diff")
     names = ["tpch_q1_pricing_summary", "tpch_q6_forecast_revenue"]
 
@@ -138,3 +143,26 @@ def test_bench_subset_output_feeds_bench_diff(monkeypatch, capsys, tmp_path):
     out = capsys.readouterr().out
     assert "-1.00s     2.10 ->    1.10  REAL     tpch_q1_pricing_summary" in out
     assert "+0.40s     1.10 ->    1.50  overlap  tpch_q6_forecast_revenue" in out
+
+
+def test_bench_subset_family_selects_a_module_s_workloads(monkeypatch, capsys):
+    """`--family M` adds every workload defined in `workloads/M.py` after
+    the named ones; an unknown family is refused before any run."""
+    _stub_bench_session(monkeypatch)
+    monkeypatch.setattr(
+        harness, "spread", lambda spark, w, sf_dir: ([1.0, 1.0, 1.0], "t")
+    )
+    bench_subset = _tool("bench_subset")
+    family = sorted(
+        n for n, w in load_all().items()
+        if w.fn.__module__.endswith(".table_queries")
+    )
+    assert family
+    argv = ["bench_subset.py", "tpch_q1_pricing_summary", "--family", "table_queries"]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert bench_subset.main() == 0
+    got = json.loads(capsys.readouterr().out)["queries"]
+    assert list(got) == ["tpch_q1_pricing_summary", *family]
+
+    monkeypatch.setattr(sys, "argv", ["bench_subset.py", "--family", "table"])
+    assert bench_subset.main() == 2

@@ -3,6 +3,8 @@ scale path) and its certification workload."""
 
 from __future__ import annotations
 
+from sample_data_pipeline_project_spark import harness
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -10,7 +12,11 @@ def _pairs(df):
     return {(r["a"], r["b"]): r["cosine_sim"] for r in df.collect()}
 
 
-def test_pairs_ivf_is_exact_subset(spark):
+def _widest(spark, tag):
+    return max(s["n_tasks"] for s in harness.stage_table(spark, tag))
+
+
+def test_pairs_ivf_is_exact_subset(spark, scoped):
     """Every pair the IVF path emits appears in the exact blocked-matmul
     set with a BIT-IDENTICAL score (preselection prunes, never invents
     or rescores), and recall clears the pinned sf0.001 floor."""
@@ -21,33 +27,44 @@ def test_pairs_ivf_is_exact_subset(spark):
     from sample_data_pipeline_project_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    exact = _pairs(neardup_cosine_pairs_blocked(emb, 0.4))
-    approx = _pairs(neardup_cosine_pairs_ivf(emb, 0.4, nprobe=4))
+    with scoped():
+        exact = _pairs(neardup_cosine_pairs_blocked(emb, 0.4))
+        approx = _pairs(neardup_cosine_pairs_ivf(emb, 0.4, nprobe=4))
     assert set(approx) <= set(exact)
     assert all(approx[k] == exact[k] for k in approx)
     assert len(approx) >= 0.8 * len(exact)
-    spark.catalog.clearCache()
 
 
-def test_pairs_ivf_forced_split_identical(spark):
+def test_pairs_ivf_forced_split_identical(spark, scoped):
     """pair_budget='max-cell' forces >= 1 cell to salt, and the salted
-    plan emits the IDENTICAL pair set (work splits, membership doesn't)."""
+    plan emits the IDENTICAL pair set (work splits, membership doesn't).
+
+    Stage widths follow the census: at the default budget the whole
+    corpus's sims work fits one task, so no stage runs wider than the
+    cores; the forced plan is above its budget and keeps the
+    group-count width for its scoring stage."""
     from sample_data_pipeline_project_spark.operators.similarity import (
         neardup_cosine_pairs_ivf,
     )
     from sample_data_pipeline_project_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    base = _pairs(neardup_cosine_pairs_ivf(emb, 0.4, nprobe=4))
+    with scoped("ivf-pairs-default-budget"):
+        base = _pairs(neardup_cosine_pairs_ivf(emb, 0.4, nprobe=4))
     stats: dict = {}
-    forced = _pairs(
-        neardup_cosine_pairs_ivf(
-            emb, 0.4, nprobe=4, pair_budget="max-cell", split_stats=stats
+    with scoped("ivf-pairs-max-cell"):
+        forced = _pairs(
+            neardup_cosine_pairs_ivf(
+                emb, 0.4, nprobe=4, pair_budget="max-cell", split_stats=stats
+            )
         )
-    )
     assert stats["n_oversized"] >= 1
     assert forced == base and len(base) > 0
-    spark.catalog.clearCache()
+    cores = spark.sparkContext.defaultParallelism
+    assert _widest(spark, "ivf-pairs-default-budget") <= cores
+    assert _widest(spark, "ivf-pairs-max-cell") == min(
+        8192, max(64, 2 * stats["n_groups"])
+    )
 
 
 def test_semivf_floor_applies_only_under_gate_root(tmp_path):
@@ -64,18 +81,18 @@ def test_semivf_floor_applies_only_under_gate_root(tmp_path):
     assert _semivf_floor(str(other)) == _SEMIVF_FLOORS["default"]
 
 
-def test_semantic_dedup_ivf_certifies(spark):
+def test_semantic_dedup_ivf_certifies(spark, scoped):
     """The C236 gate workload returns all-TRUE at test scale."""
     from sample_data_pipeline_project_spark.workloads.similarity_queries import (
         sim_semantic_dedup_ivf,
     )
 
-    row = sim_semantic_dedup_ivf(spark, SF).collect()
+    with scoped():
+        row = sim_semantic_dedup_ivf(spark, SF).collect()
     assert len(row) == 1
     r = row[0]
     assert r["exact_subset"] and r["recall_ok"] and r["nonempty"]
     assert r["clusters_valid"]
-    spark.catalog.clearCache()
 
 
 def _py_dot(a, b) -> float:

@@ -307,7 +307,7 @@ def test_knn_mutual_edges_exact_under_cutoff_ties(spark):
         assert got == expected
 
 
-def test_knn_mutual_edges_ivf_structure_and_recall(spark):
+def test_knn_mutual_edges_ivf_structure_and_recall(spark, scoped):
     """C226 id-level pins at sf0.001: every IVF-preselected edge is a
     genuine exact-threshold pair with a bit-identical score, the degree
     bound holds HARD, and recall vs the exact mutual-kNN graph clears
@@ -325,12 +325,17 @@ def test_knn_mutual_edges_ivf_structure_and_recall(spark):
     sf = "/root/testdata/sf0.001"
     d, threshold = 5, 0.3
     emb = load_table(spark, sf, "embeddings")
-    approx = knn_mutual_edges_ivf(emb, d, threshold, nprobe=6).collect()
+    with scoped():
+        approx = knn_mutual_edges_ivf(emb, d, threshold, nprobe=6).collect()
+        base = {
+            (r["a"], r["b"]): r["cosine_sim"]
+            for r in neardup_cosine_pairs(emb, threshold).collect()
+        }
+        exact = {
+            (r["a"], r["b"])
+            for r in knn_mutual_edges(emb, d, threshold).collect()
+        }
     assert approx and all(r["a"] < r["b"] for r in approx)
-    base = {
-        (r["a"], r["b"]): r["cosine_sim"]
-        for r in neardup_cosine_pairs(emb, threshold).collect()
-    }
     # subset of the exact threshold pairs, scores bit-identical
     assert all(base[(r["a"], r["b"])] == r["cosine_sim"] for r in approx)
     deg = collections.Counter()
@@ -338,12 +343,11 @@ def test_knn_mutual_edges_ivf_structure_and_recall(spark):
         deg[r["a"]] += 1
         deg[r["b"]] += 1
     assert max(deg.values()) <= d
-    exact = {(r["a"], r["b"]) for r in knn_mutual_edges(emb, d, threshold).collect()}
     found = {(r["a"], r["b"]) for r in approx}
     assert len(found & exact) >= 0.85 * len(exact)
 
 
-def test_knn_mutual_edges_ivf_carries_id_type(spark):
+def test_knn_mutual_edges_ivf_carries_id_type(spark, scoped):
     """The Arrow schemas must derive from the caller's id column (like
     the exact builder), not hardcode `long`: an int-keyed corpus must
     produce the identical edge set (the md5 sample and Lloyd init read
@@ -361,22 +365,23 @@ def test_knn_mutual_edges_ivf_carries_id_type(spark):
     sf = "/root/testdata/sf0.001"
     d, threshold = 5, 0.3
     emb = load_table(spark, sf, "embeddings")
-    base = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in knn_mutual_edges_ivf(emb, d, threshold, nprobe=4).collect()
-    }
     as_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
-    got_int = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in knn_mutual_edges_ivf(as_int, d, threshold, nprobe=4).collect()
-    }
-    assert got_int == base
     # String ids: different sample/init order, so only the structural
     # contract is pinned — runs, a < b, hard degree bound.
     as_str = emb.withColumn(
         "vec_id", F.format_string("id%06d", F.col("vec_id"))
     )
-    rows = knn_mutual_edges_ivf(as_str, d, threshold, nprobe=4).collect()
+    with scoped():
+        base = {
+            (r["a"], r["b"], r["cosine_sim"])
+            for r in knn_mutual_edges_ivf(emb, d, threshold, nprobe=4).collect()
+        }
+        got_int = {
+            (r["a"], r["b"], r["cosine_sim"])
+            for r in knn_mutual_edges_ivf(as_int, d, threshold, nprobe=4).collect()
+        }
+        rows = knn_mutual_edges_ivf(as_str, d, threshold, nprobe=4).collect()
+    assert got_int == base
     assert rows and all(r["a"] < r["b"] for r in rows)
     deg = collections.Counter()
     for r in rows:
@@ -385,14 +390,18 @@ def test_knn_mutual_edges_ivf_carries_id_type(spark):
     assert max(deg.values()) <= d
 
 
-def test_knn_mutual_edges_ivf_balanced_split_identical(spark):
+def test_knn_mutual_edges_ivf_balanced_split_identical(spark, scoped):
     """Round-10 quantizer-balance lever: a `pair_budget` small enough to
     force EVERY cell onto the salted source-split path (full membership
     replicated as rerank targets) must reproduce the default run's edge
     set bit-for-bit — the lever re-schedules the straggler cell's work,
     it must never change WHAT is computed. Pinned at sf0.001 where
     scores are well-separated (no candidates inside the float margin),
-    so the approximate tie corner of saturate=False cannot fire."""
+    so the approximate tie corner of saturate=False cannot fire.
+
+    At the default budget the corpus's whole sims work fits one task,
+    so no stage runs wider than the cores."""
+    from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.operators.similarity import (
         knn_mutual_edges_ivf,
     )
@@ -401,18 +410,22 @@ def test_knn_mutual_edges_ivf_balanced_split_identical(spark):
     sf = "/root/testdata/sf0.001"
     d, threshold = 5, 0.3
     emb = load_table(spark, sf, "embeddings")
-    base = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in knn_mutual_edges_ivf(emb, d, threshold, nprobe=6).collect()
-    }
+    with scoped("knn-ivf-default-budget"):
+        base = {
+            (r["a"], r["b"], r["cosine_sim"])
+            for r in knn_mutual_edges_ivf(emb, d, threshold, nprobe=6).collect()
+        }
     assert base
+    widths = [s["n_tasks"] for s in harness.stage_table(spark, "knn-ivf-default-budget")]
+    assert max(widths) <= spark.sparkContext.defaultParallelism
     # sf0.001 cells hold tens of vectors; budget 64 => ns >= 2 per cell
-    split = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in knn_mutual_edges_ivf(
-            emb, d, threshold, nprobe=6, pair_budget=64
-        ).collect()
-    }
+    with scoped():
+        split = {
+            (r["a"], r["b"], r["cosine_sim"])
+            for r in knn_mutual_edges_ivf(
+                emb, d, threshold, nprobe=6, pair_budget=64
+            ).collect()
+        }
     assert split == base
 
 

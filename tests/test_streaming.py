@@ -80,7 +80,7 @@ def test_stream_dedup_recovers_original(spark):
     assert len(ids) == n_orig
 
 
-def test_stream_minhash_dedup_equals_one_shot(spark, tmp_path):
+def test_stream_minhash_dedup_equals_one_shot(spark, tmp_path, scoped):
     from pyspark.sql import functions as F
 
     from sample_data_pipeline_project_spark.operators.dedup import (
@@ -107,17 +107,19 @@ def test_stream_minhash_dedup_equals_one_shot(spark, tmp_path):
     )
     df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
-    streamed = {
-        (r["a"], r["b"]) for r in stream_minhash_dedup(spark, str(tmp_path)).collect()
-    }
     base = df.filter(F.col("doc_id") % _INC_DELTA_MOD != 0)
     delta = df.filter(F.col("doc_id") % _INC_DELTA_MOD == 0)
-    one_shot = {
-        (r["a"], r["b"])
-        for r in minhash_lsh_candidates_incremental(
-            minhash_signatures(base, _NUM_HASHES), delta, _NUM_HASHES
-        ).collect()
-    }
+    with scoped():
+        streamed = {
+            (r["a"], r["b"])
+            for r in stream_minhash_dedup(spark, str(tmp_path)).collect()
+        }
+        one_shot = {
+            (r["a"], r["b"])
+            for r in minhash_lsh_candidates_incremental(
+                minhash_signatures(base, _NUM_HASHES), delta, _NUM_HASHES
+            ).collect()
+        }
     assert streamed == one_shot and len(streamed) > 0
 
 

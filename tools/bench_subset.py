@@ -13,6 +13,9 @@ shuffle read/write and input per stage), top 12 by task-seconds.
 
 Usage:
   python tools/bench_subset.py q1 q2 ...        # sf via SPARK_GRAFT_SF_DIR
+  python tools/bench_subset.py --family dedup_queries [q ...]
+    --family M (repeatable) adds every workload defined in the family
+    module `workloads/M.py`, in name order, after the named ones.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_BENCH_RUNS (default 3), SPARK_GRAFT_BENCH_WARMUP (1),
      SPARK_GRAFT_EXTRA_CONF ("k=v;k=v" session conf overrides — the
@@ -21,6 +24,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -29,15 +33,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    names = sys.argv[1:]
-    if not names:
-        print("usage: bench_subset.py <workload> [...]", file=sys.stderr)
-        return 2
+    ap = argparse.ArgumentParser(prog="bench_subset.py")
+    ap.add_argument("names", nargs="*", metavar="workload")
+    ap.add_argument("--family", action="append", default=[], metavar="MODULE")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from sample_data_pipeline_project_spark import harness
     from sample_data_pipeline_project_spark.engine import get_spark
     from sample_data_pipeline_project_spark.workloads import load_all
+
+    workloads = load_all()
+    family = {n: w.fn.__module__.rpartition(".")[2] for n, w in workloads.items()}
+    missing = [n for n in args.names if n not in workloads] + [
+        f"--family {f}" for f in args.family if f not in family.values()
+    ]
+    if missing:
+        print(f"unknown workloads: {missing}", file=sys.stderr)
+        return 2
+    names = list(dict.fromkeys(
+        args.names + sorted(n for n, f in family.items() if f in args.family)
+    ))
+    if not names:
+        ap.error("name a workload or a --family")
 
     extra = {}
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
@@ -46,11 +64,6 @@ def main() -> int:
             extra[k.strip()] = v.strip()
     spark = get_spark(app_name="bench_subset", extra_conf=extra or None)
     spark.sparkContext.setLogLevel("ERROR")
-    workloads = load_all()
-    missing = [n for n in names if n not in workloads]
-    if missing:
-        print(f"unknown workloads: {missing}", file=sys.stderr)
-        return 2
 
     harness.warm_up(spark, sf_dir)
     n_warmup, n_runs = harness.run_counts()
